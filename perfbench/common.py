@@ -31,6 +31,52 @@ def vm_hwm_mb(pid: int) -> float:
     return 0.0
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(busy, steal) clock ticks of the whole machine so far, from
+    ``/proc/stat``: busy is user + nice + system + irq + softirq."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:9]]
+    return v[0] + v[1] + v[2] + v[5] + v[6], v[7]
+
+
+def _cpu_ticks_of(pid: int, children: bool) -> int:
+    """utime + stime of ``pid`` (plus cutime + cstime, its reaped children,
+    if ``children``), 0 if it is gone."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            v = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return 0
+    return sum(int(x) for x in v[11:15 if children else 13])
+
+
+def descendants(pid: int) -> list[int]:
+    """Every live process below ``pid``, parents before their children."""
+    out = []
+    try:
+        with open(f"/proc/{pid}/task/{pid}/children") as f:
+            kids = [int(x) for x in f.read().split()]
+    except OSError:
+        return out
+    for k in kids:
+        out += [k] + descendants(k)
+    return out
+
+
+def sut_cpu_s(spark) -> float:
+    """CPU seconds the system under test has used so far: this process
+    (the Spark driver and the engine's ingest HTTP server, not the load
+    generator it starts) plus its JVM and the JVM's Python workers.  Time the hypervisor
+    steals from the machine is not charged to a process, so on a shared host
+    this reads far steadier than wall time."""
+    jvm = jvm_process(spark)
+    ticks = _cpu_ticks_of(os.getpid(), children=False)
+    if jvm is not None:
+        ticks += sum(_cpu_ticks_of(p, children=True)
+                     for p in [jvm.pid] + descendants(jvm.pid))
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def pin_environment(workdir: str, data_dir: str) -> dict:
     """Pin everything the session reads from the environment, and keep every
     file the run writes (temp files, Spark's local dirs) inside ``workdir``.

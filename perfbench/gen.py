@@ -5,11 +5,8 @@ the same seed gives the same bytes:
 
 - ISD-lite observation lines: the 13 positional fields of
   ``RAW_WEATHER_CSV_SCHEMA`` (``wsid,year,month,day,hour,temperature,...``);
-- the ``WEATHER_STATION`` dimension;
 - ingest uploads: one hour of readings from every station per upload, with a
   seeded share of rows held back and delivered up to two days late;
-- serve history and per-day files (parquet) plus a fixed-rate request schedule
-  whose station keys are Zipf-distributed;
 - the registry's ten testdata tables, shaped like the repository's
   TPC-H-ish fixtures (TESTDATA.md).
 
@@ -32,20 +29,6 @@ FIELDS = [
     "one_hour_precip", "six_hour_precip",
 ]
 
-# request name -> weight; the demo client's six requests weigh equally, the
-# two the reference declared but never implemented weigh half as much
-REQUEST_WEIGHTS = {
-    "GetWeatherStation": 2,
-    "GetCurrentWeather": 2,
-    "GetDailyTemperature": 2,
-    "GetMonthlyHiLowTemperature": 2,
-    "GetPrecipitation": 2,
-    "GetTopKPrecipitation": 2,
-    "GetMonthlyTemperature": 1,
-    "GetSkyConditionLookup": 1,
-}
-
-
 def _rng(seed: int, stream: int) -> np.random.Generator:
     return np.random.default_rng([seed, stream])
 
@@ -53,24 +36,6 @@ def _rng(seed: int, stream: int) -> np.random.Generator:
 def station_ids(n: int) -> list[str]:
     """``USAF:WBAN``-shaped ids, unique for any n < 100000."""
     return [f"{720000 + 7 * i:06d}:{10000 + 13 * i % 89989:05d}" for i in range(n)]
-
-
-def stations_table(seed: int, n: int) -> pa.Table:
-    rng = _rng(seed, 1)
-    ids = station_ids(n)
-    states = np.array(["CA", "NY", "TX", "WA", "FL", "IL", "CO", "MA"])
-    return pa.table(
-        {
-            "id": ids,
-            "name": [f"STATION {i:05d}" for i in range(n)],
-            "country_code": ["US"] * n,
-            "state_code": states[rng.integers(0, len(states), n)].tolist(),
-            "call_sign": [f"K{i % 17576 // 676 + 65:c}{i % 676 // 26 + 65:c}{i % 26 + 65:c}" for i in range(n)],
-            "lat": np.round(rng.uniform(25.0, 49.0, n), 3),
-            "long": np.round(rng.uniform(-124.0, -67.0, n), 3),
-            "elevation": np.round(rng.uniform(0.0, 2500.0, n), 1),
-        }
-    )
 
 
 def observations(seed: int, stream: int, n_stations: int, start: dt.datetime,
@@ -139,95 +104,6 @@ def ingest_uploads(seed: int, n_stations: int, n_uploads: int,
     order = np.argsort(deliver, kind="stable")
     bounds = np.searchsorted(deliver[order], np.arange(n_uploads + 1))
     return [csv_lines(obs, order[bounds[u]:bounds[u + 1]]) for u in range(n_uploads)]
-
-
-# -- serve -------------------------------------------------------------------
-
-SERVE_START = dt.datetime(2024, 2, 20)
-
-
-def _raw_table(obs: dict[str, np.ndarray]) -> pa.Table:
-    """Observations in the raw table's column order and types (the stream
-    sink's layout: ``sky_condition_text`` is null, as the parser leaves it)."""
-    i32 = pa.int32()
-    cols = {
-        "wsid": pa.array(obs["wsid"].tolist(), pa.string()),
-        "year": pa.array(obs["year"], i32), "month": pa.array(obs["month"], i32),
-        "day": pa.array(obs["day"], i32), "hour": pa.array(obs["hour"], i32),
-        "temperature": obs["temperature"], "dewpoint": obs["dewpoint"],
-        "pressure": obs["pressure"],
-        "wind_direction": pa.array(obs["wind_direction"], i32),
-        "wind_speed": obs["wind_speed"],
-        "sky_condition": pa.array(obs["sky_condition"], i32),
-        "sky_condition_text": pa.nulls(len(obs["wsid"]), pa.string()),
-        "one_hour_precip": obs["one_hour_precip"],
-        "six_hour_precip": obs["six_hour_precip"],
-    }
-    return pa.table(cols)
-
-
-def serve_inputs(seed: int, out_dir: str, n_stations: int, history_days: int,
-                 write_days: int) -> dict[str, str]:
-    """History (one parquet file per day under ``history/``), the days the
-    writer ingests (``days/d<k>.parquet``) and the station dimension."""
-    paths = {k: os.path.join(out_dir, k) for k in ("history", "days", "stations")}
-    for p in paths.values():
-        os.makedirs(p, exist_ok=True)
-    pq.write_table(stations_table(seed, n_stations),
-                   os.path.join(paths["stations"], "stations.parquet"))
-    obs = observations(seed, 5, n_stations, SERVE_START,
-                       24 * (history_days + write_days))
-    table = _raw_table(obs)
-    per_day = 24 * n_stations
-    for d in range(history_days + write_days):
-        part = table.slice(d * per_day, per_day)
-        if d < history_days:
-            pq.write_table(part, os.path.join(paths["history"], f"d{d:03d}.parquet"))
-        else:
-            pq.write_table(part, os.path.join(paths["days"], f"d{d - history_days:03d}.parquet"))
-    return paths
-
-
-def zipf_weights(n: int, s: float = 1.1) -> np.ndarray:
-    w = 1.0 / np.arange(1, n + 1) ** s
-    return w / w.sum()
-
-
-def serve_schedule(seed: int, n_requests: int, rate: float, n_stations: int,
-                   history_days: int, write_days: int) -> list[dict]:
-    """``n_requests`` requests due every ``1/rate`` s, in a seeded order of
-    the weighted mix.  Station keys follow a Zipf law over a seeded ranking of
-    the stations; dates fall in the history,
-    or (for the latest-row and year/month requests) in the part the writer is
-    appending, so answers move as writes land."""
-    rng = _rng(seed, 6)
-    ids = np.array(station_ids(n_stations))[rng.permutation(n_stations)]
-    # the mix is stratified, so every run serves the weights' exact shares
-    cycle = [name for name, w in REQUEST_WEIGHTS.items() for _ in range(w)]
-    kinds = [cycle[i % len(cycle)] for i in range(n_requests)]
-    rng.shuffle(kinds)
-    keys = rng.choice(n_stations, n_requests, p=zipf_weights(n_stations))
-    days = rng.integers(0, history_days, n_requests)
-    months = rng.integers(0, 2, n_requests)  # the history's month or the written one
-    written = (SERVE_START + dt.timedelta(days=history_days)).month
-    out = []
-    for i in range(n_requests):
-        name, wsid = kinds[i], str(ids[keys[i]])
-        day = SERVE_START + dt.timedelta(days=int(days[i]))
-        month = [SERVE_START.month, written][months[i]]
-        args = {
-            "GetWeatherStation": {"wsid": wsid},
-            "GetCurrentWeather": {"wsid": wsid},
-            "GetDailyTemperature": {"wsid": wsid, "year": day.year,
-                                    "month": day.month, "day": day.day},
-            "GetMonthlyTemperature": {"wsid": wsid, "year": 2024, "month": month},
-            "GetMonthlyHiLowTemperature": {"wsid": wsid, "year": 2024, "month": month},
-            "GetPrecipitation": {"wsid": wsid, "year": 2024},
-            "GetTopKPrecipitation": {"wsid": wsid, "year": 2024},
-            "GetSkyConditionLookup": {"code": int(rng.integers(0, 20))},
-        }[name]
-        out.append({"i": i, "due": i / rate, "request": name, "args": args})
-    return out
 
 
 # -- registry ----------------------------------------------------------------

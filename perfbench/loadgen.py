@@ -1,16 +1,11 @@
 """Load generator: runs as its own process, apart from the engine under test.
 
-    python3 perfbench/loadgen.py ingest --port P --uploads DIR
-        Reads ``<first> <end>`` lines on stdin and POSTs uploads
-        ``u<first>.csv`` .. ``u<end-1>.csv`` one at a time on one connection
-        to ``/weather/data``; answers each line with a JSON line of
-        ``[[status, post_ms], ...]``.  An empty line or EOF ends it.
+    python3 perfbench/loadgen.py --port P --uploads DIR
 
-    python3 perfbench/loadgen.py serve --port P --schedule FILE --t0 T
-                                       --threads N --out FILE
-        Open loop: request ``i`` is due at ``T + due_i`` (epoch seconds) and
-        is sent by the next free one of N sender threads.  Writes one record
-        per request (due, sent and answer times, status, answer) to FILE.
+Reads ``<first> <end>`` lines on stdin and POSTs uploads ``u<first>.csv`` ..
+``u<end-1>.csv`` one at a time on one connection to ``/weather/data``;
+answers each line with a JSON line of ``[[status, post_ms], ...]``.  An
+empty line or EOF ends it.
 """
 
 from __future__ import annotations
@@ -20,12 +15,11 @@ import http.client
 import json
 import os
 import sys
-import threading
 import time
 
 
 def post(port: int, path: str, body: bytes, headers: dict) -> tuple[int, bytes]:
-    """One POST on a fresh connection (the servers answer HTTP/1.0)."""
+    """One POST on a fresh connection (the server answers HTTP/1.0)."""
     conn = http.client.HTTPConnection("127.0.0.1", port, timeout=60)
     try:
         conn.request("POST", path, body=body, headers=headers)
@@ -52,58 +46,11 @@ def ingest(args) -> None:
         print(json.dumps(out), flush=True)
 
 
-def serve(args) -> None:
-    with open(args.schedule) as f:
-        schedule = json.load(f)
-    results: list[dict | None] = [None] * len(schedule)
-    nxt = iter(range(len(schedule)))
-    lock = threading.Lock()
-
-    def sender() -> None:
-        while True:
-            with lock:
-                i = next(nxt, None)
-            if i is None:
-                return
-            req = schedule[i]
-            due = args.t0 + req["due"]
-            delay = due - time.time()
-            if delay > 0:
-                time.sleep(delay)
-            sent = time.time()
-            body = json.dumps({"request": req["request"], "args": req["args"]}).encode()
-            try:
-                status, data = post(args.port, "/ask", body,
-                                    {"Content-Type": "application/json"})
-                answer = json.loads(data)
-            except (OSError, http.client.HTTPException, ValueError) as e:
-                status, answer = 0, {"error": f"{type(e).__name__}: {e}"}
-            results[i] = {"i": i, "due": due, "sent": sent, "recv": time.time(),
-                          "status": status, "answer": answer}
-
-    threads = [threading.Thread(target=sender) for _ in range(args.threads)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    with open(args.out, "w") as f:
-        json.dump(results, f)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
-    sub = ap.add_subparsers(dest="mode", required=True)
-    a = sub.add_parser("ingest")
-    a.add_argument("--port", type=int, required=True)
-    a.add_argument("--uploads", required=True)
-    b = sub.add_parser("serve")
-    b.add_argument("--port", type=int, required=True)
-    b.add_argument("--schedule", required=True)
-    b.add_argument("--t0", type=float, required=True)
-    b.add_argument("--threads", type=int, required=True)
-    b.add_argument("--out", required=True)
-    args = ap.parse_args()
-    (ingest if args.mode == "ingest" else serve)(args)
+    ap.add_argument("--port", type=int, required=True)
+    ap.add_argument("--uploads", required=True)
+    ingest(ap.parse_args())
 
 
 if __name__ == "__main__":

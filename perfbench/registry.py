@@ -3,16 +3,20 @@
 One untimed pass runs every query once and checks its result against the
 query's DuckDB oracle (``REGISTRY[name].sql`` through
 ``tests/oracle_harness.compare``); it also warms the JVM and the Python
-workers.  Then two timed passes run the queries in a seeded order, each timed
-as ``bench.py`` times it (``fn`` plus a count/collect action, best of two).
+workers.  Then timed passes run the queries in a seeded order, each timed as
+``bench.py`` times it (``fn`` plus a count/collect action); each query keeps
+its fastest run (``bench.py``'s best of N).  The JIT keeps speeding the
+queries up for about ten passes, so the number of passes is fixed by
+``--seconds`` alone: were it "as many as fit", a fast host would also report
+a better-warmed best.
 
-The queries are five of the registry's heavy rows: the two ``functions``
-flagships, TF-IDF dedup (``functions/dedup``) and DSIR importance weights
-(``functions/lm``), and three ``operators``/``plans`` queries: a mergeable
-incremental aggregate (``operators/mergeable``), a star join with
-size-gated broadcasts (``plans/hints``) and an as-of join.  The rest of the
-heavy set does not fit a run's time budget on four cores: each further
-cheap query costs about 1 s cold and 0.5 s per pass; the first IVF query
+The queries are three of the registry's heavy rows, one per layer this
+workload alone exercises: TF-IDF dedup (``functions/dedup``), a mergeable
+incremental aggregate (``operators/mergeable``) and a star join with
+size-gated broadcasts (``plans/hints``).  The rest of the heavy set does not
+fit a run's time budget on four cores: each further cheap query
+(``dsir_importance_weights``, ``asof_join_latest_order``) costs about 4 s
+cold with its oracle and 2 s per pass; the first IVF query
 (``functions/ann_index``, ``pq``) in a process trains its index, about 25 s;
 a transformWithState drain (``streaming_tws_totals``,
 ``streaming_tws_daily_counts``) costs about 17 s cold and 5 s per timed run,
@@ -27,13 +31,11 @@ import statistics
 import sys
 import time
 
+from common import sut_cpu_s
 from gen import registry_tables
 
-QUERIES = (
-    "tfidf_cosine_pairs", "dsir_importance_weights", "incremental_daily_stats",
-    "star_join_revenue", "asof_join_latest_order",
-)
-PASSES = 2
+QUERIES = ("tfidf_cosine_pairs", "incremental_daily_stats", "star_join_revenue")
+PASSES_PER_SECOND = 0.2  # a pass takes about 4 s on four cores
 
 LAYER_METRICS = [f"registry.{q}.{m}" for q in QUERIES
                  for m in ("build_s", "action_s", "jobs")]
@@ -92,14 +94,18 @@ def _check(ctx) -> dict:
 
 
 def _phase(ctx, order: list[str], tag: str) -> dict:
-    """PASSES passes over ``order``; each query keeps its faster run, which
-    filters out a pass that shared the host's cores with something else."""
+    """Passes over ``order``; each query keeps its fastest run, and the
+    phase the CPU time of its cheapest pass, which filters out a pass that
+    shared the host's cores with something else."""
     from killrweather_spark.api.inventory import REGISTRY
 
     spark, tracer = ctx.spark, ctx.tracer
     sc = spark.sparkContext
     best: dict[str, dict] = {}
-    for p in range(PASSES):
+    runs: dict[str, list[float]] = {q: [] for q in order}
+    pass_cpu = []
+    for p in range(max(2, round(ctx.seconds * PASSES_PER_SECOND))):
+        cpu0 = sut_cpu_s(spark)
         for q in order:
             group = f"{tag}{p}-{q}"
             with tracer.span(f"registry.{q}", req=group):
@@ -113,18 +119,20 @@ def _phase(ctx, order: list[str], tag: str) -> dict:
                     _action(df)
                 run = {"build_s": t1 - t0, "action_s": time.perf_counter() - t1,
                        "group": group}
+            runs[q].append(run["build_s"] + run["action_s"])
             if q not in best or (run["build_s"] + run["action_s"]
                                  < best[q]["build_s"] + best[q]["action_s"]):
                 best[q] = run
+        pass_cpu.append(sut_cpu_s(spark) - cpu0)
     if tracer.enabled:
         sc.setLocalProperty("spark.jobGroup.id", None)
     total = [r["build_s"] + r["action_s"] for r in best.values()]
-    # the geometric mean: the queries' times differ tenfold, and a median
+    # the geometric mean: the queries' times differ fourfold, and a median
     # would report whichever query happens to rank in the middle
     return {"best": best,
             "e2e": {"latency_ms": statistics.geometric_mean(total) * 1000.0,
-                    "throughput_per_s": len(total) / sum(total),
-                    "samples": len(total)}}
+                    "cpu_ms": min(pass_cpu) * 1000.0 / len(order),
+                    "samples": len(total), "values": runs}}
 
 
 def run(ctx) -> dict:

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {ingest,serve,registry} --seed N
+    python3 perfbench/run.py --workload {ingest,registry} --seed N
                              --seconds S --trace {0,1}
 
 Runs one workload in this (fresh) process against the engine in the
@@ -30,7 +30,7 @@ import threading  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(1, ROOT)  # the engine under test: the checkout's package
-WORKLOADS = ("ingest", "serve", "registry")
+WORKLOADS = ("ingest", "registry")
 DEADLINE_S = 170.0  # the run is abandoned (exit 3) rather than overrun 180 s
 
 
@@ -48,38 +48,36 @@ class Context:
         self.session_s: float | None = None
         self.setup_s: float | None = None
         self.rss_mb: float | None = None
+        self.steal_share: float | None = None
         self.rss_split: dict[str, float] = {}
 
     def mark_setup_done(self) -> None:
         """Call just before the first timed operation."""
+        from common import cpu_ticks
+
         self.setup_s = time.perf_counter() - T_PROCESS
+        self._ticks = cpu_ticks()
 
     def mark_timed_done(self) -> None:
         """Call right after the untraced timed phase: peak RSS of this
-        process plus its JVM, before the output checks allocate anything."""
-        from common import jvm_process, vm_hwm_mb
+        process plus its JVM, before the output checks allocate anything;
+        and the share of the machine's CPU time the hypervisor took away
+        (steal) during the phase, for reading the result."""
+        from common import cpu_ticks, jvm_process, vm_hwm_mb
 
+        busy, steal = (b - a for a, b in zip(self._ticks, cpu_ticks()))
+        self.steal_share = steal / max(1, busy + steal)
         jvm = jvm_process(self.spark)
         self.rss_split = {"python_mb": vm_hwm_mb(os.getpid()),
                           "jvm_mb": vm_hwm_mb(jvm.pid) if jvm else 0.0}
         self.rss_mb = sum(self.rss_split.values())
 
 
-def _children(pid: int) -> list[int]:
-    out = []
-    try:
-        with open(f"/proc/{pid}/task/{pid}/children") as f:
-            kids = [int(x) for x in f.read().split()]
-    except OSError:
-        return out
-    for k in kids:
-        out += _children(k) + [k]
-    return out
-
-
 def _watchdog() -> None:
     """Kill every process this run started, then leave with code 3."""
-    for pid in _children(os.getpid()):
+    from common import descendants
+
+    for pid in descendants(os.getpid()):
         try:
             os.kill(pid, signal.SIGKILL)
         except OSError:
@@ -95,9 +93,10 @@ def _metrics(bench: dict, ctx: Context, res: dict) -> dict:
                 for m in bench["end_to_end"]}
     plain, traced = res["phases"]
     layers = dict(res.get("layers", {}))
+    layers["latency_ms"] = plain["latency_ms"]
     layers["session.start_s"] = ctx.session_s
     layers["trace.samples"] = traced["samples"]
-    for k in ("latency_ms", "throughput_per_s"):
+    for k in ("latency_ms", "cpu_ms"):
         layers[f"trace.overhead.{k}"] = traced[k] / plain[k]
     unknown = set(layers) - {m["name"] for m in bench["per_layer"]}
     if unknown:
@@ -163,6 +162,8 @@ def _run(args, bench: dict, workdir: str, data_dir: str) -> int:
         os.makedirs(traces, exist_ok=True)
         ctx.tracer.write(os.path.join(traces, f"{args.workload}-{args.seed}.jsonl"))
     sys.stderr.write(json.dumps({"workload": args.workload, **info, **ctx.rss_split,
+                                 "steal_share": ctx.steal_share,
+                                 "timed_values": [ph.get("values") for ph in res["phases"]],
                                  "failure_causes": check["causes"]}) + "\n")
     result_out.write(json.dumps({
         "correct": bool(check["correct"]),

@@ -1,15 +1,13 @@
 """Spans, streaming progress and job counts for the traced run.
 
 Spans are recorded only from the benchmark's own files, around calls into
-the engine's public entry points: engine methods and ``refresh_daily_tiers``
-wrapped on the instance, ``AsyncWeatherEngine.submit`` (which also tags a
-per-request job group read back through ``statusTracker()``), and
-``REGISTRY`` calls.  Spans stay in memory and are written once, at exit.
+the engine's public entry points: the ingest phases and stream starts, and
+``REGISTRY`` calls (each run under its own job group, read back through
+``statusTracker()``).  Spans stay in memory and are written once, at exit.
 """
 
 from __future__ import annotations
 
-import functools
 import itertools
 import json
 import threading
@@ -43,7 +41,7 @@ class Tracer:
         stack = self._stack()
         sid = next(self._ids)
         rec = {"id": sid, "name": name, "parent": stack[-1] if stack else None,
-               "req": req if req is not None else getattr(self._local, "req", None),
+               "req": req,
                "start": time.time(), **attrs}
         stack.append(sid)
         try:
@@ -62,21 +60,6 @@ class Tracer:
             self.spans.append({"id": next(self._ids), "name": name,
                                "parent": parent, "req": req,
                                "start": start, "end": end, **attrs})
-
-    def wrap(self, obj, method: str, name: str) -> None:
-        """Replace ``obj.method`` on the instance with a spanned version
-        (which records only while the tracer is enabled)."""
-        inner = getattr(obj, method)
-
-        @functools.wraps(inner)
-        def traced(*a, **k):
-            with self.span(name):
-                return inner(*a, **k)
-
-        setattr(obj, method, traced)
-
-    def durations(self, name: str) -> list[float]:
-        return [s["end"] - s["start"] for s in self.spans if s["name"] == name]
 
     def write(self, path: str) -> None:
         with open(path, "w") as f:
@@ -129,44 +112,3 @@ def job_counts(spark, group: str) -> tuple[int, int]:
             tasks += stage.numTasks if stage else 0
     return len(jobs), tasks
 
-
-def trace_async_engine(tracer: Tracer, aengine, groups: list[str]) -> None:
-    """Wrap ``aengine.submit`` on the instance: a span per request from
-    submit to result, the queue wait (submit -> worker start), the engine
-    call that builds the DataFrame, and the collect; each request's jobs run
-    under their own job group, appended to ``groups``.  Requests submitted
-    while the tracer is disabled pass through untouched."""
-    inner = aengine.submit
-    sc = aengine.engine.spark.sparkContext
-    seq = itertools.count(1)
-
-    def submit(build):
-        if not tracer.enabled:
-            return inner(build)
-        req = f"req-{next(seq)}"
-        submitted = time.time()
-        marks: dict[str, float] = {}
-
-        def traced_build(engine):
-            marks["start"] = time.time()
-            sc.setJobGroup(req, req, interruptOnCancel=False)
-            tracer._local.req = req
-            try:
-                return build(engine)
-            finally:
-                tracer._local.req = None
-                marks["built"] = time.time()
-
-        def done(_fut):
-            end = time.time()
-            start, built = marks.get("start", end), marks.get("built", end)
-            tracer.add("api.serving.request", submitted, end, req=req)
-            tracer.add("api.serving.queue", submitted, start, req=req)
-            tracer.add("api.serving.collect", built, end, req=req)
-
-        groups.append(req)
-        fut = inner(traced_build)
-        fut.add_done_callback(done)
-        return fut
-
-    aengine.submit = submit
