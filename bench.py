@@ -510,6 +510,30 @@ def _current_round() -> int | None:
     return max(rounds) + 1 if rounds else None
 
 
+def _round_artifact_name(rnd: int | None, sf: float) -> str | None:
+    """Name of the round-pinned artifact this run writes, or None (with a
+    stderr line saying why) when it writes none.
+
+    The round-pinned _full artifact records the round's MAIN run only: a
+    scaling leg must not overwrite it (after r13 an 8-core leg landed as
+    BENCH_r14_full.json and would have become the next round's baseline).
+    A scaling leg says so with ``SPARK_GRAFT_SCALING_LEG=1``; the host's
+    core count is not consulted.  bench_out.json is still written — its
+    cpus stamp lets _prior_bench skip it when the counts differ."""
+    if os.environ.get("SPARK_GRAFT_SCALING_LEG", "") not in ("", "0"):
+        why = "SPARK_GRAFT_SCALING_LEG is set"
+    elif rnd is None:
+        why = "no CORRECTNESS_r*.json names the round"
+    elif sf == 0.1:
+        return f"BENCH_r{rnd:02d}_full.json"
+    elif sf == 1.0:
+        return f"BENCH_r{rnd:02d}_sf1_full.json"
+    else:
+        why = f"sf {sf} has no round artifact (only 0.1 and 1.0)"
+    print(f"round artifact skipped: {why}", file=sys.stderr)
+    return None
+
+
 def main() -> None:
     from killrweather_spark.api.inventory import REGISTRY
     from killrweather_spark.session import get_session
@@ -812,17 +836,9 @@ def main() -> None:
     # attested comparison against it.
     root = Path(__file__).resolve().parent
     out_names = ["bench_out.json"]
-    rnd = _current_round()
-    # The round-pinned _full artifact records the round's MAIN run only:
-    # the driver's low-core scaling leg must not overwrite it (after r13
-    # an 8-core leg landed as BENCH_r14_full.json and would have become
-    # the next round's baseline).  bench_out.json is still written — its
-    # cpus stamp lets _prior_bench skip it when the counts differ.
-    if BENCH_CPUS == (os.cpu_count() or BENCH_CPUS):
-        if rnd is not None and sf == 0.1:
-            out_names.append(f"BENCH_r{rnd:02d}_full.json")
-        elif rnd is not None and sf == 1.0:
-            out_names.append(f"BENCH_r{rnd:02d}_sf1_full.json")
+    round_artifact = _round_artifact_name(_current_round(), sf)
+    if round_artifact is not None:
+        out_names.append(round_artifact)
     for out_name in out_names:
         try:
             (root / out_name).write_text(line + "\n")

@@ -997,7 +997,12 @@ def ivf_probe_topk(
     below; the corpus side joins post-rescore candidates and relies on
     the contract).  A query id MISSING from labels drops that query from
     the output — the inner join is deliberate: an unlabeled query has no
-    defined notion of "different-label negative"."""
+    defined notion of "different-label negative".
+
+    Query ids should be unique.  Rows that repeat an id with the same
+    vector probe the same cells; rows that repeat an id with DIFFERENT
+    vectors are ranked independently, so that id probes the union of each
+    row's top ``n_probe`` cells rather than one shared set."""
     cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
     # One query-side pass: the ×10⁶-quantized ARRAY form (plus its norm)
     # is the serving payload; the component form the centroid ranking

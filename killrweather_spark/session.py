@@ -6,8 +6,10 @@ config + manual SparkConf, we centralize one builder with scale-aware defaults:
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) — at
   100 TB the static plan is never right, AQE re-plans from runtime stats.
-- ``spark.sql.shuffle.partitions`` sized to the local core count for tests;
-  on a real cluster AQE coalescing makes the initial number a ceiling.
+- ``spark.sql.shuffle.partitions`` sized from the input data's size (one
+  partition per ``SHUFFLE_TARGET_MB`` of ``$SPARK_GRAFT_SF_DIR``, between 4
+  and 4x the task slots), or the core count when no data directory is set;
+  AQE coalescing makes the initial number a ceiling.
 - UTC session timezone (reference uses joda ``DateTimeZone.UTC`` throughout,
   e.g. ``AggregationActor.scala:44``).
 - Arrow enabled for the Pandas-UDF slow path.
@@ -16,6 +18,7 @@ config + manual SparkConf, we centralize one builder with scale-aware defaults:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -51,24 +54,34 @@ def _derived_shuffle_partitions(cpus: int) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if not sf_dir or not os.path.isdir(sf_dir):
         return cpus
+    # the size sum stops at the cap: past it the width is 4x slots whatever
+    # the rest of the directory holds, so a huge table is never fully walked
+    cap = 4 * cpus * (SHUFFLE_TARGET_MB << 20)
     total = 0
     try:
-        for name in os.listdir(sf_dir):
-            if name.endswith(".parquet"):
-                p = os.path.join(sf_dir, name)
-                if os.path.isfile(p):
-                    total += os.stat(p).st_size
-                else:  # directory-style parquet table
-                    for root, _dirs, files in os.walk(p):
-                        total += sum(
-                            os.stat(os.path.join(root, f)).st_size
-                            for f in files
-                        )
+        for size in _parquet_sizes(sf_dir):
+            total += size
+            if total >= cap:
+                break
     except OSError:
         return cpus
     if total <= 0:
         return cpus
     return max(4, min(4 * cpus, total // (SHUFFLE_TARGET_MB << 20) + 1))
+
+
+def _parquet_sizes(sf_dir: str) -> Iterator[int]:
+    """Sizes of the ``*.parquet`` files and directory-style parquet
+    tables' files under ``sf_dir``, one stat at a time."""
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet"):
+            p = os.path.join(sf_dir, name)
+            if os.path.isfile(p):
+                yield os.stat(p).st_size
+            else:  # directory-style parquet table
+                for root, _dirs, files in os.walk(p):
+                    for f in files:
+                        yield os.stat(os.path.join(root, f)).st_size
 
 
 def get_session(

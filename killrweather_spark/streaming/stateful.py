@@ -84,6 +84,10 @@ def running_totals_by_key(
     drained stream folds to the batch ``COUNT/SUM GROUP BY`` answer with
     ``max`` regardless of how availableNow batched the files.
 
+    Nulls follow that batch answer: a null key is one group of its own
+    (as in Spark's ``groupBy``), ``n`` counts rows (``COUNT(*)``), and
+    ``sum_cents`` skips null values (0 for a key whose values are all null).
+
     Map-side partial reduce (r14, guide §2.3 "aggregate before you
     shuffle"): a stateless ``mapInPandas`` collapses each scan task's
     rows to ONE ``(key, count, sum)`` row per key BEFORE the keyed
@@ -110,15 +114,17 @@ def running_totals_by_key(
         for pdf in batches:
             if not len(pdf):
                 continue
+            # dropna=False: a null key is one group, as in Spark's groupBy;
+            # "size" counts rows (a null cents value still counts in n)
             g = (
-                pdf.groupby(key_col, sort=False)[cents_col]
-                .agg(pre_n="count", pre_s="sum")
+                pdf.groupby(key_col, sort=False, dropna=False)[cents_col]
+                .agg(pre_n="size", pre_s="sum")
                 .reset_index()
             )
             acc = g if acc is None else pd.concat([acc, g], ignore_index=True)
         if acc is not None:
             out = (
-                acc.groupby(key_col, sort=False)[["pre_n", "pre_s"]]
+                acc.groupby(key_col, sort=False, dropna=False)[["pre_n", "pre_s"]]
                 .sum()
                 .reset_index()
             )

@@ -11,6 +11,7 @@ and ``--vs-artifact`` refuses them loudly.
 from __future__ import annotations
 
 import json
+import os
 import sys
 from pathlib import Path
 
@@ -100,3 +101,55 @@ def test_shuffle_width_is_input_size_derived(tmp_path, monkeypatch):
     assert S._derived_shuffle_partitions(32) == (440 << 20) // (16 << 20) + 1
     # cap: 4x slots
     assert S._derived_shuffle_partitions(2) == 8
+
+
+def test_shuffle_width_size_sum_stops_at_the_cap(tmp_path, monkeypatch):
+    """The input-size sum stops once it reaches the 4x-slots cap: on a
+    directory-style table of many files only the files up to the cap are
+    stat'ed, and the width equals the full walk's answer."""
+    import importlib
+
+    import killrweather_spark.session as S
+
+    d = tmp_path / "sfX"
+    table = d / "big.parquet"
+    table.mkdir(parents=True)
+    n_files = 200
+    for i in range(n_files):
+        with open(table / f"part-{i:05d}.parquet", "wb") as f:
+            f.truncate(8 << 20)  # sparse: 8 MiB apparent size, no data blocks
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(d))
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_TARGET_MB", raising=False)
+    importlib.reload(S)
+    real_stat = os.stat
+    calls = []
+
+    def counting_stat(path, *a, **kw):
+        calls.append(path)
+        return real_stat(path, *a, **kw)
+
+    monkeypatch.setattr(os, "stat", counting_stat)
+    # cap at cpus=1: 4 x 16 MiB = 64 MiB, reached after 8 of the 200 files
+    assert S._derived_shuffle_partitions(1) == 4
+    file_stats = [p for p in calls if str(p).endswith(".parquet") and "part-" in str(p)]
+    assert len(file_stats) == 8
+    assert len(calls) < 20
+    # a wide cap still walks everything: 200 x 8 MiB / 16 MiB + 1
+    assert S._derived_shuffle_partitions(32) == n_files * 8 // 16 + 1
+
+
+def test_round_artifact_gated_on_scaling_leg_flag(monkeypatch, capsys):
+    """The round-pinned artifact is skipped when SPARK_GRAFT_SCALING_LEG is
+    set (not inferred from the host's core count), and every skip says so
+    on stderr."""
+    monkeypatch.delenv("SPARK_GRAFT_SCALING_LEG", raising=False)
+    assert bench._round_artifact_name(15, 0.1) == "BENCH_r15_full.json"
+    assert bench._round_artifact_name(15, 1.0) == "BENCH_r15_sf1_full.json"
+    assert capsys.readouterr().err == ""
+    assert bench._round_artifact_name(None, 0.1) is None
+    assert "round artifact skipped" in capsys.readouterr().err
+    assert bench._round_artifact_name(15, 0.01) is None
+    assert "round artifact skipped" in capsys.readouterr().err
+    monkeypatch.setenv("SPARK_GRAFT_SCALING_LEG", "1")
+    assert bench._round_artifact_name(15, 0.1) is None
+    assert "SPARK_GRAFT_SCALING_LEG" in capsys.readouterr().err

@@ -1266,3 +1266,175 @@ def test_streaming_semantic_screen_matches_batch_across_microbatches(
     assert len(got) == 12
     # near-identical cluster-mates score over the screen threshold
     assert sum(k for _, _, k, _ in got.values()) >= 12
+
+
+def _synthetic_lines(day_rows) -> str:
+    """ISD-lite-shaped CSV lines from (wsid, month, day, hour, temp, precip)."""
+    return "".join(
+        f"{w},2008,{m:02d},{d:02d},{h:02d},{t},-0.6,1023.8,50,7.2,2,{p},0.0\n"
+        for w, m, d, h, t, p in day_rows
+    )
+
+
+def test_upsert_runs_the_stateful_stage_once_per_batch(spark, tmp_path):
+    """Two microbatches through start_ingest's precip upsert: the state
+    operator counts each (wsid, year, month, day) key once (a re-executed
+    stateful stage inflates numRowsTotal), each touched (year, month)
+    directory holds one parquet file (one writer per partition), and the
+    tier equals the batch answer."""
+    src = tmp_path / "lines"
+    src.mkdir()
+    a, b, c = "711110:11111", "722220:22222", "733330:33333"
+    (src / "b1.csv").write_text(_synthetic_lines([
+        (a, 1, 1, 0, 10.0, 1.5), (a, 1, 1, 6, 11.0, 0.5),
+        (b, 1, 2, 0, 12.0, 2.5), (c, 2, 3, 0, 9.0, 0.25),
+    ]))
+    (src / "b2.csv").write_text(_synthetic_lines([
+        (a, 1, 1, 12, 13.0, 1.0), (c, 1, 4, 0, 8.0, 3.0),
+        (b, 3, 5, 0, 7.0, 0.75),
+    ]))
+    lines = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
+    precip_path = str(tmp_path / "precip")
+    q1, q2 = start_ingest(
+        parsed_observations(lines), str(tmp_path / "raw"), precip_path,
+        str(tmp_path / "ckpt"), trigger={"availableNow": True},
+    )
+    q1.awaitTermination(120)
+    q2.awaitTermination(120)
+
+    want_df = daily_precip_updates(parsed_observations(spark.read.text(str(src))))
+    want = {(r.wsid, r.month, r.day): r.precipitation for r in want_df.collect()}
+    assert len(want) == 5
+    assert q2.lastProgress["batchId"] == 1
+    assert q2.lastProgress["stateOperators"][0]["numRowsTotal"] == len(want)
+    got = {
+        (r.wsid, r.month, r.day): r.precipitation
+        for r in spark.read.parquet(precip_path).collect()
+    }
+    assert got == want
+    year = pathlib.Path(precip_path) / "year=2008"
+    files = {
+        d.name: [f for f in os.listdir(d) if f.endswith(".parquet")]
+        for d in year.iterdir()
+    }
+    assert sorted(files) == ["month=1", "month=2", "month=3"]
+    assert all(len(f) == 1 for f in files.values()), files
+
+
+def test_checkpoint_manager_choice(spark, tmp_path):
+    """Local checkpoint directories get Spark's FileSystem-based manager;
+    a remote scheme, or a bare path on a non-local default file system,
+    keeps Spark's default (None)."""
+    from killrweather_spark.streaming.pipeline import (
+        FS_CHECKPOINT_MANAGER,
+        checkpoint_manager_for,
+    )
+
+    assert checkpoint_manager_for(spark, str(tmp_path)) == FS_CHECKPOINT_MANAGER
+    assert checkpoint_manager_for(spark, f"file://{tmp_path}") == FS_CHECKPOINT_MANAGER
+    assert checkpoint_manager_for(spark, "hdfs://nn/ckpt") is None
+    spark.conf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        assert checkpoint_manager_for(spark, "/ckpt") is None
+        assert checkpoint_manager_for(spark, f"file://{tmp_path}") == FS_CHECKPOINT_MANAGER
+    finally:
+        spark.conf.unset("fs.defaultFS")
+
+
+def test_restart_under_local_checkpoint_manager_changes_nothing(spark, tmp_path):
+    """Synthetic-lines twin of the restart test: with the local checkpoint
+    manager in place, a restart with no new input reprocesses nothing, and
+    the session's checkpoint-manager setting is restored after each start."""
+    from killrweather_spark.streaming.pipeline import CHECKPOINT_MANAGER_CONF
+
+    src = tmp_path / "lines"
+    src.mkdir()
+    a, b = "711110:11111", "722220:22222"
+    (src / "b1.csv").write_text(_synthetic_lines([
+        (a, 1, 1, 0, 10.0, 1.5), (b, 1, 2, 0, 12.0, 2.5),
+    ]))
+    (src / "b2.csv").write_text(_synthetic_lines([(a, 1, 1, 6, 11.0, 0.5)]))
+    raw_path = str(tmp_path / "raw")
+    precip_path = str(tmp_path / "precip")
+    ckpt = str(tmp_path / "ckpt")
+    before_conf = spark.conf.get(CHECKPOINT_MANAGER_CONF, None)
+
+    def run():
+        lines = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
+        q1, q2 = start_ingest(
+            parsed_observations(lines), raw_path, precip_path, ckpt,
+            trigger={"availableNow": True},
+        )
+        assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) == before_conf
+        q1.awaitTermination(120)
+        q2.awaitTermination(120)
+        return q1, q2
+
+    run()
+    first = sorted(map(tuple, spark.read.parquet(precip_path).collect()))
+    offsets = sorted(os.listdir(os.path.join(ckpt, "precip", "offsets")))
+    q1, q2 = run()
+    assert q1.lastProgress is None or q1.lastProgress["numInputRows"] == 0
+    assert q2.lastProgress is None or q2.lastProgress["numInputRows"] == 0
+    assert sorted(os.listdir(os.path.join(ckpt, "precip", "offsets"))) == offsets
+    assert sorted(map(tuple, spark.read.parquet(precip_path).collect())) == first
+    assert first == [(a, 1, 2.0, 2008, 1), (b, 2, 2.5, 2008, 1)]
+    assert spark.read.parquet(raw_path).count() == 3
+
+
+def test_transform_with_state_running_totals_nulls(spark, tmp_path):
+    """The map-side pre-reduce keeps a null key as its own group and counts
+    rows (not non-null values) in n: the drained totals equal the batch
+    COUNT(*)/SUM GROUP BY, null key and null values included."""
+    from tests.conftest import PROTOBUF_STATUS
+
+    status, detail = PROTOBUF_STATUS
+    if status in ("failed", "absent"):
+        pytest.skip(f"google.protobuf unavailable ({status}): {detail}")
+    import json
+
+    from killrweather_spark.streaming.stateful import running_totals_by_key
+
+    src = tmp_path / "in"
+    src.mkdir()
+    rows = [
+        {"k": None if i % 4 == 0 else i % 2, "cents": None if i % 5 == 0 else i}
+        for i in range(20)
+    ]
+    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:10]))
+    (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[10:]))
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    stream = (
+        spark.readStream.schema("k bigint, cents bigint")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    q = (
+        running_totals_by_key(stream, "k", "cents")
+        .writeStream.format("memory")
+        .queryName("tws_totals_nulls")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {
+        r.k: (r.n, r.sum_cents)
+        for r in spark.table("tws_totals_nulls")
+        .groupBy("k")
+        .agg(F.max("n").alias("n"), F.max("sum_cents").alias("sum_cents"))
+        .collect()
+    }
+    want = {
+        k: (
+            sum(1 for r in rows if r["k"] == k),
+            sum(r["cents"] or 0 for r in rows if r["k"] == k),
+        )
+        for k in (None, 0, 1)
+    }
+    assert got == want
