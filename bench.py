@@ -510,6 +510,23 @@ def _current_round() -> int | None:
     return max(rounds) + 1 if rounds else None
 
 
+def _main_run_cpus() -> int:
+    """Core count of the rounds' MAIN bench run: the cpus stamp of the
+    newest stamped BENCH_r*_full.json, or the default 32 when no round
+    artifact carries a stamp yet."""
+    root = Path(__file__).resolve().parent
+    for p in sorted(root.glob("BENCH_r*_full.json"), key=_round_num,
+                    reverse=True):
+        try:
+            d = json.loads(p.read_text())
+            cpus = (d.get("parsed") or d).get("cpus")
+        except (json.JSONDecodeError, AttributeError, OSError):
+            continue
+        if isinstance(cpus, int):
+            return cpus
+    return 32
+
+
 def _round_artifact_name(rnd: int | None, sf: float) -> str | None:
     """Name of the round-pinned artifact this run writes, or None (with a
     stderr line saying why) when it writes none.
@@ -517,11 +534,13 @@ def _round_artifact_name(rnd: int | None, sf: float) -> str | None:
     The round-pinned _full artifact records the round's MAIN run only: a
     scaling leg must not overwrite it (after r13 an 8-core leg landed as
     BENCH_r14_full.json and would have become the next round's baseline).
-    A scaling leg says so with ``SPARK_GRAFT_SCALING_LEG=1``; the host's
-    core count is not consulted.  bench_out.json is still written — its
-    cpus stamp lets _prior_bench skip it when the counts differ."""
-    if os.environ.get("SPARK_GRAFT_SCALING_LEG", "") not in ("", "0"):
-        why = "SPARK_GRAFT_SCALING_LEG is set"
+    A run whose BENCH_CPUS differs from the main run's count
+    (_main_run_cpus) is a scaling leg; the host's core count is not
+    consulted.  bench_out.json is still written — its cpus stamp lets
+    _prior_bench skip it when the counts differ."""
+    main_cpus = _main_run_cpus()
+    if BENCH_CPUS != main_cpus:
+        why = f"cpus {BENCH_CPUS} is not the main run's {main_cpus}"
     elif rnd is None:
         why = "no CORRECTNESS_r*.json names the round"
     elif sf == 0.1:

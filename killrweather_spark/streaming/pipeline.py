@@ -111,12 +111,20 @@ def checkpoint_manager_for(spark: SparkSession, checkpoint_dir: str) -> str | No
 def _checkpoint_manager(spark: SparkSession, checkpoint_dir: str) -> Iterator[None]:
     """Set :func:`checkpoint_manager_for`'s choice around query starts and
     restore the session's setting afterwards.  A query clones the session
-    when it is constructed, inside ``start()``, so it keeps the setting."""
+    when it is constructed, inside ``start()``, so it keeps the setting.
+
+    The SESSION conf holds the FileSystem-based manager for the length of
+    ``start()``: code starting queries on the same session from another
+    thread must not overlap that window, or its query inherits the local
+    manager whatever its checkpoint scheme.  Both branches hold
+    ``_CHECKPOINT_MANAGER_LOCK``, so the starts made here never overlap
+    it; other callers that start queries concurrently on this session
+    should take the same lock."""
     cls = checkpoint_manager_for(spark, checkpoint_dir)
-    if cls is None:
-        yield
-        return
     with _CHECKPOINT_MANAGER_LOCK:
+        if cls is None:
+            yield
+            return
         prev = spark.conf.get(CHECKPOINT_MANAGER_CONF, None)
         spark.conf.set(CHECKPOINT_MANAGER_CONF, cls)
         try:
@@ -277,10 +285,11 @@ def upsert_into_partitions(
     O(touched partitions), never a full-table rewrite — the same pruned
     read-modify-write shape as :func:`cdc_apply_pruned_batch`.
 
-    Per-batch fixed cost: the batch is persisted on entry, so the upstream
-    stateful stage runs ONCE (the touched-partition collect, the anti-join
-    keys and the union all read the cached rows; each read of an uncached
-    batch re-runs the aggregate and rewrites its state-store files); the
+    Per-batch fixed cost: the upstream stateful stage runs ONCE.  The first
+    batch (no tier yet) is read only by the write; a merge batch is
+    persisted, so the touched-partition collect, the anti-join keys and the
+    union all read the cached rows (each read of an uncached batch re-runs
+    the aggregate and rewrites its state-store files); the
     tier is read with the batch's schema, so no footer-inference job runs;
     and the merged rows are hash-partitioned on ``partition_cols`` before
     the write, so each touched partition gets ONE writer task and one file.
@@ -291,65 +300,66 @@ def upsert_into_partitions(
     from pyspark.errors import AnalysisException
 
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
-        try:
-            # the batch's schema is the tier's: skip footer inference.  A
-            # missing path still raises, which is the first-batch signal.
-            existing = spark.read.schema(batch_df.schema).parquet(path)
-        except AnalysisException:
-            existing = None  # first batch: nothing to merge
-        merged = batch_df
-        if existing is not None:
-            # touched-partition values are a small driver-side list by
-            # construction (a microbatch spans few calendar partitions —
-            # the cap makes that assumption loud instead of trusted);
-            # equality literals on partition columns prune directories
-            touched = _collect_touched(batch_df, partition_cols)
-            if touched:
-                pred = reduce(
-                    or_,
-                    [
-                        reduce(
-                            and_, [F.col(c) == r[c] for c in partition_cols]
-                        )
-                        for r in touched
-                    ],
-                )
-                keep = (
-                    existing.filter(pred)
-                    .select(*batch_df.columns)
-                    .join(
-                        batch_df.select(*key_cols), list(key_cols), "left_anti"
-                    )
-                )
-                # Detach the merge input from the sink path BEFORE the
-                # overwrite action: the lazy self-read is safe under the
-                # local-FS committer (staged files commit after the read
-                # completes) but fragile on object-store committers with
-                # different staging order — the eager checkpoint
-                # materializes the kept rows first, bounded by the touched
-                # partitions' size (round-4 advice).  Cluster caveat
-                # (round-5 advice): localCheckpoint blocks live UNREPLICATED
-                # on executors — losing one between the checkpoint and the
-                # commit fails that microbatch ATTEMPT (lineage is
-                # truncated, not recomputable) and the stream retries from
-                # its offset checkpoint; blocks are freed by ContextCleaner
-                # GC.  The stronger form for object stores is staging the
-                # merged output to a temp path and renaming — at the cost
-                # of a second full write; the idempotent-retry property
-                # holds either way.  Only the kept rows are checkpointed so
-                # the write's plan references the batch ONCE: the analyzer
-                # re-aliases a second reference, which then misses the
-                # cache and re-runs the stateful stage.
-                merged = keep.localCheckpoint(eager=True).unionByName(batch_df)
+
+    def write(frame: DataFrame) -> None:
         (
-            merged.repartition(*partition_cols)
+            frame.repartition(*partition_cols)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols)
             .parquet(path)
         )
+
+    try:
+        # the batch's schema is the tier's: skip footer inference.  A
+        # missing path still raises, which is the first-batch signal.
+        # Reading the schema does not execute the batch.
+        existing = spark.read.schema(batch_df.schema).parquet(path)
+    except AnalysisException:
+        write(batch_df)  # first batch: nothing to merge, one read
+        return
+    batch_df = batch_df.persist()
+    try:
+        # touched-partition values are a small driver-side list by
+        # construction (a microbatch spans few calendar partitions —
+        # the cap makes that assumption loud instead of trusted);
+        # equality literals on partition columns prune directories
+        touched = _collect_touched(batch_df, partition_cols)
+        merged = batch_df
+        if touched:
+            pred = reduce(
+                or_,
+                [
+                    reduce(and_, [F.col(c) == r[c] for c in partition_cols])
+                    for r in touched
+                ],
+            )
+            keep = (
+                existing.filter(pred)
+                .select(*batch_df.columns)
+                .join(batch_df.select(*key_cols), list(key_cols), "left_anti")
+            )
+            # Detach the merge input from the sink path BEFORE the
+            # overwrite action: the lazy self-read is safe under the
+            # local-FS committer (staged files commit after the read
+            # completes) but fragile on object-store committers with
+            # different staging order — the eager checkpoint
+            # materializes the kept rows first, bounded by the touched
+            # partitions' size (round-4 advice).  Cluster caveat
+            # (round-5 advice): localCheckpoint blocks live UNREPLICATED
+            # on executors — losing one between the checkpoint and the
+            # commit fails that microbatch ATTEMPT (lineage is
+            # truncated, not recomputable) and the stream retries from
+            # its offset checkpoint; blocks are freed by ContextCleaner
+            # GC.  The stronger form for object stores is staging the
+            # merged output to a temp path and renaming — at the cost
+            # of a second full write; the idempotent-retry property
+            # holds either way.  Only the kept rows are checkpointed so
+            # the write's plan references the batch ONCE: the analyzer
+            # re-aliases a second reference, which then misses the
+            # cache and re-runs the stateful stage.
+            merged = keep.localCheckpoint(eager=True).unionByName(batch_df)
+        write(merged)
     finally:
         batch_df.unpersist()
 

@@ -138,11 +138,15 @@ def test_shuffle_width_size_sum_stops_at_the_cap(tmp_path, monkeypatch):
     assert S._derived_shuffle_partitions(32) == n_files * 8 // 16 + 1
 
 
-def test_round_artifact_gated_on_scaling_leg_flag(monkeypatch, capsys):
-    """The round-pinned artifact is skipped when SPARK_GRAFT_SCALING_LEG is
-    set (not inferred from the host's core count), and every skip says so
-    on stderr."""
-    monkeypatch.delenv("SPARK_GRAFT_SCALING_LEG", raising=False)
+def test_round_artifact_gated_on_main_run_cpus(tmp_path, monkeypatch, capsys):
+    """The round-pinned artifact is written only when this run's core count
+    equals the main run's (the cpus stamp of the newest stamped
+    BENCH_r*_full.json, else 32), never inferred from the host's core
+    count, and every skip says so on stderr."""
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(bench, "BENCH_CPUS", 32)
+    # no stamped round artifact yet: the main run is the default 32 cores
+    assert bench._main_run_cpus() == 32
     assert bench._round_artifact_name(15, 0.1) == "BENCH_r15_full.json"
     assert bench._round_artifact_name(15, 1.0) == "BENCH_r15_sf1_full.json"
     assert capsys.readouterr().err == ""
@@ -150,6 +154,22 @@ def test_round_artifact_gated_on_scaling_leg_flag(monkeypatch, capsys):
     assert "round artifact skipped" in capsys.readouterr().err
     assert bench._round_artifact_name(15, 0.01) is None
     assert "round artifact skipped" in capsys.readouterr().err
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_LEG", "1")
+    # a scaling leg (8 cores) writes no round artifact
+    monkeypatch.setattr(bench, "BENCH_CPUS", 8)
     assert bench._round_artifact_name(15, 0.1) is None
-    assert "SPARK_GRAFT_SCALING_LEG" in capsys.readouterr().err
+    assert "cpus 8 is not the main run's 32" in capsys.readouterr().err
+    # the newest stamped round artifact sets the main count; unstamped
+    # legacy artifacts are passed over
+    _write(tmp_path / "BENCH_r13_full.json", cpus=8)
+    _write(tmp_path / "BENCH_r14_full.json")
+    assert bench._main_run_cpus() == 8
+    assert bench._round_artifact_name(15, 0.1) == "BENCH_r15_full.json"
+    _write(tmp_path / "BENCH_r14_sf1_full.json", cpus=32)
+    assert bench._main_run_cpus() == 32
+
+
+def test_repo_main_run_is_32_cores():
+    """The repo's own round artifacts name 32 cores as the main run, so a
+    default bench run (SPARK_GRAFT_CPUS unset) writes the round artifact
+    and an 8-core scaling leg does not."""
+    assert bench._main_run_cpus() == 32
