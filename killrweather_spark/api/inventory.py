@@ -46,6 +46,7 @@ from killrweather_spark.operators.lookups import latest_row, point_lookup
 from killrweather_spark.plans.caching import persist_once
 from killrweather_spark.plans.hints import maybe_broadcast
 from killrweather_spark.sources.readers import fan_out, load_table
+from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
 
 @dataclass(frozen=True)
@@ -2309,11 +2310,6 @@ def q_streaming_daily_precip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point stateful sum → memory sink.  Integer cents state makes the
     result identical to the batch/oracle answer regardless of batch split.
     """
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.select(
@@ -2326,8 +2322,7 @@ def q_streaming_daily_precip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "year", "month", "day")
         .agg(F.sum("cents").alias("day_cents"))
     )
-    name = f"stream_daily_precip_{uuid.uuid4().hex[:8]}"
-    result = run_stream_to_batch(agg, tempfile.mkdtemp(), name, "complete")
+    result = run_stream_to_batch(agg, "stream_daily_precip", "complete")
     return result.select(
         "user_id",
         "year",
@@ -2561,11 +2556,6 @@ def q_ivf_ann_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the streaming form of hash-groupBy dedup; state store holds seen keys)",
 )
 def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     keys = ev.select(
         "user_id",
@@ -2573,8 +2563,7 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month("ts").alias("month"),
         F.dayofmonth("ts").alias("day"),
     ).dropDuplicates(["user_id", "year", "month", "day"])
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    return run_stream_to_batch(keys, tempfile.mkdtemp(), name, "append")
+    return run_stream_to_batch(keys, "stream_dedup", "append")
 
 
 @register(
@@ -2596,19 +2585,13 @@ def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_dedup_within_watermark(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     deduped = (
         ev.withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-    return run_stream_to_batch(deduped, tempfile.mkdtemp(), name, "append")
+    return run_stream_to_batch(deduped, "stream_dedup_wm", "append")
 
 
 @register(
@@ -2825,19 +2808,13 @@ def q_approx_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch session_agg oracle)",
 )
 def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "6 hours"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    result = run_stream_to_batch(agg, tempfile.mkdtemp(), name, "complete")
+    result = run_stream_to_batch(agg, "stream_sessions", "complete")
     return result.select(
         "user_id",
         epoch_us(F.col("session_window.start")).alias("session_start_us"),
@@ -2854,16 +2831,11 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "template for sketches/monoids the built-in aggs don't cover)",
 )
 def q_streaming_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
     from killrweather_spark.streaming.stateful import running_max_by_key
 
     ev = _events_stream(spark, sf_dir)
     out = running_max_by_key(ev, "user_id", "value")
-    name = f"stream_runmax_{uuid.uuid4().hex[:8]}"
-    drained = run_stream_to_batch(out, tempfile.mkdtemp(), name, "update")
+    drained = run_stream_to_batch(out, "stream_runmax", "update")
     # update mode emits one row per (key, microbatch-with-change); the file
     # source may split the input into several batches, so fold the update
     # stream to its final value per key — max is its own merge, making the
@@ -2883,19 +2855,13 @@ def q_streaming_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream (reference groups by calendar keys instead, README.md:20)",
 )
 def q_streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    result = run_stream_to_batch(agg, tempfile.mkdtemp(), name, "complete")
+    result = run_stream_to_batch(agg, "stream_hourly", "complete")
     return result.select(
         epoch_us(F.col("window.start")).alias("window_start_us"),
         "event_type", "n",
@@ -4759,11 +4725,6 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
     so state stays O(window), not O(stream) — the property that makes this
     runnable forever on the 100 TB firehose. availableNow drain makes the
     result comparable to the batch/oracle self-join."""
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     clicks = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -4787,8 +4748,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
         epoch_us("click_ts").alias("click_us"),
         epoch_us("error_ts").alias("error_us"),
     )
-    name = f"stream_ss_join_{uuid.uuid4().hex[:8]}"
-    return run_stream_to_batch(joined, tempfile.mkdtemp(), name, "append")
+    return run_stream_to_batch(joined, "stream_ss_join", "append")
 
 
 @register(
@@ -4802,11 +4762,6 @@ def q_streaming_enrich_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast to every task (no fact shuffle, no state for the join itself),
     stateful aggregation downstream in complete mode. Same answer as the
     batch join_dim_broadcast query — one definition, two execution modes."""
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     agg = (
@@ -4817,8 +4772,7 @@ def q_streaming_enrich_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
         )
     )
-    name = f"stream_dim_join_{uuid.uuid4().hex[:8]}"
-    result = run_stream_to_batch(agg, tempfile.mkdtemp(), name, "complete")
+    result = run_stream_to_batch(agg, "stream_dim_join", "complete")
     return result.select(
         "segment", "n_events", (F.col("cents") / 100.0).alias("total_value")
     )
@@ -7633,19 +7587,13 @@ def q_streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     each event updates two window buckets (Expand before the stateful
     agg), watermark bounds state.  Drained availableNow, the complete
     output equals the batch arithmetic-derived buckets."""
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "2 hours", "1 hour"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    name = f"stream_hopping_{uuid.uuid4().hex[:8]}"
-    result = run_stream_to_batch(agg, tempfile.mkdtemp(), name, "complete")
+    result = run_stream_to_batch(agg, "stream_hopping", "complete")
     return result.select(
         epoch_us(F.col("window.start")).alias("window_start_us"), "n"
     )
@@ -9880,11 +9828,6 @@ def q_streaming_topk_precip(spark: SparkSession, sf_dir: str) -> DataFrame:
     into microbatches.  At scale the state is (station×day) keyed — the
     same footprint as the daily tier — and the sort input is the state
     store's aggregate output, never raw rows."""
-    import tempfile
-    import uuid
-
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     ev = _events_stream(spark, sf_dir)
     agg = (
         ev.select(
@@ -9901,8 +9844,7 @@ def q_streaming_topk_precip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(10)
     )
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    result = run_stream_to_batch(agg, tempfile.mkdtemp(), name, "complete")
+    result = run_stream_to_batch(agg, "stream_topk", "complete")
     return result.select(
         "user_id",
         "year",
@@ -11238,14 +11180,10 @@ def _wire_streaming_semantic_screen() -> None:
     def q_streaming_semantic_screen(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.ann_index import ensure_ivf_index
         from killrweather_spark.functions.pq import (
             streaming_semantic_screen,
         )
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         emb = load_table(spark, sf_dir, "embeddings")
         idx = ensure_ivf_index(
@@ -11254,9 +11192,8 @@ def _wire_streaming_semantic_screen() -> None:
         screened = streaming_semantic_screen(
             spark, idx, _embeddings_stream(spark, sf_dir)
         )
-        name = f"stream_semantic_screen_{uuid.uuid4().hex[:8]}"
         return run_stream_to_batch(
-            screened, tempfile.mkdtemp(), name, "complete"
+            screened, "stream_semantic_screen", "complete"
         )
 
 
@@ -11287,14 +11224,10 @@ def _wire_streaming_semantic_screen_fixed() -> None:
     def q_streaming_semantic_screen_fixed(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.ann_index import ensure_ivf_index
         from killrweather_spark.functions.pq import (
             streaming_semantic_screen,
         )
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         emb = load_table(spark, sf_dir, "embeddings")
         idx = ensure_ivf_index(
@@ -11304,9 +11237,8 @@ def _wire_streaming_semantic_screen_fixed() -> None:
             F.col("vec_id") < 1000
         )
         screened = streaming_semantic_screen(spark, idx, arrivals)
-        name = f"stream_sem_screen_fx_{uuid.uuid4().hex[:8]}"
         return run_stream_to_batch(
-            screened, tempfile.mkdtemp(), name, "complete"
+            screened, "stream_sem_screen_fx", "complete"
         )
 
 
@@ -11383,20 +11315,13 @@ def _wire_streaming_lm() -> None:
     def q_streaming_bigram_lm_score(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.lm import bigram_lm_scores_stream
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         model_docs = load_table(spark, sf_dir, "documents")
         scored = bigram_lm_scores_stream(
             model_docs, _documents_stream(spark, sf_dir)
         )
-        name = f"stream_lm_score_{uuid.uuid4().hex[:8]}"
-        return run_stream_to_batch(
-            scored, tempfile.mkdtemp(), name, "complete"
-        )
+        return run_stream_to_batch(scored, "stream_lm_score", "complete")
 
 
 _wire_streaming_lm()
@@ -11757,14 +11682,10 @@ def _wire_streaming_image_screen() -> None:
     def q_streaming_image_screen(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.multimodal import (
             streaming_image_screen,
             synth_png_pixels,
         )
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         docs = load_table(spark, sf_dir, "documents")
         # fan_out below the Python synth so the one-time reference-index
@@ -11781,10 +11702,7 @@ def _wire_streaming_image_screen() -> None:
             )
         )
         screened = streaming_image_screen(ref, arrivals)
-        name = f"stream_image_screen_{uuid.uuid4().hex[:8]}"
-        return run_stream_to_batch(
-            screened, tempfile.mkdtemp(), name, "complete"
-        )
+        return run_stream_to_batch(screened, "stream_image_screen", "complete")
 
 
 _wire_streaming_image_screen()
@@ -11888,82 +11806,18 @@ def _wire_streaming_tws() -> None:
         "pattern on a third stateful API",
     )
     def q_streaming_tws_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-        import uuid
-
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
-        from killrweather_spark.streaming.protobuf_shim import (
-            enable_vendored_protobuf,
-        )
         from killrweather_spark.streaming.stateful import (
+            drain_tws,
             running_totals_by_key,
         )
 
-        status, detail = enable_vendored_protobuf()
-        if status in ("failed", "absent"):
-            raise RuntimeError(
-                "transformWithStateInPandas needs google.protobuf:"
-                f" {status} ({detail})"
-            )
-        if status == "vendored":
-            # The state-server worker is spawned by the JVM, whose env
-            # snapshot predates the shim when the session was built
-            # before this query (the driver gate's vanilla session).
-            # sc.environment rides the Python-function envVars into the
-            # worker spawn, so set it too — verified to reach the
-            # worker even on an already-running JVM.
-            import os as _os
-
-            spark.sparkContext.environment["PYTHONPATH"] = _os.environ[
-                "PYTHONPATH"
-            ]
         ev = _events_stream(spark, sf_dir).select(
             "user_id",
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-        out = running_totals_by_key(ev, "user_id", "cents")
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(
-            conf_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        drained = drain_tws(
+            running_totals_by_key(ev, "user_id", "cents"), "stream_tws_totals"
         )
-        # The stateful stage's cost is per-key state-server ROUND TRIPS
-        # (latency-bound Python protocol), so its width must not follow
-        # the session's size-derived shuffle width down on small inputs
-        # (width 4 at sf0.1: 7.5 s best-of-2 vs 4.4 s at 16) — but it
-        # must KEEP GROWING with data, because the trip count tracks
-        # touched state cells (width 16 at sf1: the 400 k-trip
-        # daily_counts drain doubled, 13.5 -> 27 s isolated).  Floor at
-        # half the task slots, scale as twice the data-derived width
-        # (state volume tracks input size).  Set for the stream build,
-        # restored after — batch neighbors keep the size-derived width.
-        part_key = "spark.sql.shuffle.partitions"
-        prior_parts = spark.conf.get(part_key, None)
-        spark.conf.set(
-            part_key,
-            str(
-                max(
-                    2 * int(prior_parts or 0),
-                    spark.sparkContext.defaultParallelism // 2,
-                )
-            ),
-        )
-        try:
-            name = f"stream_tws_totals_{uuid.uuid4().hex[:8]}"
-            drained = run_stream_to_batch(
-                out, tempfile.mkdtemp(), name, "update"
-            )
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
-            if prior_parts is None:
-                spark.conf.unset(part_key)
-            else:
-                spark.conf.set(part_key, prior_parts)
         return drained.groupBy("user_id").agg(
             F.max("n").cast("bigint").alias("n"),
             F.max_by("sum_cents", "n").cast("bigint").alias("sum_cents"),
@@ -11990,74 +11844,18 @@ def _wire_streaming_tws() -> None:
     def q_streaming_tws_daily_counts(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
-        from killrweather_spark.streaming.protobuf_shim import (
-            enable_vendored_protobuf,
+        from killrweather_spark.streaming.stateful import (
+            daily_counts_by_key,
+            drain_tws,
         )
-        from killrweather_spark.streaming.stateful import daily_counts_by_key
 
-        status, detail = enable_vendored_protobuf()
-        if status in ("failed", "absent"):
-            raise RuntimeError(
-                "transformWithStateInPandas needs google.protobuf:"
-                f" {status} ({detail})"
-            )
-        if status == "vendored":
-            import os as _os
-
-            spark.sparkContext.environment["PYTHONPATH"] = _os.environ[
-                "PYTHONPATH"
-            ]
         ev = _events_stream(spark, sf_dir).select(
             "user_id",
             F.date_format(F.col("ts"), "yyyy-MM-dd").alias("day"),
         )
-        out = daily_counts_by_key(ev, "user_id", "day")
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(
-            conf_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        drained = drain_tws(
+            daily_counts_by_key(ev, "user_id", "day"), "stream_tws_daily"
         )
-        # The stateful stage's cost is per-key state-server ROUND TRIPS
-        # (latency-bound Python protocol), so its width must not follow
-        # the session's size-derived shuffle width down on small inputs
-        # (width 4 at sf0.1: 7.5 s best-of-2 vs 4.4 s at 16) — but it
-        # must KEEP GROWING with data, because the trip count tracks
-        # touched state cells (width 16 at sf1: the 400 k-trip
-        # daily_counts drain doubled, 13.5 -> 27 s isolated).  Floor at
-        # half the task slots, scale as twice the data-derived width
-        # (state volume tracks input size).  Set for the stream build,
-        # restored after — batch neighbors keep the size-derived width.
-        part_key = "spark.sql.shuffle.partitions"
-        prior_parts = spark.conf.get(part_key, None)
-        spark.conf.set(
-            part_key,
-            str(
-                max(
-                    2 * int(prior_parts or 0),
-                    spark.sparkContext.defaultParallelism // 2,
-                )
-            ),
-        )
-        try:
-            name = f"stream_tws_daily_{uuid.uuid4().hex[:8]}"
-            drained = run_stream_to_batch(
-                out, tempfile.mkdtemp(), name, "update"
-            )
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
-            if prior_parts is None:
-                spark.conf.unset(part_key)
-            else:
-                spark.conf.set(part_key, prior_parts)
         # day stays a 'yyyy-MM-dd' string end-to-end — the repo's
         # day-column convention (dtype-parity: DuckDB DATE materializes
         # as datetime64, Spark DATE as object)
@@ -12088,73 +11886,16 @@ def _wire_streaming_tws() -> None:
     def q_streaming_tws_distinct_types(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
-        from killrweather_spark.streaming.protobuf_shim import (
-            enable_vendored_protobuf,
-        )
         from killrweather_spark.streaming.stateful import (
             distinct_values_by_key,
+            drain_tws,
         )
 
-        status, detail = enable_vendored_protobuf()
-        if status in ("failed", "absent"):
-            raise RuntimeError(
-                "transformWithStateInPandas needs google.protobuf:"
-                f" {status} ({detail})"
-            )
-        if status == "vendored":
-            import os as _os
-
-            spark.sparkContext.environment["PYTHONPATH"] = _os.environ[
-                "PYTHONPATH"
-            ]
         ev = _events_stream(spark, sf_dir).select("user_id", "event_type")
-        out = distinct_values_by_key(ev, "user_id", "event_type")
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(
-            conf_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        drained = drain_tws(
+            distinct_values_by_key(ev, "user_id", "event_type"),
+            "stream_tws_distinct",
         )
-        # The stateful stage's cost is per-key state-server ROUND TRIPS
-        # (latency-bound Python protocol), so its width must not follow
-        # the session's size-derived shuffle width down on small inputs
-        # (width 4 at sf0.1: 7.5 s best-of-2 vs 4.4 s at 16) — but it
-        # must KEEP GROWING with data, because the trip count tracks
-        # touched state cells (width 16 at sf1: the 400 k-trip
-        # daily_counts drain doubled, 13.5 -> 27 s isolated).  Floor at
-        # half the task slots, scale as twice the data-derived width
-        # (state volume tracks input size).  Set for the stream build,
-        # restored after — batch neighbors keep the size-derived width.
-        part_key = "spark.sql.shuffle.partitions"
-        prior_parts = spark.conf.get(part_key, None)
-        spark.conf.set(
-            part_key,
-            str(
-                max(
-                    2 * int(prior_parts or 0),
-                    spark.sparkContext.defaultParallelism // 2,
-                )
-            ),
-        )
-        try:
-            name = f"stream_tws_distinct_{uuid.uuid4().hex[:8]}"
-            drained = run_stream_to_batch(
-                out, tempfile.mkdtemp(), name, "update"
-            )
-        finally:
-            if prior is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prior)
-            if prior_parts is None:
-                spark.conf.unset(part_key)
-            else:
-                spark.conf.set(part_key, prior_parts)
         return drained.groupBy("user_id").agg(
             F.max("n_values").cast("bigint").alias("n_values"),
             F.max_by("values", "n_values").alias("values"),
@@ -12183,21 +11924,14 @@ def _wire_streaming_lang_screen() -> None:
         "index, language gate)",
     )
     def q_streaming_lang_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.lang import (
             gate_drained_scores,
             lang_scores_stream,
         )
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         docs = load_table(spark, sf_dir, "documents")
         scored = lang_scores_stream(docs, _documents_stream(spark, sf_dir))
-        name = f"stream_lang_screen_{uuid.uuid4().hex[:8]}"
-        drained = run_stream_to_batch(
-            scored, tempfile.mkdtemp(), name, "complete"
-        )
+        drained = run_stream_to_batch(scored, "stream_lang_screen", "complete")
         return gate_drained_scores(docs, drained)
 
 
@@ -12226,22 +11960,17 @@ def _wire_streaming_passage_screen() -> None:
     def q_streaming_passage_screen(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.curation import (
             streaming_passage_screen,
         )
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         docs = load_table(spark, sf_dir, "documents")
         ref = docs.filter(F.col("doc_id") % 2 == 0)
         screened = streaming_passage_screen(
             ref, _documents_stream(spark, sf_dir)
         )
-        name = f"stream_passage_screen_{uuid.uuid4().hex[:8]}"
         return run_stream_to_batch(
-            screened, tempfile.mkdtemp(), name, "complete"
+            screened, "stream_passage_screen", "complete"
         )
 
 
@@ -12534,22 +12263,17 @@ def _wire_streaming_substring_screen() -> None:
     def q_streaming_substring_screen(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import tempfile
-        import uuid
-
         from killrweather_spark.functions.dedup import (
             streaming_substring_screen,
         )
-        from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
         docs = load_table(spark, sf_dir, "documents")
         ref = docs.filter(F.col("doc_id") % 2 == 0)
         screened = streaming_substring_screen(
             ref, _documents_stream(spark, sf_dir)
         )
-        name = f"stream_substring_screen_{uuid.uuid4().hex[:8]}"
         return run_stream_to_batch(
-            screened, tempfile.mkdtemp(), name, "complete"
+            screened, "stream_substring_screen", "complete"
         )
 
 

@@ -70,24 +70,6 @@ def deterministic_split(
     return df.withColumn(out, expr.otherwise(F.lit(last_label)))
 
 
-def split_thresholds_sql(
-    boundaries: tuple[tuple[str, float], ...] = (("train", 0.8), ("val", 0.9)),
-    last_label: str = "test",
-    id_expr: str = "doc_id",
-) -> str:
-    """The oracle-SQL CASE expression mirroring :func:`deterministic_split`."""
-    whens = " ".join(
-        (
-            f"WHEN TRUE THEN '{label}'"
-            if frac >= 1.0
-            else f"WHEN substr(md5(CAST({id_expr} AS VARCHAR)), 1, 4) < "
-            f"'{format(int(frac * 65536), '04x')}' THEN '{label}'"
-        )
-        for label, frac in boundaries
-    )
-    return f"CASE {whens} ELSE '{last_label}' END"
-
-
 # --------------------------------------------------------------------------
 # stratified deterministic sampling
 # --------------------------------------------------------------------------

@@ -51,7 +51,7 @@ this extends SURVEY §2's beyond-reference curation family.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Keyspace moduli for the synthesized URLs — sized so the bench corpora
@@ -174,20 +174,12 @@ def host_of(url_norm: Column) -> Column:
     return F.regexp_extract(url_norm, r"^https?://([^/:?#]+)", 1)
 
 
-def psl_dim(spark: SparkSession) -> DataFrame:
-    """The public-suffix-list broadcast dimension: (suffix, n_labels)."""
-    return spark.createDataFrame(
-        [(s, s.count(".") + 1) for s in PUBLIC_SUFFIXES],
-        "suffix string, n_labels int",
-    )
-
-
 def attach_registered_domain(
     df: DataFrame,
     host_col: str,
     out_col: str = "registered_domain",
 ) -> DataFrame:
-    """Resolve each row's registrable domain against the PSL dimension:
+    """Resolve each row's registrable domain against the public suffix list:
     public suffix by LONGEST match over the host's last-1..last-N label
     suffixes, registered domain = that suffix plus one label (the whole
     host when the host has no extra label, itself when nothing matches).

@@ -18,7 +18,8 @@ config + manual SparkConf, we centralize one builder with scale-aware defaults:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -126,3 +127,21 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set the session conf keys in ``conf`` for the body, then put each
+    back as it was: its prior value, or unset when it had none.  The
+    restore runs when the body raises too."""
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

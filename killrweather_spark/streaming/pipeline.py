@@ -31,7 +31,10 @@ keys.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
+import uuid
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 
@@ -40,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from killrweather_spark.model.schemas import RAW_WEATHER_CSV_SCHEMA
+from killrweather_spark.session import scoped_conf
 from killrweather_spark.sources.readers import parse_raw_lines
 
 RAW_TOPIC = "killrweather.raw"  # reference.conf:156
@@ -121,19 +125,9 @@ def _checkpoint_manager(spark: SparkSession, checkpoint_dir: str) -> Iterator[No
     it; other callers that start queries concurrently on this session
     should take the same lock."""
     cls = checkpoint_manager_for(spark, checkpoint_dir)
-    with _CHECKPOINT_MANAGER_LOCK:
-        if cls is None:
-            yield
-            return
-        prev = spark.conf.get(CHECKPOINT_MANAGER_CONF, None)
-        spark.conf.set(CHECKPOINT_MANAGER_CONF, cls)
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(CHECKPOINT_MANAGER_CONF)
-            else:
-                spark.conf.set(CHECKPOINT_MANAGER_CONF, prev)
+    conf = {} if cls is None else {CHECKPOINT_MANAGER_CONF: cls}
+    with _CHECKPOINT_MANAGER_LOCK, scoped_conf(spark, conf):
+        yield
 
 
 # --------------------------------------------------------------------------
@@ -549,34 +543,35 @@ def join_streams_within(
 
 def run_stream_to_batch(
     stream_df: DataFrame,
-    checkpoint_dir: str,
-    query_name: str = "stream_result",
+    query_name: str,
     output_mode: str = "complete",
 ) -> DataFrame:
     """Drain a bounded stream with availableNow into a memory sink and return
     the result as a batch DataFrame (deterministic test/oracle path).
 
+    The sink is named ``<query_name>_<8 hex>``, so drains with the same
+    label never collide, and checkpoints into a fresh temp directory.
     Leak-free by construction: the drained result is detached from the
-    memory sink (eager ``localCheckpoint``), so the uuid-named sink table is
-    dropped from the session catalog and the one-shot checkpoint directory
-    is deleted before returning — repeated bench/sweep runs accumulate
-    neither temp views nor checkpoint dirs."""
-    import shutil
-
+    memory sink (eager ``localCheckpoint``), and the sink's view and the
+    checkpoint directory are removed in ``finally`` — a failing query
+    leaves neither behind either."""
     spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(query_name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(query_name)
-    shutil.rmtree(checkpoint_dir, ignore_errors=True)
-    return out
+    name = f"{query_name}_{uuid.uuid4().hex[:8]}"
+    checkpoint_dir = tempfile.mkdtemp()
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(checkpoint_dir, ignore_errors=True)
 
 
 def start_cdc_apply(
@@ -721,8 +716,6 @@ def cdc_apply_pruned_batch(
     :func:`start_cdc_apply_pruned`, callable directly for tests/backfills).
     """
     import json
-    import shutil
-    import tempfile
 
     spark = batch_df.sparkSession
     from killrweather_spark.operators.cdc import merge_changes

@@ -13,11 +13,16 @@ never by stream length; Arrow batches bound the per-task Python transfer.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from killrweather_spark.session import scoped_conf
+from killrweather_spark.streaming.pipeline import run_stream_to_batch
+from killrweather_spark.streaming.protobuf_shim import enable_vendored_protobuf
 
 
 def running_max_by_key(
@@ -98,6 +103,7 @@ def running_totals_by_key(
     ≤ |keys|·|tasks| rows.  Sum of partials ≡ direct sum (int64), so
     every emitted row is value-identical.
     """
+    _enable_state_server_protobuf(stream.sparkSession)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -201,6 +207,7 @@ def daily_counts_by_key(
     through a pre-reduce worker cost more than the shuffle rows it saved
     (sf1 addBatch 13.0 s → 18.1 s with the pre-reduce).
     """
+    _enable_state_server_protobuf(stream.sparkSession)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -291,6 +298,7 @@ def distinct_values_by_key(
     value-identical while the shuffle and Arrow volume drop from
     |events| to ≤ |key·value domain| · |tasks| rows.
     """
+    _enable_state_server_protobuf(stream.sparkSession)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -372,6 +380,7 @@ def totals_with_idle_flush(
     flush CLEARS state — the mechanism that keeps total state bounded by
     ACTIVE keys instead of all keys ever seen.
     """
+    _enable_state_server_protobuf(stream.sparkSession)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -467,6 +476,7 @@ def eventtime_session_finalize(
     in the batch loop without scans, and closing clears state — bounded
     by OPEN sessions, not history.
     """
+    _enable_state_server_protobuf(stream.sparkSession)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -542,3 +552,61 @@ def eventtime_session_finalize(
         outputMode="Update",
         timeMode="EventTime",
     )
+
+
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def _enable_state_server_protobuf(spark: SparkSession) -> None:
+    """Make ``google.protobuf`` reachable by the workers of the
+    ``transformWithStateInPandas`` operator about to be built: enable the
+    vendored runtime (raising when none works) and forward its
+    ``PYTHONPATH`` to ``sc.environment``.  It must run before the operator
+    is built, because a Python function captures ``sc.environment`` when
+    it is created."""
+    status, detail = enable_vendored_protobuf()
+    if status in ("failed", "absent"):
+        raise RuntimeError(
+            "transformWithStateInPandas needs google.protobuf:"
+            f" {status} ({detail})"
+        )
+    if status == "vendored":
+        # The state-server worker is spawned by the JVM, whose env
+        # snapshot predates the shim when the session was built
+        # before this query (a vanilla session built by the caller).
+        # sc.environment rides the Python-function envVars into the
+        # worker spawn, so set it too — verified to reach the
+        # worker even on an already-running JVM.
+        spark.sparkContext.environment["PYTHONPATH"] = os.environ["PYTHONPATH"]
+
+
+def drain_tws(frame: DataFrame, query_name: str) -> DataFrame:
+    """Drain a bounded ``transformWithStateInPandas`` stream in update mode
+    on the RocksDB state store, at the stateful width below, and return the
+    emitted rows as a batch DataFrame; both settings are restored
+    afterwards.  The operators in this module enable the protobuf runtime
+    the state-server protocol needs when they are built."""
+    spark = frame.sparkSession
+    # The stateful stage's cost is per-key state-server ROUND TRIPS
+    # (latency-bound Python protocol), so its width must not follow
+    # the session's size-derived shuffle width down on small inputs
+    # (width 4 at sf0.1: 7.5 s best-of-2 vs 4.4 s at 16) — but it
+    # must KEEP GROWING with data, because the trip count tracks
+    # touched state cells (width 16 at sf1: the 400 k-trip
+    # daily_counts drain doubled, 13.5 -> 27 s isolated).  Floor at
+    # half the task slots, scale as twice the data-derived width
+    # (state volume tracks input size).  Set for the stream build,
+    # restored after — batch neighbors keep the size-derived width.
+    part_key = "spark.sql.shuffle.partitions"
+    width = max(
+        2 * int(spark.conf.get(part_key, None) or 0),
+        spark.sparkContext.defaultParallelism // 2,
+    )
+    conf = {
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+        part_key: str(width),
+    }
+    with scoped_conf(spark, conf):
+        return run_stream_to_batch(frame, query_name, "update")

@@ -36,7 +36,7 @@ os.environ.setdefault("SPARK_GRAFT_SF_DIR", SF_DIR)
 
 def main() -> None:
     from killrweather_spark.api.inventory import REGISTRY
-    from killrweather_spark.session import get_session
+    from killrweather_spark.session import get_session, scoped_conf
 
     args = sys.argv[1:]
     runs = 2
@@ -84,13 +84,12 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         if plan_dir:
             Path(plan_dir).mkdir(parents=True, exist_ok=True)
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            df = spec.fn(spark, SF_DIR)
             buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
+            with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+                df = spec.fn(spark, SF_DIR)
+                with redirect_stdout(buf):
+                    df.explain("formatted")
             (Path(plan_dir) / f"{name}.txt").write_text(buf.getvalue())
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     print(json.dumps({"sf_dir": SF_DIR, "noop": use_noop, "runs": runs,
                       "queries": timings,

@@ -1,8 +1,8 @@
 """Diagnose where streaming drain wall-time goes (r13 optimization).
 
-Wraps run_stream_to_batch to capture each StreamingQuery's progress
-(durationMs breakdown: addBatch, getBatch, queryPlanning, walCommit,
-commitOffsets, latestOffset) and times the full registry query, optionally
+Collects each StreamingQuery's progress (durationMs breakdown: addBatch,
+getBatch, queryPlanning, walCommit, commitOffsets, latestOffset) with a
+StreamingQueryListener and times the full registry query, optionally
 under a reduced spark.sql.shuffle.partitions (state-store partition count
 for the stateful operators).
 
@@ -16,8 +16,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 from pathlib import Path
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
@@ -28,10 +31,50 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", SF_DIR)
 
 
+class DrainProgress(StreamingQueryListener):
+    """Progress records of every query started on the session.  The
+    listener bus delivers a query's terminated event after its last
+    progress event, so the records are complete once every query started
+    has terminated."""
+
+    def __init__(self) -> None:
+        self.cond = threading.Condition()
+        self.records: dict = {}  # runId -> progress records, in start order
+        self.terminated: set = set()
+
+    def onQueryStarted(self, event) -> None:
+        with self.cond:
+            self.records[event.runId] = []
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        with self.cond:
+            self.records[p.runId].append({
+                "query": p.name,
+                "batchId": p.batchId,
+                "durationMs": p.durationMs,
+                "numInputRows": p.numInputRows,
+            })
+
+    def onQueryTerminated(self, event) -> None:
+        with self.cond:
+            self.terminated.add(event.runId)
+            self.cond.notify_all()
+
+    def take(self) -> list[dict]:
+        """Wait until every started query has terminated, then return
+        and forget their records."""
+        with self.cond:
+            self.cond.wait_for(lambda: self.terminated >= self.records.keys())
+            out = [r for recs in self.records.values() for r in recs]
+            self.records.clear()
+            self.terminated.clear()
+        return out
+
+
 def main() -> None:
     from killrweather_spark.api.inventory import REGISTRY
     from killrweather_spark.session import get_session
-    from killrweather_spark.streaming import pipeline
 
     args = sys.argv[1:]
     parts = None
@@ -47,43 +90,10 @@ def main() -> None:
     spark.range(1).count()
     if parts is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-
-    progress: list[dict] = []
-    orig = pipeline.run_stream_to_batch
-
-    def wrapped(stream_df, checkpoint_dir, query_name="stream_result",
-                output_mode="complete"):
-        import shutil
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        for p in q.recentProgress:
-            progress.append({
-                "query": query_name,
-                "batchId": p.get("batchId"),
-                "durationMs": p.get("durationMs"),
-                "numInputRows": p.get("numInputRows"),
-            })
-        out = stream_df.sparkSession.table(query_name).localCheckpoint(
-            eager=True
-        )
-        stream_df.sparkSession.catalog.dropTempView(query_name)
-        shutil.rmtree(checkpoint_dir, ignore_errors=True)
-        return out
-
-    pipeline.run_stream_to_batch = wrapped
-    # the inventory imported the symbol into query closures via
-    # `from ... import run_stream_to_batch` inside the fn body, so the
-    # monkeypatch on the module attribute is what those late imports see.
+    listener = DrainProgress()
+    spark.streams.addListener(listener)
 
     for name in names:
-        del progress[:]
         spec = REGISTRY[name]
         t0 = time.time()
         df = spec.fn(spark, SF_DIR)
@@ -94,10 +104,10 @@ def main() -> None:
             "wall_sec": round(wall, 3),
             "rows": n,
             "parts": parts or spark.conf.get("spark.sql.shuffle.partitions"),
-            "progress": progress,
+            "progress": listener.take(),
         }))
 
-    pipeline.run_stream_to_batch = orig
+    spark.streams.removeListener(listener)
 
 
 if __name__ == "__main__":

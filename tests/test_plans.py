@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from killrweather_spark.api.inventory import REGISTRY
 from killrweather_spark.plans import checks
+from killrweather_spark.session import scoped_conf
 from killrweather_spark.sources.readers import load_table
 from tests.conftest import SF01
 
@@ -56,15 +57,12 @@ def test_queries_stay_in_codegen(spark):
     # JVM expressions only — a Python UDF in the hot path would show up as
     # BatchEvalPython and break whole-stage codegen.  Codegen ids only print
     # on non-adaptive plans, so toggle AQE off for the assertion.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         for name in ["daily_stats", "star_join_revenue", "value_filter", "text_quality"]:
             df = REGISTRY[name].fn(spark, SF01)
             plan = checks.formatted_plan(df)
             assert "BatchEvalPython" not in plan, f"{name} fell out of codegen"
             assert checks.wholestage_codegen_spans(df) >= 1, name
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_semi_and_anti_joins_stay_semi(spark):
@@ -397,9 +395,7 @@ def test_q7_q8_dimension_broadcasts_are_size_gated(spark, monkeypatch):
     assert checks.node_count(q8, "BroadcastHashJoin") >= 6, checks.formatted_plan(q8)
 
     monkeypatch.setattr(hints, "BROADCAST_BYTES_THRESHOLD", 0)
-    old_auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         q7_big = REGISTRY["nation_trade_volume"].fn(spark, SF01)
         q8_big = REGISTRY["nation_market_share"].fn(spark, SF01)
         # only the two unconditional nation hints survive on each
@@ -412,8 +408,6 @@ def test_q7_q8_dimension_broadcasts_are_size_gated(spark, monkeypatch):
         # the de-hinted dims joined with a keyed shuffle strategy
         plan7 = checks.formatted_plan(q7_big)
         assert ("SortMergeJoin" in plan7) or ("ShuffledHashJoin" in plan7), plan7
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_auto)
 
 
 def test_maybe_broadcast_estimates_file_backed_sizes(spark):

@@ -15,13 +15,16 @@ import pathlib
 import pytest
 from pyspark.sql import functions as F
 
+from killrweather_spark.session import scoped_conf
 from killrweather_spark.sources.readers import read_raw_csv
 from killrweather_spark.streaming.pipeline import (
     daily_precip_updates,
     file_lines,
     parsed_observations,
+    run_stream_to_batch,
     start_ingest,
 )
+from killrweather_spark.streaming.stateful import ROCKSDB_PROVIDER, drain_tws
 
 REF_CSV_GZ = "/root/reference/data/load/sf-2008.csv.gz"
 
@@ -230,31 +233,15 @@ def test_transform_with_state_running_totals(spark, tmp_path):
     rows = [{"k": i % 3, "cents": 100 + i} for i in range(30)]
     (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:15]))
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[15:]))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     stream = (
         spark.readStream.schema("k bigint, cents bigint")
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    out = running_totals_by_key(stream, "k", "cents")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    from pyspark.sql import functions as F
-
+    drained = drain_tws(running_totals_by_key(stream, "k", "cents"), "tws_totals")
     got = {
         r.k: (r.n, r.sum_cents)
-        for r in spark.table("tws_totals")
+        for r in drained
         .groupBy("k")
         .agg(F.max("n").alias("n"), F.max("sum_cents").alias("sum_cents"))
         .collect()
@@ -283,44 +270,22 @@ def test_stateful_agg_on_rocksdb_state_store(spark, tmp_path):
     rows = [{"k": i % 5, "cents": 100 + i} for i in range(40)]
     (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:20]))
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[20:]))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    stream = (
+        spark.readStream.schema("k bigint, cents bigint")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
     )
-    try:
-        stream = (
-            spark.readStream.schema("k bigint, cents bigint")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        agg = stream.groupBy("k").agg(F.sum("cents").alias("total"))
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("rocksdb_totals")
-            .outputMode("complete")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r["k"], r["total"])
-            for r in spark.table("rocksdb_totals").collect()
-        }
-        want = {
-            (r["k"], r["total"])
-            for r in spark.createDataFrame(rows)
-            .groupBy("k").agg(F.sum("cents").alias("total")).collect()
-        }
-        assert got == want
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    agg = stream.groupBy("k").agg(F.sum("cents").alias("total"))
+    conf = {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    with scoped_conf(spark, conf):
+        drained = run_stream_to_batch(agg, "rocksdb_totals")
+    got = {(r["k"], r["total"]) for r in drained.collect()}
+    want = {
+        (r["k"], r["total"])
+        for r in spark.createDataFrame(rows)
+        .groupBy("k").agg(F.sum("cents").alias("total")).collect()
+    }
+    assert got == want
 
 
 def test_cdc_pruned_apply_merges_only_touched_partitions(spark, tmp_path):
@@ -531,7 +496,6 @@ def test_running_max_by_key_string_keys(spark, tmp_path):
     ``wsid`` keys."""
     import json as _json
 
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
     from killrweather_spark.streaming.stateful import running_max_by_key
 
     src = tmp_path / "in"
@@ -542,7 +506,7 @@ def test_running_max_by_key_string_keys(spark, tmp_path):
     stream = spark.readStream.schema("wsid string, value double").json(str(src))
     out = run_stream_to_batch(
         running_max_by_key(stream, "wsid", "value"),
-        str(tmp_path / "ckpt"), "strkey_max", "update",
+        "strkey_max", "update",
     )
     got = {r.wsid: r.max_value for r in out.collect()}
     assert got == {"a:1": 3.0, "b:2": 2.0}
@@ -669,10 +633,7 @@ def test_stream_stream_join_within_tolerance_matches_batch(spark, tmp_path):
     be a stateful symmetric join (no broadcast — both sides unbounded)."""
     import json as _json
 
-    from killrweather_spark.streaming.pipeline import (
-        join_streams_within,
-        run_stream_to_batch,
-    )
+    from killrweather_spark.streaming.pipeline import join_streams_within
 
     views = tmp_path / "views"
     buys = tmp_path / "buys"
@@ -699,9 +660,7 @@ def test_stream_stream_join_within_tolerance_matches_batch(spark, tmp_path):
         spark.readStream.schema(b_schema).json(str(buys)),
         key_cols=["user_id"], ts_col="ts", tolerance="1 hour",
     )
-    got = run_stream_to_batch(
-        joined, str(tmp_path / "ckpt"), "ssj_result", "append"
-    )
+    got = run_stream_to_batch(joined, "ssj_result", "append")
     pairs = sorted((r.user_id, r.page, r.amount_r) for r in got.collect())
     # batch equivalent on the same inputs
     bv = spark.read.schema(v_schema).json(str(views))
@@ -737,8 +696,6 @@ def test_dedup_within_watermark_across_batches(spark, tmp_path):
     keep forever."""
     import json as _json
 
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
-
     src = tmp_path / "in"
     src.mkdir()
     b1 = [
@@ -760,7 +717,7 @@ def test_dedup_within_watermark_across_batches(spark, tmp_path):
         stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["k"])
         .select("k"),
-        str(tmp_path / "ckpt"), "dedup_wm", "append",
+        "dedup_wm", "append",
     )
     assert sorted(r.k for r in out.collect()) == ["a", "b", "c"]
 
@@ -774,7 +731,6 @@ def test_streaming_bigram_lm_matches_batch_across_microbatches(spark, tmp_path):
         bigram_lm_scores,
         bigram_lm_scores_stream,
     )
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
     docs = [
         (1, "the cat sat on the mat"),
@@ -798,7 +754,7 @@ def test_streaming_bigram_lm_matches_batch_across_microbatches(spark, tmp_path):
     )
     got = run_stream_to_batch(
         bigram_lm_scores_stream(df, stream),
-        str(tmp_path / "ckpt_lm"), "stream_lm", "complete",
+        "stream_lm", "complete",
     )
     want = {
         (r.doc_id, r.n_bigrams, r.mean_p_micro)
@@ -820,7 +776,6 @@ def test_streaming_passage_screen_matches_batch_across_microbatches(
     from killrweather_spark.functions.curation import (
         streaming_passage_screen,
     )
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
     docs = [
         (0, "aa bb cc dd ee ff"),          # reference (even)
@@ -846,7 +801,7 @@ def test_streaming_passage_screen_matches_batch_across_microbatches(
         r.doc_id: (r.n_segments, r.n_known, r.known_ratio_micro)
         for r in run_stream_to_batch(
             streaming_passage_screen(ref, stream),
-            str(tmp_path / "ckpt_ps"), "stream_ps", "complete",
+            "stream_ps", "complete",
         ).collect()
     }
     want = {
@@ -872,7 +827,6 @@ def test_streaming_image_screen_matches_batch_across_microbatches(
         streaming_image_screen,
         synth_png_pixels,
     )
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
     docs = [
         (0, "reference image text alpha"),
@@ -898,7 +852,7 @@ def test_streaming_image_screen_matches_batch_across_microbatches(
         (r.width, r.height): (r.n_images, r.n_known, r.known_ratio_micro)
         for r in run_stream_to_batch(
             streaming_image_screen(ref, synth_png_pixels(stream)),
-            str(tmp_path / "ckpt_is"), "stream_is", "complete",
+            "stream_is", "complete",
         ).collect()
     }
     want = {
@@ -925,7 +879,6 @@ def test_streaming_lang_screen_matches_batch_across_microbatches(
         lang_filtered_corpus,
         lang_scores_stream,
     )
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
     docs = [
         (1, "xyz zyx xzy yxz zxy xyz zyx", "aa", "s0"),
@@ -952,7 +905,7 @@ def test_streaming_lang_screen_matches_batch_across_microbatches(
     )
     drained = run_stream_to_batch(
         lang_scores_stream(df, stream, k=16),
-        str(tmp_path / "ckpt_ls"), "stream_ls", "complete",
+        "stream_ls", "complete",
     )
     got = {tuple(r) for r in gate_drained_scores(df, drained).collect()}
     want = {tuple(r)
@@ -986,31 +939,15 @@ def test_transform_with_state_mapstate_daily_counts(spark, tmp_path):
     # read the first batch's MapState back, not restart from zero
     (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:12]))
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[12:]))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     stream = (
         spark.readStream.schema("k bigint, day string")
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    out = daily_counts_by_key(stream, "k", "day")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_daily")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    from pyspark.sql import functions as F
-
+    drained = drain_tws(daily_counts_by_key(stream, "k", "day"), "tws_daily")
     got = {
         (r.k, r.day): r.n
-        for r in spark.table("tws_daily")
+        for r in drained
         .groupBy("k", "day")
         .agg(F.max("n").alias("n"))
         .collect()
@@ -1019,7 +956,7 @@ def test_transform_with_state_mapstate_daily_counts(spark, tmp_path):
     assert got == dict(want)
     # update-mode means cumulative re-emissions exist; the raw table must
     # contain an intermediate (first-batch) value below the final count
-    raw = spark.table("tws_daily").collect()
+    raw = drained.collect()
     assert any(r.n < want[(r.k, r.day)] for r in raw)
 
 
@@ -1049,31 +986,17 @@ def test_transform_with_state_mapstate_bulk_read_across_batches(
     ]
     (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:18]))
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[18:]))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     stream = (
         spark.readStream.schema("k bigint, day string")
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    out = daily_counts_by_key(stream, "k", "day")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_daily_bulk")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drained = drain_tws(
+        daily_counts_by_key(stream, "k", "day"), "tws_daily_bulk"
     )
-    q.awaitTermination(120)
-    from pyspark.sql import functions as F
-
     got = {
         (r.k, r.day): r.n
-        for r in spark.table("tws_daily_bulk")
+        for r in drained
         .groupBy("k", "day")
         .agg(F.max("n").alias("n"))
         .collect()
@@ -1081,7 +1004,7 @@ def test_transform_with_state_mapstate_bulk_read_across_batches(
     want = Counter((r["k"], r["day"]) for r in rows)
     assert got == dict(want)
     # prior state was actually read back: an intermediate emission exists
-    raw = spark.table("tws_daily_bulk").collect()
+    raw = drained.collect()
     assert any(r.n < want[(r.k, r.day)] for r in raw)
 
 
@@ -1108,27 +1031,34 @@ def test_transform_with_state_timers_flush_idle_keys(spark, tmp_path):
     b2 = [{"k": 3, "cents": 500} for _ in range(2)]
     (src / "a.json").write_text("\n".join(json.dumps(r) for r in b1))
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in b2))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     stream = (
         spark.readStream.schema("k bigint, cents bigint")
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
     out = totals_with_idle_flush(stream, "k", "cents", idle_ms=0)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_timers")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("tws_timers").collect()
+    # not drain_tws: in ProcessingTime mode Spark runs a no-data batch
+    # after every batch, so an availableNow query never terminates (and
+    # processAllAvailable never returns); stop it once both files are in
+    conf = {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    with scoped_conf(spark, conf):
+        q = (
+            out.writeStream.format("memory")
+            .queryName("tws_timers")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+    try:
+        for _ in range(600):  # at most 120 s
+            if sum(p["numInputRows"] for p in q.recentProgress) >= len(b1 + b2):
+                break
+            q.awaitTermination(0.2)
+        rows = spark.table("tws_timers").collect()
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("tws_timers")
     flushed = {r.k: (r.n, r.sum_cents) for r in rows if r.flushed}
     live = {(r.k, r.n, r.sum_cents) for r in rows if not r.flushed}
     # the three idle keys were flushed with their exact batch-1 totals
@@ -1158,9 +1088,7 @@ def test_transform_with_state_eventtime_session_close(spark, tmp_path):
         pytest.skip(f"google.protobuf unavailable ({status}): {detail}")
     import json
 
-    from killrweather_spark.streaming.stateful import (
-        eventtime_session_finalize,
-    )
+    from killrweather_spark.streaming.stateful import eventtime_session_finalize
 
     src = tmp_path / "in"
     src.mkdir()
@@ -1173,11 +1101,6 @@ def test_transform_with_state_eventtime_session_close(spark, tmp_path):
     b3 = [{"k": 9, "ts": "2025-01-01 12:00:00", "cents": 700}]
     for name, rows in (("a.json", b1), ("b.json", b2), ("c.json", b3)):
         (src / name).write_text("\n".join(json.dumps(r) for r in rows))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     stream = (
         spark.readStream.schema("k bigint, ts timestamp, cents bigint")
         .option("maxFilesPerTrigger", 1)
@@ -1187,16 +1110,7 @@ def test_transform_with_state_eventtime_session_close(spark, tmp_path):
     out = eventtime_session_finalize(
         stream, "k", "ts", "cents", gap_seconds=600
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_et_sessions")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table("tws_et_sessions").collect()
+    rows = drain_tws(out, "tws_et_sessions").collect()
     closed = {r.k: (r.n, r.sum_cents) for r in rows if r.closed}
     live = {(r.k, r.n, r.sum_cents) for r in rows if not r.closed}
     # the idle sessions closed with their exact totals once the
@@ -1223,7 +1137,6 @@ def test_streaming_semantic_screen_matches_batch_across_microbatches(
     cluster-mates known."""
     from killrweather_spark.functions.ann_index import build_ivf_index
     from killrweather_spark.functions.pq import streaming_semantic_screen
-    from killrweather_spark.streaming.pipeline import run_stream_to_batch
 
     base = {
         0: [1.0, 0.9] + [0.01] * 14,
@@ -1255,7 +1168,7 @@ def test_streaming_semantic_screen_matches_batch_across_microbatches(
         r.vec_id: (r.cell, r.n_candidates, r.n_known, r.best_adot)
         for r in run_stream_to_batch(
             streaming_semantic_screen(spark, idx, stream),
-            str(tmp_path / "ckpt_ss"), "stream_ss", "complete",
+            "stream_ss", "complete",
         ).collect()
     }
     want = {
@@ -1333,12 +1246,9 @@ def test_checkpoint_manager_choice(spark, tmp_path):
     assert checkpoint_manager_for(spark, str(tmp_path)) == FS_CHECKPOINT_MANAGER
     assert checkpoint_manager_for(spark, f"file://{tmp_path}") == FS_CHECKPOINT_MANAGER
     assert checkpoint_manager_for(spark, "hdfs://nn/ckpt") is None
-    spark.conf.set("fs.defaultFS", "hdfs://nn:8020")
-    try:
+    with scoped_conf(spark, {"fs.defaultFS": "hdfs://nn:8020"}):
         assert checkpoint_manager_for(spark, "/ckpt") is None
         assert checkpoint_manager_for(spark, f"file://{tmp_path}") == FS_CHECKPOINT_MANAGER
-    finally:
-        spark.conf.unset("fs.defaultFS")
 
 
 def test_restart_under_local_checkpoint_manager_changes_nothing(spark, tmp_path):
@@ -1403,29 +1313,17 @@ def test_transform_with_state_running_totals_nulls(spark, tmp_path):
     ]
     (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:10]))
     (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[10:]))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     stream = (
         spark.readStream.schema("k bigint, cents bigint")
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    q = (
-        running_totals_by_key(stream, "k", "cents")
-        .writeStream.format("memory")
-        .queryName("tws_totals_nulls")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drained = drain_tws(
+        running_totals_by_key(stream, "k", "cents"), "tws_totals_nulls"
     )
-    q.awaitTermination(120)
     got = {
         r.k: (r.n, r.sum_cents)
-        for r in spark.table("tws_totals_nulls")
+        for r in drained
         .groupBy("k")
         .agg(F.max("n").alias("n"), F.max("sum_cents").alias("sum_cents"))
         .collect()
@@ -1438,3 +1336,111 @@ def test_transform_with_state_running_totals_nulls(spark, tmp_path):
         for k in (None, 0, 1)
     }
     assert got == want
+
+
+def test_scoped_conf_restores_prior_and_unsets_absent(spark):
+    """scoped_conf puts a key's prior value back and unsets a key that had
+    none, on a normal exit and when the body raises."""
+    key, absent = "spark.sql.shuffle.partitions", "spark.kw.test.scoped_absent"
+    prior = spark.conf.get(key)
+    assert spark.conf.get(absent, None) is None
+    conf = {key: str(int(prior) + 1), absent: "x"}
+    with scoped_conf(spark, conf):
+        assert spark.conf.get(key) == conf[key]
+        assert spark.conf.get(absent) == "x"
+    assert spark.conf.get(key) == prior
+    assert spark.conf.get(absent, None) is None
+    with pytest.raises(RuntimeError, match="body failed"), scoped_conf(spark, conf):
+        raise RuntimeError("body failed")
+    assert spark.conf.get(key) == prior
+    assert spark.conf.get(absent, None) is None
+
+
+def test_run_stream_to_batch_owns_its_sink_and_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """Two concurrent drains with one label do not collide on the sink
+    name; after a drain, and after a drain whose UDF raises, no new temp
+    view is left in the catalog and no checkpoint directory in TMPDIR."""
+    import json
+    import tempfile
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.json").write_text("\n".join(json.dumps({"k": k}) for k in range(6)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    def stream():
+        return spark.readStream.schema("k bigint").json(str(src))
+
+    # rows sleep, so both drains are active at once, and the first to
+    # finish would read the other's sink if they shared a name
+    def slow(seconds):
+        return F.udf(lambda k: time.sleep(seconds) or k, "bigint")
+
+    before = views()
+    frames = [
+        stream().groupBy((slow(0.2)("k") % 2).alias("p")).count(),
+        stream().groupBy((slow(0.5)("k") % 3).alias("p")).count(),
+    ]
+    with ThreadPoolExecutor(2) as pool:
+        results = list(pool.map(
+            lambda f: sorted(map(tuple, run_stream_to_batch(f, "same_label").collect())),
+            frames,
+        ))
+    assert results == [[(0, 3), (1, 3)], [(0, 2), (1, 2), (2, 2)]]
+    assert views() == before
+    assert os.listdir(tmp) == []
+
+    boom = F.udf(lambda k: int(f"not a number {k}"), "bigint")
+    with pytest.raises(Exception, match="not a number"):
+        run_stream_to_batch(stream().select(boom("k").alias("k")), "failing", "append")
+    assert views() == before
+    assert os.listdir(tmp) == []
+
+
+def test_tws_operator_drains_in_a_session_started_before_the_shim(tmp_path):
+    """A vanilla session built before any TWS query launches its JVM
+    before the protobuf shim exists, so the TWS worker gets the shim only
+    through sc.environment, which a Python function captures when it is
+    built: the operator itself must forward it.  Runs in a fresh
+    interpreter whose PYTHONPATH lacks the shim."""
+    import json
+    import subprocess
+    import sys
+
+    import google.protobuf
+
+    # <shim>/google/protobuf when the runtime is the vendored one
+    shim = os.path.dirname(os.path.dirname(google.protobuf.__path__[0]))
+    if not os.path.isfile(os.path.join(shim, "sitecustomize.py")):
+        pytest.skip("google.protobuf is installed, no shim to withhold")
+    src = tmp_path / "in"
+    src.mkdir()
+    rows = [{"k": i % 2, "cents": i} for i in range(6)]
+    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows))
+    script = f"""
+import sys
+sys.path.insert(0, {str(pathlib.Path(__file__).resolve().parent.parent)!r})
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+from killrweather_spark.streaming.stateful import drain_tws, running_totals_by_key
+stream = spark.readStream.schema("k bigint, cents bigint").json({str(src)!r})
+out = drain_tws(running_totals_by_key(stream, "k", "cents"), "vanilla")
+print(sorted(tuple(r) for r in out.collect()))
+"""
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(p for p in paths if p != shim)}
+    done = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.strip().splitlines()[-1] == "[(0, 3, 6), (1, 3, 9)]"
