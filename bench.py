@@ -442,7 +442,10 @@ def _isolated_measure(name: str) -> float | None:
     """Re-measure one query in a FRESH interpreter + SparkSession (idle JVM).
 
     The in-bench number includes session-lifetime contention (heap pressure,
-    persisted lineages, codegen cache churn from 50 neighbors); the gate's
+    persisted lineages, JIT state shaped by 50 neighbors, and codegen cache
+    evictions: the session names generated classes without stage ids, so a
+    re-run query hits the compiled-class cache unless its neighbors pushed
+    it past ``session.CODEGEN_CACHE_MAX_ENTRIES``).  The gate's
     job is to tell a genuinely-slower query from a noisy neighborhood, so a
     flagged regression is automatically re-run in isolation and BOTH numbers
     land in the bench tail — attribution is mechanical, not narrative.

@@ -11,7 +11,11 @@ shapes, then best-of-``--runs`` with the same count/collect action the
 bench uses), printing one JSON line.  ``--noop`` instead drives every
 column of every row through ``format("noop")`` (guide §1.4) — use it
 when adjudicating whether a win is real compute or column-pruned away
-by count().  ``--plan-dir`` writes ``<name>.txt`` with
+by count().  ``compiles`` reports, per query, what its runs after the
+first spent compiling: whole-stage codegen classes and milliseconds
+(``codegen``, ``codegen_ms``; 0 classes once the session's cache holds
+the query) and the JVM JIT's milliseconds (``jit_ms``) over the same
+runs.  ``--plan-dir`` writes ``<name>.txt`` with
 ``explain("formatted")`` (AQE off for stable printing) per query.
 """
 
@@ -36,7 +40,7 @@ os.environ.setdefault("SPARK_GRAFT_SF_DIR", SF_DIR)
 
 def main() -> None:
     from killrweather_spark.api.inventory import REGISTRY
-    from killrweather_spark.session import get_session, scoped_conf
+    from killrweather_spark.session import codegen_compiles, get_session, scoped_conf
 
     args = sys.argv[1:]
     runs = 2
@@ -66,12 +70,17 @@ def main() -> None:
             _df = _spec.fn(spark, SF_DIR)
             _df.count() if len(_df.columns) > 6 else len(_df.collect())
 
+    jvm = spark.sparkContext._jvm
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     timings: dict[str, float] = {}
+    compiles: dict[str, dict] = {}
     for name in names:
         spec = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"qtime:{name}")
         best = None
-        for _ in range(runs):
+        for run in range(runs):
+            if run == 1:
+                (n0, ms0), jit0 = codegen_compiles(spark), jit.getTotalCompilationTime()
             t0 = time.perf_counter()
             df = spec.fn(spark, SF_DIR)
             if use_noop:
@@ -81,6 +90,10 @@ def main() -> None:
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
+        if runs > 1:
+            n1, ms1 = codegen_compiles(spark)
+            compiles[name] = {"codegen": n1 - n0, "codegen_ms": round(ms1 - ms0, 1),
+                              "jit_ms": jit.getTotalCompilationTime() - jit0}
         spark.sparkContext.setJobDescription(None)
         if plan_dir:
             Path(plan_dir).mkdir(parents=True, exist_ok=True)
@@ -92,7 +105,7 @@ def main() -> None:
             (Path(plan_dir) / f"{name}.txt").write_text(buf.getvalue())
 
     print(json.dumps({"sf_dir": SF_DIR, "noop": use_noop, "runs": runs,
-                      "queries": timings,
+                      "queries": timings, "compiles": compiles,
                       "total": round(sum(timings.values()), 3)}))
     spark.stop()
 

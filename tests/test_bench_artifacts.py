@@ -68,15 +68,20 @@ def test_vs_artifact_refuses_cross_cpu(tmp_path, monkeypatch):
 
 def test_repo_artifacts_are_not_the_8core_run():
     """The quarantine itself: the round-13 8-core scaling leg must never
-    masquerade as a round artifact again — any BENCH_r14+ artifact and
-    the rolling bench_out.json must carry a full-core cpus stamp and must
-    not equal the BENCH_r13_c8.json query map."""
+    masquerade as a round artifact again.  Neither the rolling
+    bench_out.json nor any BENCH_r14+ artifact may equal the
+    BENCH_r13_c8.json query map, and the round-pinned artifacts, whose
+    writes are gated on the main run's core count, must carry a full-core
+    cpus stamp.  bench_out.json is every run's own record, stamped with
+    that run's cores, so a scaling leg may leave it at 8."""
     c8 = json.loads((ROOT / "BENCH_r13_c8.json").read_text())
     c8_queries = (c8.get("parsed") or c8)["queries"]
-    for p in [ROOT / "bench_out.json", *ROOT.glob("BENCH_r1[4-9]*_full.json")]:
+    pinned = list(ROOT.glob("BENCH_r1[4-9]*_full.json"))
+    for p in [ROOT / "bench_out.json", *pinned]:
         d = json.loads(p.read_text())
         assert d["queries"] != c8_queries, p.name
-        assert d.get("cpus", 32) == 32, (p.name, d.get("cpus"))
+        if p in pinned:
+            assert d.get("cpus", 32) == 32, (p.name, d.get("cpus"))
 
 
 def test_shuffle_width_is_input_size_derived(tmp_path, monkeypatch):

@@ -10,9 +10,13 @@ from pyspark.sql import functions as F
 
 from killrweather_spark.api.inventory import REGISTRY
 from killrweather_spark.plans import checks
-from killrweather_spark.session import scoped_conf
+from killrweather_spark.session import (
+    CODEGEN_CACHE_MAX_ENTRIES,
+    codegen_compiles,
+    scoped_conf,
+)
 from killrweather_spark.sources.readers import load_table
-from tests.conftest import SF01
+from tests.conftest import SF001, SF01
 
 
 def test_point_lookup_pushes_filters_and_prunes_columns(spark):
@@ -809,3 +813,25 @@ def test_url_curation_stays_in_codegen_single_shuffle(spark):
     assert "BatchEvalPython" not in plan3 and "MapInPandas" not in plan3
     assert checks.unpartitioned_window_count(cap) == 0, plan3
     assert checks.shuffle_count(cap) == 2, plan3
+
+
+def test_repeated_queries_compile_no_new_classes(spark):
+    """The session compiles each whole-stage-codegen class once: a second
+    sweep over the bench's registry queries, with its count/collect action,
+    finds every generated class in the cache.  Either the stage-id suffix
+    in class names (AQE numbers the stages in planning order) or a cache
+    smaller than the working set makes it compile again."""
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_MAX_ENTRIES)
+    names = ("tfidf_cosine_pairs", "incremental_daily_stats", "star_join_revenue")
+
+    def sweep() -> int:
+        before = codegen_compiles(spark)[0]
+        for name in names:
+            df = REGISTRY[name].fn(spark, SF001)
+            df.count() if len(df.columns) > 6 else len(df.collect())
+        return codegen_compiles(spark)[0] - before
+
+    sweep()  # compiles whatever earlier tests did not leave in the cache
+    assert sweep() == 0
