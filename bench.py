@@ -12,12 +12,15 @@ truncates.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
 import sys
+import threading
 import time
 from pathlib import Path
+from typing import Callable
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -216,6 +219,79 @@ ENV_DRIFT_BAND = (0.75, 1.35)
 DRIFT_ATTEST_TOL = 0.10
 
 
+def _regressed(now: float, then: float) -> bool:
+    return now > then * REGRESSION_RATIO and now - then > REGRESSION_FLOOR_SEC
+
+
+def best_of(fn: Callable[[], object], runs: int) -> float:
+    """Best wall seconds of up to ``runs`` calls of ``fn``: the harness's
+    only timing loop (the bench, its probes, the isolated re-measure and
+    ``scripts/qtime.py`` all call it).
+
+    Best-of, not mean: run 1 absorbs one-time costs (codegen compile,
+    broadcast build, file listing); a later run is the repeatable cost a
+    resident engine pays — the number that scales.  Plateau stop: a fresh
+    JVM's first executions pay interpreter/C1 tiers, so best-of-2 reads
+    30-50% high for codegen-heavy queries (measured: 5.2 -> 1.6 -> 1.2 ->
+    1.1s on minhash_similarity_estimate).  TWO consecutive runs failing to
+    improve the best by 10% end the loop (one strike stopped a run early
+    at 1.09s on a query whose true plateau was 0.92s — still drifting
+    ~7%/run at the cut).  The stop cannot come before run 3 and the run
+    that triggers it still counts, so for ``runs <= 3`` this is exactly
+    the minimum over ``runs`` calls."""
+    best, strikes = float("inf"), 0
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn()
+        dt = time.perf_counter() - t0
+        strikes = strikes + 1 if dt > best * 0.9 else 0
+        best = min(best, dt)
+        if strikes == 2:
+            break
+    return best
+
+
+def run_action(df) -> int:
+    """The bench's action: count wide results, collect narrow ones."""
+    return df.count() if len(df.columns) > 6 else len(df.collect())
+
+
+def _query_sec(spark, spec, runs: int) -> float:
+    return round(best_of(lambda: run_action(spec.fn(spark, SF_DIR)), runs), 3)
+
+
+# Tier up the JIT on representative query shapes (agg / join /
+# explode-groupBy) before any timing: without this, whichever query the
+# interleave puts FIRST reads 30-50% high on a fresh JVM, and its recorded
+# number moves round-over-round whenever the headline list grows and
+# shifts positions (the r7 minhash_similarity_estimate false flag).
+WARM_SHAPES = ("daily_stats", "star_join_revenue", "minhash_lsh_pairs")
+
+
+def warm_up(spark, shapes: tuple[str, ...] = WARM_SHAPES) -> None:
+    """Warm the JVM + parquet reader/codegen paths with trivial actions so
+    per-query timings measure the query, not session startup (first
+    parquet scan of a session pays classloading + codegen compilation),
+    then run each query in ``shapes`` once.  Untimed, so the cost lands on
+    bench wall, not on any query's number."""
+    from killrweather_spark.api.inventory import REGISTRY
+
+    spark.range(1).count()
+    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
+    for name in shapes:
+        if name in REGISTRY:
+            run_action(REGISTRY[name].fn(spark, SF_DIR))
+
+
+_PROBE_BUF = b"\x5a" * (1 << 20)
+
+
+def _sha_loop(rounds: int) -> None:
+    d = b""
+    for _ in range(rounds):
+        d = hashlib.sha256(d + _PROBE_BUF).digest()
+
+
 def _cpu_probe() -> float:
     """Engine-free host-speed probe: SHA-256 over 256 MiB of fixed
     bytes — no Spark, no JVM, no I/O, no dependence on the workload
@@ -224,18 +300,7 @@ def _cpu_probe() -> float:
     workload moved the same way.  A fleet that slowed while the probe
     did not is the uniform-true-regression signature the median
     normalization would otherwise absorb."""
-    import hashlib
-
-    buf = b"\x5a" * (1 << 20)
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        d = b""
-        for _ in range(256):
-            d = hashlib.sha256(d + buf).digest()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return best
+    return best_of(lambda: _sha_loop(256), 3)
 
 
 def _parallel_probe() -> float:
@@ -249,28 +314,17 @@ def _parallel_probe() -> float:
     NEEDS many cores at once can see.  Its round-over-round ratio is
     the third attestation signal next to per-core speed (_cpu_probe)
     and the storage path (_io_probe)."""
-    import hashlib
-    import threading
-
     n = min(32, os.cpu_count() or 8)
-    buf = b"\x5a" * (1 << 20)
 
-    def work() -> None:
-        d = b""
-        for _ in range(64):
-            d = hashlib.sha256(d + buf).digest()
-
-    best = None
-    for _ in range(3):
-        threads = [threading.Thread(target=work) for _ in range(n)]
-        t0 = time.perf_counter()
+    def fan_out() -> None:
+        threads = [threading.Thread(target=_sha_loop, args=(64,))
+                   for _ in range(n)]
         for t in threads:
             t.start()
         for t in threads:
             t.join()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return best
+
+    return best_of(fan_out, 3)
 
 
 def _io_probe() -> float | None:
@@ -294,18 +348,16 @@ def _io_probe() -> float | None:
         path = os.path.join(SF_DIR, "lineitem.parquet")
         if not os.path.exists(path):
             return None
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
+
+        def scan() -> None:
             con = duckdb.connect()
             con.execute(
                 "SELECT sum(l_extendedprice * l_discount), count(*) "
                 f"FROM read_parquet('{path}')"
             ).fetchall()
             con.close()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        return best
+
+        return best_of(scan, 3)
     except Exception as e:  # pragma: no cover - environment-dependent
         print(f"bench io probe unavailable ({e!r}); attestation degrades "
               "to the CPU probe only", file=sys.stderr)
@@ -378,63 +430,38 @@ def _prior_bench(
     falling back to a different prior would defeat the audit."""
     root = Path(__file__).resolve().parent
     if artifact is not None:
-        p = Path(artifact)
-        if not p.is_absolute():
-            p = root / p
-        try:
-            d = json.loads(p.read_text())
-        except (OSError, json.JSONDecodeError) as e:
-            raise SystemExit(
-                f"--vs-artifact {artifact}: unreadable or invalid JSON "
-                f"({e})"
-            ) from e
-        parsed = d.get("parsed") or d
-        if not isinstance(parsed, dict):
-            raise SystemExit(
-                f"--vs-artifact {artifact}: payload is not an object"
-            )
-        q = parsed.get("queries")
-        if not q or parsed.get("sf") != sf:
-            raise SystemExit(
-                f"--vs-artifact {artifact}: no query map at sf={sf} "
-                f"(artifact sf={parsed.get('sf')})"
-            )
-        if parsed.get("cpus") not in (None, BENCH_CPUS):
-            raise SystemExit(
-                f"--vs-artifact {artifact}: recorded at cpus="
-                f"{parsed.get('cpus')} but this run uses cpus={BENCH_CPUS} "
-                "— cross-cpu timings are not comparable"
-            )
-        return (
-            p.name,
-            q,
-            parsed.get("cpu_probe_sec"),
-            parsed.get("io_probe_sec"),
-            parsed.get("par_probe_sec"),
+        candidates = [root / artifact]  # an absolute path replaces root
+    else:
+        candidates = [root / "bench_out.json"] + sorted(
+            root.glob("BENCH_r*.json"), key=_round_num, reverse=True
         )
-    candidates = [root / "bench_out.json"] + sorted(
-        root.glob("BENCH_r*.json"), key=_round_num, reverse=True
-    )
     for p in candidates:
         try:
             d = json.loads(p.read_text())
             parsed = d.get("parsed") or d
             q = parsed.get("queries")
-        except (json.JSONDecodeError, AttributeError, OSError):
-            continue
-        if parsed.get("cpus") not in (None, BENCH_CPUS):
-            # A scaling-leg artifact (different core count) is not a valid
-            # baseline for this run; legacy artifacts without the stamp
-            # are accepted unchanged.
-            continue
-        if q and parsed.get("sf") == sf:
-            return (
-                p.name,
-                q,
-                parsed.get("cpu_probe_sec"),
-                parsed.get("io_probe_sec"),
-                parsed.get("par_probe_sec"),
-            )
+        except (json.JSONDecodeError, AttributeError, OSError) as e:
+            why = f"unreadable, invalid JSON or not an object ({e})"
+        else:
+            if parsed.get("cpus") not in (None, BENCH_CPUS):
+                # A scaling-leg artifact (different core count) is not a
+                # valid baseline for this run; legacy artifacts without
+                # the stamp are accepted unchanged.
+                why = (f"recorded at cpus={parsed.get('cpus')} but this run "
+                       f"uses cpus={BENCH_CPUS} — cross-cpu timings are not "
+                       "comparable")
+            elif not q or parsed.get("sf") != sf:
+                why = f"no query map at sf={sf} (artifact sf={parsed.get('sf')})"
+            else:
+                return (
+                    p.name,
+                    q,
+                    parsed.get("cpu_probe_sec"),
+                    parsed.get("io_probe_sec"),
+                    parsed.get("par_probe_sec"),
+                )
+        if artifact is not None:
+            raise SystemExit(f"--vs-artifact {artifact}: {why}")
     return None
 
 
@@ -452,42 +479,12 @@ def _isolated_measure(name: str) -> float | None:
     """
     import subprocess
 
-    snippet = (
-        "import json, os, sys, time\n"
-        f"sys.path.insert(0, {str(Path(__file__).resolve().parent)!r})\n"
-        "from killrweather_spark.api.inventory import REGISTRY\n"
-        "from killrweather_spark.session import get_session\n"
-        "spark = get_session(app_name='killrweather_spark_bench_isolated')\n"
-        "spark.range(1).count()\n"
-        f"spark.read.parquet(os.path.join({SF_DIR!r}, 'region.parquet')).count()\n"
-        f"spec = REGISTRY[{name!r}]\n"
-        # Run to a JIT plateau, not a fixed count: a fresh JVM's first
-        # executions pay interpreter/C1 tiers, so best-of-2 reads 30-50%
-        # high for codegen-heavy queries (measured: 5.2 -> 1.6 -> 1.2 ->
-        # 1.1s on minhash_similarity_estimate).  TWO consecutive runs
-        # failing to improve the best by 10% end the loop (one strike
-        # stopped a run early at 1.09s on a query whose true plateau was
-        # 0.92s — still drifting ~7%/run at the cut); cap at 7 runs.
-        "best, strikes = None, 0\n"
-        "for _ in range(7):\n"
-        "    t0 = time.perf_counter()\n"
-        f"    df = spec.fn(spark, {SF_DIR!r})\n"
-        "    df.count() if len(df.columns) > 6 else len(df.collect())\n"
-        "    dt = time.perf_counter() - t0\n"
-        "    if best is not None and dt > best * 0.9:\n"
-        "        strikes += 1\n"
-        "        if strikes >= 2:\n"
-        "            best = min(best, dt)\n"
-        "            break\n"
-        "    else:\n"
-        "        strikes = 0\n"
-        "    best = dt if best is None else min(best, dt)\n"
-        "print(json.dumps({'isolated': round(best, 3)}))\n"
-        "spark.stop()\n"
-    )
+    root = str(Path(__file__).resolve().parent)
+    code = (f"import sys; sys.path.insert(0, {root!r}); "
+            f"import bench; bench._isolated({name!r})")
     try:
         out = subprocess.run(
-            [sys.executable, "-c", snippet],
+            [sys.executable, "-c", code],
             capture_output=True, text=True, timeout=600, check=True,
         )
         for line in reversed(out.stdout.strip().splitlines()):
@@ -498,6 +495,19 @@ def _isolated_measure(name: str) -> float | None:
     except (subprocess.SubprocessError, OSError):
         return None
     return None
+
+
+def _isolated(name: str) -> None:
+    """The fresh interpreter's side of _isolated_measure: session warm-up
+    without the JIT-shape queries, then up to 7 runs to a JIT plateau
+    (best_of), printed as one JSON line."""
+    from killrweather_spark.api.inventory import REGISTRY
+    from killrweather_spark.session import get_session
+
+    spark = get_session(app_name="killrweather_spark_bench_isolated")
+    warm_up(spark, ())
+    print(json.dumps({"isolated": _query_sec(spark, REGISTRY[name], 7)}))
+    spark.stop()
 
 
 def _current_round() -> int | None:
@@ -567,49 +577,21 @@ def main() -> None:
             raise SystemExit("--vs-artifact requires a PATH argument")
         vs_artifact = sys.argv[idx + 1]
 
-    probe_start = _cpu_probe()
-    io_probe_start = _io_probe()
-    par_probe_start = _parallel_probe()
+    probes = (_cpu_probe, _io_probe, _parallel_probe)
+    probes_start = [probe() for probe in probes]
 
     spark = get_session(app_name="killrweather_spark_bench")
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
-    # Warm the JVM + parquet reader/codegen paths with trivial actions so
-    # per-query timings measure the query, not session startup (first parquet
-    # scan of a session pays classloading + codegen compilation).
-    spark.range(1).count()
-    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
-    # Tier up the JIT on representative query shapes (agg / join /
-    # explode-groupBy) before any timing: without this, whichever query
-    # the interleave puts FIRST reads 30-50% high on a fresh JVM, and
-    # its recorded number moves round-over-round whenever the headline
-    # list grows and shifts positions (the r7 minhash_similarity_estimate
-    # false flag).  Untimed, so the cost lands on bench wall, not on any
-    # query's number.
-    for _warm in ("daily_stats", "star_join_revenue", "minhash_lsh_pairs"):
-        _spec = REGISTRY.get(_warm)
-        if _spec is not None:
-            _df = _spec.fn(spark, SF_DIR)
-            _df.count() if len(_df.columns) > 6 else len(_df.collect())
+    warm_up(spark)
 
-    # Steady-state timing: best of 2 runs per query.  Run 1 absorbs one-time
-    # costs (codegen compile, broadcast build, file listing); run 2 is the
-    # repeatable cost a resident engine pays — the number that scales.
-    timings: dict[str, float] = {}
-    for name in _interleaved(HEADLINE):
-        spec = REGISTRY.get(name)
-        if spec is None:
-            continue
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = spec.fn(spark, SF_DIR)
-            df.count() if len(df.columns) > 6 else len(df.collect())
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+    timings = {
+        name: _query_sec(spark, REGISTRY[name], 2)
+        for name in _interleaved(HEADLINE)
+        if name in REGISTRY
+    }
 
     # NON-HEADLINE rotation (r12 judge: the headline covers ~half the
     # registry; the rest executed in the oracle sweep but was never
@@ -619,31 +601,12 @@ def main() -> None:
     # ~|non-headline|/10 rounds.  Kept OUT of the headline total and the
     # drift gate: the headline stays a stable longitudinal metric, and a
     # rotating row rarely has a same-SF prior to gate against.
-    others: dict[str, float] = {}
     non_headline = sorted(set(REGISTRY) - set(HEADLINE))
-    if non_headline:
-        root = Path(__file__).resolve().parent
-        rounds = [
-            int(mm.group(1))
-            for f in root.glob("CORRECTNESS_r*.json")
-            if (mm := re.search(r"CORRECTNESS_r(\d+)\.json$", f.name))
-        ]
-        rnd = (max(rounds) + 1) if rounds else 0
-        start = (rnd * 10) % len(non_headline)
-        slice_names = [
-            non_headline[(start + i) % len(non_headline)]
-            for i in range(min(10, len(non_headline)))
-        ]
-        for name in slice_names:
-            spec = REGISTRY[name]
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = spec.fn(spark, SF_DIR)
-                df.count() if len(df.columns) > 6 else len(df.collect())
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            others[name] = round(best, 3)
+    start = (_current_round() or 0) * 10 % max(len(non_headline), 1)
+    others: dict[str, float] = {}
+    for i in range(min(10, len(non_headline))):
+        name = non_headline[(start + i) % len(non_headline)]
+        others[name] = _query_sec(spark, REGISTRY[name], 2)
 
     # Drift adjudication, mechanical (no more manual re-measure notes in
     # the round record): every shared-subset query whose in-bench number
@@ -659,17 +622,12 @@ def main() -> None:
     drift: dict[str, dict] = {}
     regressions: dict[str, dict] = {}
     isolated: dict[str, float | None] = {k: None for k in timings}
-    probe_end = _cpu_probe()
-    io_probe_end = _io_probe()
-    par_probe_end = _parallel_probe()
     # min of the two legs = the host's least-contended speed this session
-    cpu_probe_sec = round(min(probe_start, probe_end), 4)
-    io_probe_sec = (
-        round(min(p for p in (io_probe_start, io_probe_end) if p), 4)
-        if (io_probe_start or io_probe_end)
-        else None
+    # (the io probe reads None where it is unavailable)
+    cpu_probe_sec, io_probe_sec, par_probe_sec = (
+        round(min(legs), 4) if (legs := [t for t in (a, b) if t]) else None
+        for a, b in zip(probes_start, [probe() for probe in probes])
     )
-    par_probe_sec = round(min(par_probe_start, par_probe_end), 4)
 
     prior_name = None
     env_drift_ratio = 1.0
@@ -718,15 +676,13 @@ def main() -> None:
                 if abs(env_drift_ratio / r - 1) <= DRIFT_ATTEST_TOL
             ]
             agree = bool(agreeing)
+            shown = ", ".join(f"{k} {r:.3f}x" for k, r in probe_ratios.items())
             # A single-probe attestation where the OTHER probe disagrees
             # is weaker evidence than full agreement: a genuine uniform
             # regression that coincidentally lands within tolerance of
             # one probe's ratio would otherwise be silently normalized.
             # Name the attesting probe so adjudication can see it.
             if agree and len(agreeing) < len(probe_ratios):
-                shown = ", ".join(
-                    f"{k} {r:.3f}x" for k, r in probe_ratios.items()
-                )
                 print(
                     "bench drift note: fleet-median shift "
                     f"{env_drift_ratio:.3f}x attested by the "
@@ -736,23 +692,15 @@ def main() -> None:
                     file=sys.stderr,
                 )
             drift_attestation = {
-                "probe_ratio": round(probe_ratios["cpu"], 4)
-                if "cpu" in probe_ratios
-                else None,
-                "io_probe_ratio": round(probe_ratios["io"], 4)
-                if "io" in probe_ratios
-                else None,
-                "par_probe_ratio": round(probe_ratios["par"], 4)
-                if "par" in probe_ratios
-                else None,
+                key: round(probe_ratios[k], 4) if k in probe_ratios else None
+                for k, key in (("cpu", "probe_ratio"), ("io", "io_probe_ratio"),
+                               ("par", "par_probe_ratio"))
+            } | {
                 "fleet_median_ratio": round(env_drift_ratio, 4),
                 "attested_by": agreeing,
                 "verdict": "agree" if agree else "DISAGREE",
             }
             if not agree:
-                shown = ", ".join(
-                    f"{k} {r:.3f}x" for k, r in probe_ratios.items()
-                )
                 print(
                     "bench DRIFT ATTESTATION FAILED: fleet-median shift "
                     f"{env_drift_ratio:.3f}x vs engine-free probes "
@@ -780,26 +728,16 @@ def main() -> None:
             env_drift_ratio = 1.0
         for k, now in timings.items():
             then = prior_q.get(k)
-            norm_then = then * env_drift_ratio if then is not None else None
-            if (
-                then is not None
-                and now > norm_then * REGRESSION_RATIO
-                and now - norm_then > REGRESSION_FLOOR_SEC
-            ):
+            if then is not None and _regressed(now, then * env_drift_ratio):
                 drift[k] = {
                     "prior": then,
-                    "prior_env_normalized": round(norm_then, 3),
+                    "prior_env_normalized": round(then * env_drift_ratio, 3),
                     "in_bench": now,
                 }
         for k, v in drift.items():
             iso = _isolated_measure(k)
             v["isolated"] = isolated[k] = iso
-            norm_prior = v["prior"] * env_drift_ratio
-            still_slow = iso is None or (
-                iso > norm_prior * REGRESSION_RATIO
-                and iso - norm_prior > REGRESSION_FLOOR_SEC
-            )
-            if still_slow:
+            if iso is None or _regressed(iso, v["prior"] * env_drift_ratio):
                 v["resolution"] = "confirmed"
                 regressions[k] = v
             else:
@@ -830,7 +768,7 @@ def main() -> None:
         "others": others,
         "others_note": (
             f"rotating 10-of-{len(non_headline)} non-headline slice "
-            f"(round-keyed start {start if non_headline else 0}); not in "
+            f"(round-keyed start {start}); not in "
             "value/drift gate"
         ),
         "sf": sf,

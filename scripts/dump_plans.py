@@ -12,10 +12,8 @@ statically; the shipped session runs with AQE on.
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -27,10 +25,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 def main() -> None:
     from bench import HEADLINE
     from killrweather_spark.api.inventory import REGISTRY
-    from killrweather_spark.session import get_session
+    from killrweather_spark.plans.checks import formatted_plan
+    from killrweather_spark.session import get_session, scoped_conf
 
     spark = get_session(app_name="plan_dump")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     out = [
         "# PLANS — formatted physical plans for the headline queries",
@@ -46,11 +44,9 @@ def main() -> None:
         spec = REGISTRY.get(name)
         if spec is None:
             continue
-        df = spec.fn(spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", "```", buf.getvalue().rstrip(), "```", ""]
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            plan = formatted_plan(spec.fn(spark, SF_DIR))
+        out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
 
     (ROOT / "PLANS.md").write_text("\n".join(out))
     print(f"wrote {ROOT / 'PLANS.md'} ({len(HEADLINE)} queries)")

@@ -6,40 +6,89 @@ Usage::
     python scripts/qtime.py --noop NAME ...      # time via the noop sink
 
 Fresh-JVM leg of the A/B discipline: times the named REGISTRY queries
-with the bench methodology (warmup of the session + representative
-shapes, then best-of-``--runs`` with the same count/collect action the
-bench uses), printing one JSON line.  ``--noop`` instead drives every
-column of every row through ``format("noop")`` (guide §1.4) — use it
-when adjudicating whether a win is real compute or column-pruned away
-by count().  ``compiles`` reports, per query, what its runs after the
-first spent compiling: whole-stage codegen classes and milliseconds
-(``codegen``, ``codegen_ms``; 0 classes once the session's cache holds
-the query) and the JVM JIT's milliseconds (``jit_ms``) over the same
-runs.  ``--plan-dir`` writes ``<name>.txt`` with
-``explain("formatted")`` (AQE off for stable printing) per query.
+with the bench methodology (``bench.warm_up``, then ``bench.best_of``
+with the bench's count/collect action), printing one JSON line.  For
+``--runs`` N > 3 the bench's plateau stop applies: two runs in a row
+that fail to beat the best by 10% end a query's loop early.  ``--noop``
+instead drives every column of every row through ``format("noop")``
+(guide §1.4) — use it when adjudicating whether a win is real compute
+or column-pruned away by count().  ``compiles`` reports, per query,
+what its runs after the first spent compiling: whole-stage codegen
+classes and milliseconds (``codegen``, ``codegen_ms``; 0 classes once
+the session's cache holds the query) and the JVM JIT's milliseconds
+(``jit_ms``).  ``progress`` lists, per query, the progress records
+(``batchId``, ``durationMs`` breakdown, ``numInputRows``) of the
+streaming drains its last run started; ``[]`` for a batch query.
+``--plan-dir`` writes ``<name>.txt`` with the formatted physical plan
+(AQE off for stable printing) per query.
 """
 
 from __future__ import annotations
 
-import io
 import json
-import os
 import sys
-import time
-from contextlib import redirect_stdout
+import threading
 from pathlib import Path
 
-ROOT = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(ROOT))
+from pyspark.sql.streaming import StreamingQueryListener
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# the session factory derives the initial shuffle width from this dir;
-# pin the default into the env so harness and session agree when unset
-os.environ.setdefault("SPARK_GRAFT_SF_DIR", SF_DIR)
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from bench import SF_DIR, best_of, run_action, warm_up  # noqa: E402
+
+
+class DrainProgress(StreamingQueryListener):
+    """Progress records of every query started on the session.  Spark
+    calls onQueryStarted before ``start()`` returns and delivers a query's
+    terminated event after its last progress event, so the records are
+    complete once every query started has terminated."""
+
+    def __init__(self) -> None:
+        self.cond = threading.Condition()
+        self.records: dict = {}  # runId -> progress records, in start order
+        self.terminated: set = set()
+        self.since = 0  # queries started before the last mark()
+
+    def onQueryStarted(self, event) -> None:
+        with self.cond:
+            self.records[event.runId] = []
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        with self.cond:
+            self.records[p.runId].append({
+                "query": p.name,
+                "batchId": p.batchId,
+                "durationMs": p.durationMs,
+                "numInputRows": p.numInputRows,
+            })
+
+    def onQueryTerminated(self, event) -> None:
+        with self.cond:
+            self.terminated.add(event.runId)
+            self.cond.notify_all()
+
+    def mark(self) -> None:
+        """Leave the queries started so far out of the next take()."""
+        with self.cond:
+            self.since = len(self.records)
+
+    def take(self) -> list[dict]:
+        """Wait until every started query has terminated, then return the
+        records of those started since the last mark() and forget all."""
+        with self.cond:
+            self.cond.wait_for(lambda: self.terminated >= self.records.keys())
+            out = [r for recs in list(self.records.values())[self.since:]
+                   for r in recs]
+            self.records.clear()
+            self.terminated.clear()
+            self.since = 0
+        return out
 
 
 def main() -> None:
     from killrweather_spark.api.inventory import REGISTRY
+    from killrweather_spark.plans.checks import formatted_plan
     from killrweather_spark.session import codegen_compiles, get_session, scoped_conf
 
     args = sys.argv[1:]
@@ -47,65 +96,63 @@ def main() -> None:
     plan_dir: str | None = None
     use_noop = False
     names: list[str] = []
-    i = 0
-    while i < len(args):
-        a = args[i]
+    while args:
+        a = args.pop(0)
         if a == "--runs":
-            runs = int(args[i + 1]); i += 2
+            runs = int(args.pop(0))
         elif a == "--plan-dir":
-            plan_dir = args[i + 1]; i += 2
+            plan_dir = args.pop(0)
         elif a == "--noop":
-            use_noop = True; i += 1
+            use_noop = True
         else:
-            names.append(a); i += 1
+            names.append(a)
     if not names:
         sys.exit(__doc__)
 
     spark = get_session(app_name="qtime")
-    spark.range(1).count()
-    spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
-    for _warm in ("daily_stats", "star_join_revenue", "minhash_lsh_pairs"):
-        _spec = REGISTRY.get(_warm)
-        if _spec is not None:
-            _df = _spec.fn(spark, SF_DIR)
-            _df.count() if len(_df.columns) > 6 else len(_df.collect())
+    listener = DrainProgress()
+    spark.streams.addListener(listener)
+    warm_up(spark)
 
     jvm = spark.sparkContext._jvm
     jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     timings: dict[str, float] = {}
     compiles: dict[str, dict] = {}
+    progress: dict[str, list] = {}
     for name in names:
         spec = REGISTRY[name]
-        spark.sparkContext.setJobDescription(f"qtime:{name}")
-        best = None
-        for run in range(runs):
-            if run == 1:
-                (n0, ms0), jit0 = codegen_compiles(spark), jit.getTotalCompilationTime()
-            t0 = time.perf_counter()
+        after_first: list = []  # compile counters read at the end of run 1
+
+        def run() -> None:
+            listener.mark()
             df = spec.fn(spark, SF_DIR)
             if use_noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
-                df.count() if len(df.columns) > 6 else len(df.collect())
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+                run_action(df)
+            if not after_first:
+                after_first.extend((codegen_compiles(spark),
+                                    jit.getTotalCompilationTime()))
+
+        spark.sparkContext.setJobDescription(f"qtime:{name}")
+        timings[name] = round(best_of(run, runs), 3)
+        spark.sparkContext.setJobDescription(None)
+        progress[name] = listener.take()
         if runs > 1:
+            (n0, ms0), jit0 = after_first
             n1, ms1 = codegen_compiles(spark)
             compiles[name] = {"codegen": n1 - n0, "codegen_ms": round(ms1 - ms0, 1),
                               "jit_ms": jit.getTotalCompilationTime() - jit0}
-        spark.sparkContext.setJobDescription(None)
         if plan_dir:
             Path(plan_dir).mkdir(parents=True, exist_ok=True)
-            buf = io.StringIO()
             with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-                df = spec.fn(spark, SF_DIR)
-                with redirect_stdout(buf):
-                    df.explain("formatted")
-            (Path(plan_dir) / f"{name}.txt").write_text(buf.getvalue())
+                plan = formatted_plan(spec.fn(spark, SF_DIR))
+            # explain() prints the same string plus a newline
+            (Path(plan_dir) / f"{name}.txt").write_text(plan + "\n")
 
     print(json.dumps({"sf_dir": SF_DIR, "noop": use_noop, "runs": runs,
                       "queries": timings, "compiles": compiles,
+                      "progress": progress,
                       "total": round(sum(timings.values()), 3)}))
     spark.stop()
 

@@ -5,7 +5,8 @@ Round-13 postmortem: the driver's 8-core scaling leg overwrote
 drift gate would have baselined 32-core numbers against an 8-core run.
 The fixes pinned here: every artifact carries a ``cpus`` stamp, the
 baseline selector skips artifacts recorded at a different core count,
-and ``--vs-artifact`` refuses them loudly.
+and ``--vs-artifact`` refuses them loudly.  The harness's one timing
+loop, ``best_of``, is pinned here too, on fake clock readings.
 """
 
 from __future__ import annotations
@@ -178,3 +179,41 @@ def test_repo_main_run_is_32_cores():
     default bench run (SPARK_GRAFT_CPUS unset) writes the round artifact
     and an 8-core scaling leg does not."""
     assert bench._main_run_cpus() == 32
+
+
+def _fake_clock(monkeypatch, durations):
+    """Make bench.best_of read ``durations`` (seconds per call) from
+    perf_counter: each run reads 0.0 before and its duration after the
+    timed function.  Returns that function and the list of its calls."""
+    readings = [t for d in durations for t in (0.0, d)]
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: readings.pop(0))
+    calls: list[None] = []
+    return lambda: calls.append(None), calls
+
+
+@pytest.mark.parametrize("runs", [1, 2, 3])
+def test_best_of_up_to_three_runs_is_the_minimum(monkeypatch, runs):
+    """The plateau stop cannot fire before run 3, so runs <= 3 makes
+    exactly ``runs`` calls and returns their minimum, whatever the order."""
+    for durations in ([5.0, 4.9, 4.8], [1.0, 2.0, 3.0], [2.0, 1.0, 1.5]):
+        fn, calls = _fake_clock(monkeypatch, durations[:runs])
+        assert bench.best_of(fn, runs) == min(durations[:runs])
+        assert len(calls) == runs
+
+
+def test_best_of_stops_after_two_runs_without_a_10pct_gain(monkeypatch):
+    # run 2 is a 10% gain; runs 3 and 4 each miss 0.9 x best = 0.81
+    fn, calls = _fake_clock(monkeypatch, [1.0, 0.9, 0.85, 0.82, 0.1, 0.1, 0.1])
+    assert bench.best_of(fn, 7) == 0.82
+    assert len(calls) == 4
+
+
+def test_best_of_gain_resets_the_strike_count(monkeypatch):
+    # strike (run 2), gain resets (run 3), strike (run 4), gain (run 5),
+    # then two strikes in a row end the loop at run 7
+    fn, calls = _fake_clock(monkeypatch, [1.0, 0.95, 0.5, 0.49, 0.3, 0.29, 0.28])
+    assert bench.best_of(fn, 7) == 0.28
+    assert len(calls) == 7
+    fn, calls = _fake_clock(monkeypatch, [1.0, 0.95, 0.5, 0.49, 0.48, 0.1, 0.1])
+    assert bench.best_of(fn, 7) == 0.48
+    assert len(calls) == 5

@@ -1444,3 +1444,44 @@ print(sorted(tuple(r) for r in out.collect()))
     )
     assert done.returncode == 0, done.stderr[-3000:]
     assert done.stdout.strip().splitlines()[-1] == "[(0, 3, 6), (1, 3, 9)]"
+
+
+def test_drain_progress_collects_a_file_stream_drain(spark, tmp_path):
+    """qtime's progress listener: take() returns once the drains have
+    terminated, with one record per microbatch of the drains started
+    since mark() (qtime keeps a query's last run this way), whose
+    numInputRows sum to the input, and forgets what it returned."""
+    import json
+    import sys
+    import threading
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "scripts"))
+    from qtime import DrainProgress
+
+    src = tmp_path / "in"
+    src.mkdir()
+    rows = [{"k": i % 3, "cents": i} for i in range(12)]
+    (src / "a.json").write_text("\n".join(json.dumps(r) for r in rows[:5]))
+    (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows[5:]))
+    stream = (
+        spark.readStream.schema("k bigint, cents bigint")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    listener = DrainProgress()
+    spark.streams.addListener(listener)
+    try:
+        for _ in range(2):  # each drain reads both files afresh
+            listener.mark()
+            run_stream_to_batch(stream.groupBy("k").count(), "progress_probe")
+        taken: list = []
+        t = threading.Thread(target=lambda: taken.append(listener.take()), daemon=True)
+        t.start()
+        t.join(60)
+        assert not t.is_alive(), "take() still waiting after the drains ended"
+        assert listener.take() == []
+    finally:
+        spark.streams.removeListener(listener)
+    records = taken[0]
+    assert [r["batchId"] for r in records][:2] == [0, 1]  # one batch per file
+    assert sum(r["numInputRows"] for r in records) == len(rows)
