@@ -409,6 +409,14 @@ def _round_num(p: Path) -> tuple[int, int]:
     return (int(m.group(1)), 1 if m.group(2).endswith("_full") else 0)
 
 
+def _is_quarantined(p: Path) -> bool:
+    """BENCH_r{N}_c{cores}.json: a round's run at a reduced core count
+    (BENCH_r13_c8.json is the 8-core scaling leg that once overwrote a
+    round artifact), kept for reading but never a comparison baseline,
+    so it is left out of the scan before ``_round_num`` could warn."""
+    return re.fullmatch(r"BENCH_r\d+_c\d+\.json", p.name) is not None
+
+
 def _prior_bench(
     sf: float,
     artifact: str | None = None,
@@ -433,7 +441,8 @@ def _prior_bench(
         candidates = [root / artifact]  # an absolute path replaces root
     else:
         candidates = [root / "bench_out.json"] + sorted(
-            root.glob("BENCH_r*.json"), key=_round_num, reverse=True
+            (p for p in root.glob("BENCH_r*.json") if not _is_quarantined(p)),
+            key=_round_num, reverse=True,
         )
     for p in candidates:
         try:

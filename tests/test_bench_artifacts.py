@@ -67,6 +67,19 @@ def test_vs_artifact_refuses_cross_cpu(tmp_path, monkeypatch):
         bench._prior_bench(0.1, artifact=str(p))
 
 
+def test_quarantined_run_is_silent_and_never_a_baseline(tmp_path, monkeypatch, capsys):
+    """A misnamed round artifact still warns; a ``_cN`` quarantined run is
+    left out without a warning, even when it is the only same-SF,
+    same-cores candidate."""
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    _write(tmp_path / "BENCH_r13_sf01_full.json", sf=0.01, cpus=bench.BENCH_CPUS)
+    _write(tmp_path / "BENCH_r13_c8.json", cpus=bench.BENCH_CPUS)
+    assert bench._prior_bench(0.1) is None
+    err = capsys.readouterr().err
+    assert "BENCH_r13_sf01_full.json" in err
+    assert "BENCH_r13_c8.json" not in err
+
+
 def test_repo_artifacts_are_not_the_8core_run():
     """The quarantine itself: the round-13 8-core scaling leg must never
     masquerade as a round artifact again.  Neither the rolling
