@@ -1,42 +1,49 @@
 """Start the driver JVM from a class-data-sharing archive.
 
-A driver JVM loads over ten thousand Spark/Scala classes from the jars
-(12,449 archived after a one-query session).  A JDK AppCDS dynamic archive
-holds those classes pre-parsed; a JVM started with
-``-XX:SharedArchiveFile`` maps it instead of loading each class.
-``get_or_create`` keeps one such archive per Java build, Spark
-version and jars directory under ``cache_dir()``:
+A driver JVM loads over ten thousand Spark/Scala classes from the jars.  A
+JDK AppCDS dynamic archive holds those classes pre-parsed; a JVM started
+with ``-XX:SharedArchiveFile`` maps it instead of loading each class.
+``get_or_create`` keeps one such archive per Java build, Spark version and
+jars directory under ``cache_dir()``:
 
 - hit: the archive is passed in front of the caller's
   ``spark.driver.extraJavaOptions``;
-- miss: the JVM is started with ``-XX:ArchiveClassesAtExit=<key>.<pid>.part``
-  and the file is renamed to ``<key>.jsa`` only after that JVM exited with
-  status 0 and logged the finished dump.  A partly written archive is never
-  published: on JDK 17 a truncated one makes the JVM abort at start.
+- miss: the session starts as the caller asked, with nothing added, and a
+  background process (``dump``, at idle CPU priority, one per archive at a
+  time) runs a short session of its own in a JVM started with
+  ``-XX:ArchiveClassesAtExit=<key>.<pid>.part``.  The part is renamed to
+  ``<key>.jsa`` only after that JVM exited with status 0 and logged the
+  finished dump: on JDK 17 a truncated archive makes the JVM abort at start.
+  The session that missed never runs in dump mode, so its speed and its
+  exit do not depend on the dump.
 
 JDK 17 neither dumps nor maps an archive while a non-empty directory is on
 the classpath, and Spark always puts ``$SPARK_CONF_DIR`` there.  When that
 directory holds only ``*.template`` files (what a Spark distribution ships)
-the launch points ``SPARK_CONF_DIR`` at an empty directory in the cache,
-which changes nothing Spark reads.  In every other case the session starts
-without the archive and one ``logging`` line gives the reason.
+the dump and every mapping launch point ``SPARK_CONF_DIR`` at an empty
+directory in the cache, which changes nothing Spark reads.  In every other
+case the session starts without the archive and one ``logging`` line gives
+the reason.
 
-The JVM's CDS log goes to ``<key>.<pid>.{map,dump}.log`` next to the archive,
-not to standard output, where scripts read their results.
+The JVM's CDS log goes to ``<key>.<pid>.{map,dump}.log`` next to the
+archive, not to standard output, where scripts read their results.  A
+failed dump keeps its log as ``<key>.failed.log``; sessions start without
+the archive until that file is deleted.
 """
 
 from __future__ import annotations
 
-import atexit
 import contextlib
+import fcntl
 import hashlib
 import logging
 import os
 import re
 import shutil
 import subprocess
+import sys
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pyspark
 from pyspark import SparkContext
@@ -48,17 +55,13 @@ log = logging.getLogger(__name__)
 
 JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 
-# How long the interpreter's exit waits for a dumping JVM.  On 4 cores a
-# one-query session's dump (12 k classes, 148 MB) takes about 10 s, the
-# test suite's session JVM (214 MB) about 26 s.
-DUMP_WAIT_S = 180
+# <key>.<pid>.part (a dump in progress), <key>.<pid>.tmp (its scratch
+# directory), <key>.<pid>.dump.log and <key>.<pid>.map.log (the JVM's CDS
+# log), where pid is the Python process
+_PID_FILE = re.compile(r"^\w+\.(\d+)\.(part|tmp|dump\.log|map\.log)$")
 
-# <key>.<pid>.part (a dump in progress), <key>.<pid>.dump.log and
-# <key>.<pid>.map.log (the JVM's CDS log), where pid is the Python process
-_PID_FILE = re.compile(r"^\w+\.(\d+)\.(part|dump\.log|map\.log)$")
-
-# JDK 17's lines for an archive it opened and then would not use
-_REFUSAL = re.compile(r"UseSharedSpaces: (.*)|(Unable to use shared archive.*)")
+# JDK 17's reasons for not using an archive it opened (``fail_continue``)
+_REASON = re.compile(r"UseSharedSpaces: (.*)")
 
 
 def cache_dir() -> str:
@@ -124,101 +127,65 @@ def _alive(pid: int) -> bool:
     return True
 
 
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        with contextlib.suppress(OSError):
+            os.remove(path)
+
+
 def _sweep(cds: str) -> None:
-    """Remove the parts and logs of processes that are gone (a dump killed
-    mid-way, a failed dump's log)."""
+    """Remove the parts, scratch directories and logs of processes that are
+    gone (a dump killed mid-way, a session's unread log)."""
     for name in os.listdir(cds):
         m = _PID_FILE.match(name)
         if m and not _alive(int(m.group(1))):
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(cds, name))
+            _remove(os.path.join(cds, name))
+
+
+def _dumping(lock: str) -> bool:
+    """Whether a dump process holds ``lock`` (the kernel drops the lock when
+    that process dies, however it dies)."""
+    with open(lock, "a") as f:
+        try:
+            fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            return True
+    return False
+
+
+def refusal(cds_log: str) -> str | None:
+    """None when the JVM's CDS log shows the top (dynamic) archive mapped,
+    else why it was not used.  A failed attempt at one address followed by
+    a mapping at another is a use, not a refusal."""
+    mapped = ("Mapped dynamic region" in cds_log
+              and "The top archive failed to load" not in cds_log
+              and "Unable to map shared spaces" not in cds_log)
+    if mapped:
+        return None
+    m = _REASON.search(cds_log)
+    return m.group(1) if m else "the top archive was not mapped"
 
 
 @dataclass
 class Launch:
-    """How to start the driver JVM with the archive: the merged
-    ``extraJavaOptions``, the environment for the launch and the files."""
+    """How to start the driver JVM: on a hit the merged
+    ``extraJavaOptions``, the environment for the launch and the CDS log;
+    on a miss nothing (``java_options`` None) but the archive to dump."""
 
-    java_options: str
-    env: dict[str, str]
-    archive: str  # <key>.jsa: mapped on a hit, published on a miss
-    log: str
-    part: str | None = None  # the dump target on a miss
-
-    def started(self, spark: SparkSession) -> None:
-        if self.part is None:
-            self._check_mapped()
-        else:
-            atexit.register(self._publish, spark.sparkContext._gateway.proc)
-
-    def failed(self) -> None:
-        """The JVM died before it sent its port.  A mapped archive is removed
-        (a damaged file aborts the JVM), so that the next start dumps anew."""
-        if self.part is None:
-            with contextlib.suppress(OSError):
-                os.remove(self.archive)
-            what = f"from class-data archive {self.archive} (removed)"
-        else:
-            what = "while dumping a class-data archive"
-        log.warning("driver JVM exited at start %s; starting it without the archive", what)
-
-    def _check_mapped(self) -> None:
-        """Turn a refusal in the JVM's CDS log into one warning and remove
-        the refused archive, so that the next start dumps a new one."""
-        try:
-            with open(self.log) as f:
-                text = f.read()
-            os.remove(self.log)
-        except OSError:
-            return
-        m = _REFUSAL.search(text)
-        if m:
-            with contextlib.suppress(OSError):
-                os.remove(self.archive)
-            log.warning("driver JVM refused class-data archive %s (%s); "
-                        "started without it", self.archive, m.group(1) or m.group(2))
-
-    def _publish(self, proc: subprocess.Popen) -> None:
-        """At interpreter exit: let the JVM exit (it dumps as it goes) and
-        publish the archive only if it exited with 0 after a finished dump."""
-        if proc.poll() is None:
-            # stop Spark first: its accumulator server would report the
-            # JVM's exit as an EOFError traceback
-            if SparkContext._active_spark_context is not None:
-                SparkContext._active_spark_context.stop()
-            if proc.stdin:
-                proc.stdin.close()  # the gateway exits when its stdin closes
-            try:
-                proc.wait(timeout=DUMP_WAIT_S)
-            except subprocess.TimeoutExpired:
-                log.warning("class-data archive dump still running after %d s; "
-                            "not published", DUMP_WAIT_S)
-                return
-        try:
-            with open(self.log) as f:
-                written = "Written dynamic archive" in f.read()
-        except OSError:
-            written = False
-        if proc.returncode != 0 or not written:
-            with contextlib.suppress(OSError):
-                os.remove(self.part)
-            log.warning("class-data archive dump did not finish (JVM exit status "
-                        "%s); not published, CDS log in %s", proc.returncode, self.log)
-            return
-        os.replace(self.part, self.archive)
-        os.remove(self.log)
-        cds = os.path.dirname(self.archive)
-        for name in os.listdir(cds):
-            if name.endswith(".jsa") and name != os.path.basename(self.archive):
-                with contextlib.suppress(OSError):
-                    os.remove(os.path.join(cds, name))
+    archive: str
+    java_options: str | None = None
+    env: dict[str, str] = field(default_factory=dict)
+    log: str | None = None
 
 
 def plan(caller_options: str | None) -> Launch | None:
     """The archive launch for the next driver JVM, or None to start it as
-    the caller asked: when a gateway is running already (no JVM starts), or
-    with one logged reason when the archive cannot be used."""
-    if SparkContext._gateway is not None:
+    the caller asked and dump nothing: when a gateway is running already
+    (no JVM starts), when another process is dumping the archive, or with
+    one logged reason when the archive cannot be used."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None
     spark_home = _find_spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
@@ -239,27 +206,194 @@ def plan(caller_options: str | None) -> Launch | None:
         java, java_version = _java()
         key = archive_key(java, java_version, pyspark.__version__, _jars(spark_home))
         _sweep(cds)
+        dumping = _dumping(os.path.join(cds, f"{key}.lock"))
     except OSError as e:
         log.warning("driver JVM starts without class-data archive: cache %s unusable (%s)",
                     cds, e)
         return None
     archive = os.path.join(cds, f"{key}.jsa")
-    stem = os.path.join(cds, f"{key}.{os.getpid()}")
-    hit = os.path.isfile(archive)
-    cds_log = f"{stem}.map.log" if hit else f"{stem}.dump.log"
-    log.info("driver JVM %s class-data archive %s", "maps" if hit else "dumps at exit", archive)
-    ours = [
-        f"-XX:SharedArchiveFile={archive}" if hit else f"-XX:ArchiveClassesAtExit={stem}.part",
-        f"-Xlog:cds*=info:file={cds_log}:uptime,level,tags:filecount=0",
-        "-Xlog:all=warning,cds*=off:stdout",  # the JVM default, minus CDS
-    ]
-    return Launch(
-        java_options=" ".join(ours + ([caller_options] if caller_options else [])),
-        env={"SPARK_CONF_DIR": empty_conf},
-        archive=archive,
-        log=cds_log,
-        part=None if hit else f"{stem}.part",
+    if os.path.isfile(archive):
+        cds_log = os.path.join(cds, f"{key}.{os.getpid()}.map.log")
+        log.info("driver JVM maps class-data archive %s", archive)
+        ours = [
+            f"-XX:SharedArchiveFile={archive}",
+            f"-Xlog:cds*=info:file={cds_log}:uptime,level,tags:filecount=0",
+            "-Xlog:all=warning,cds*=off:stdout",  # the JVM default, minus CDS
+        ]
+        return Launch(
+            archive,
+            java_options=" ".join(ours + ([caller_options] if caller_options else [])),
+            env={"SPARK_CONF_DIR": empty_conf},
+            log=cds_log,
+        )
+    failed = os.path.join(cds, f"{key}.failed.log")
+    if os.path.exists(failed):
+        log.warning("driver JVM starts without class-data archive: its dump failed "
+                    "(log in %s; delete that file to dump again)", failed)
+        return None
+    if dumping:
+        log.info("driver JVM starts without class-data archive: %s is being dumped", archive)
+        return None
+    log.info("driver JVM starts without class-data archive; a background process dumps %s",
+             archive)
+    return Launch(archive)
+
+
+def _check_mapped(launch: Launch) -> None:
+    """Turn a refusal in the JVM's CDS log into one warning.  The archive
+    stays: a refusal comes from this launch (a classpath or heap setting
+    that differs from the dump's), and the next launch may map it."""
+    try:
+        with open(launch.log) as f:
+            text = f.read()
+        os.remove(launch.log)
+    except OSError:
+        return
+    reason = refusal(text)
+    if reason is not None:
+        log.warning("driver JVM refused class-data archive %s (%s); started without it",
+                    launch.archive, reason)
+
+
+def _start_dump(archive: str) -> None:
+    """Start ``dump(archive)`` in a background process.  A short-lived
+    intermediate process starts it, so that it is no child of this one; it
+    stays in this process's session, where its idle CPU priority ranks it
+    below this process's work (a new session would be scheduled as a peer
+    group), and it holds none of our standard streams, so a caller that
+    reads this process's output never waits for it."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if not k.startswith("PYSPARK_GATEWAY_")}
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    subprocess.run(
+        [sys.executable, "-c", "import subprocess, sys; subprocess.Popen(sys.argv[1:])",
+         sys.executable, "-c",
+         "import sys; from killrweather_spark.jvm_archive import dump; dump(sys.argv[1])",
+         archive],
+        stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+        cwd=os.path.dirname(archive), env=env, check=False)
+
+
+def publish(returncode: int, part: str, cds_log: str, archive: str) -> bool:
+    """Rename a dump's part to the archive if its JVM exited with 0 and
+    logged the finished dump, and remove other keys' files; else remove the
+    part and keep the log as ``<key>.failed.log``."""
+    try:
+        with open(cds_log) as f:
+            written = "Written dynamic archive" in f.read()
+    except OSError:
+        written = False
+    base = archive[:-len(".jsa")]
+    if returncode != 0 or not written:
+        _remove(part)
+        with contextlib.suppress(OSError):
+            os.replace(cds_log, f"{base}.failed.log")
+        return False
+    os.replace(part, archive)
+    _remove(cds_log)
+    cds, key = os.path.split(base)
+    for name in os.listdir(cds):
+        if name.endswith((".jsa", ".lock", ".failed.log")) and not name.startswith(key + "."):
+            _remove(os.path.join(cds, name))
+    return True
+
+
+def _exercise(spark: SparkSession, scratch: str) -> None:
+    """What engine sessions run first, so that the dump holds their
+    classes: SQL with shuffles, joins, a window and codegen, a parquet round
+    trip, Arrow transfers both ways, a Python UDF, and the ingest pipeline's
+    three streaming queries over one upload."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from killrweather_spark.streaming.pipeline import (
+        parsed_observations,
+        start_daily_temp_rollup,
+        start_ingest,
     )
+
+    table = os.path.join(scratch, "table")
+    spark.range(4000).selectExpr("id % 13 AS k", "id AS v", "cast(id AS string) AS s") \
+        .write.parquet(table)
+    t = spark.read.parquet(table)
+    agg = t.groupBy("k").agg(F.sum("v").alias("sv"), F.countDistinct("s").alias("n"))
+    w = Window.partitionBy("k").orderBy(F.desc("v"))
+    (t.join(agg, "k").withColumn("r", F.row_number().over(w)).where("r <= 2")
+     .join(F.broadcast(spark.range(5).withColumnRenamed("id", "k")), "k")
+     .orderBy("k", "r").collect())
+    spark.createDataFrame(agg.toPandas()).count()
+    t.select(F.udf(len, "int")("s").alias("n")).agg(F.sum("n")).collect()
+    t.createOrReplaceTempView("t")
+    spark.sql("SELECT k, percentile_approx(v, 0.5), collect_set(s % 3) FROM t "
+              "GROUP BY k HAVING count(*) > 1").collect()
+
+    staging = os.path.join(scratch, "staging")
+    os.makedirs(staging)
+    with open(os.path.join(staging, "0.csv"), "w") as f:
+        f.write("724940:23234,2008,01,01,00,11.7,-0.6,1023.8,50,7.2,2,0.5,1.0\n"
+                "725030:14732,2008,01,01,00,3.3,-5.0,1010.1,270,4.1,4,0.0,0.0\n")
+    obs = parsed_observations(spark.readStream.option("maxFilesPerTrigger", 1).text(staging))
+    out = {n: os.path.join(scratch, n) for n in ("raw", "precip", "temp", "ckpt")}
+    trig = {"availableNow": True}
+    queries = [*start_ingest(obs, out["raw"], out["precip"], out["ckpt"], trigger=trig),
+               start_daily_temp_rollup(obs, out["temp"], out["ckpt"], trigger=trig)]
+    for q in queries:
+        q.awaitTermination()
+
+
+def dump(archive: str) -> None:
+    """The background dump process that ``get_or_create`` starts on a miss:
+    at idle CPU priority and one per archive at a time (``<key>.lock``), run
+    ``_exercise`` in a session whose JVM writes the archive at exit, then
+    ``publish`` it.  The process's output and the JVM's go to the dump log."""
+    with contextlib.suppress(AttributeError, OSError):
+        os.sched_setscheduler(0, os.SCHED_IDLE, os.sched_param(0))
+    cds = os.path.dirname(archive)
+    base = archive[:-len(".jsa")]
+    lock = open(f"{base}.lock", "a")  # held until this process exits
+    try:
+        fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        return  # another process is dumping it
+    if os.path.exists(archive):
+        return
+    stem = f"{base}.{os.getpid()}"
+    part, cds_log, scratch = f"{stem}.part", f"{stem}.dump.log", f"{stem}.tmp"
+    fd = os.open(cds_log, os.O_WRONLY | os.O_CREAT | os.O_APPEND, 0o644)
+    os.dup2(fd, 1)
+    os.dup2(fd, 2)
+    os.close(fd)
+    os.makedirs(scratch)
+    os.chdir(scratch)
+    os.environ.update(SPARK_CONF_DIR=os.path.join(cds, "conf"), SPARK_LOCAL_DIRS=scratch,
+                      TMPDIR=scratch)
+    from killrweather_spark.session import session_builder
+
+    # the archive holds classes, not compiled code: C1 alone (about a third
+    # less CPU than tiered C2) and a small heap serve the dump as well
+    builder = (session_builder("killrweather_spark-cds-dump", master="local[2]")
+               .config("spark.driver.memory", "512m")
+               .config(JAVA_OPTIONS, f"-XX:ArchiveClassesAtExit={part} -Xlog:cds*=info "
+                                     f"-XX:TieredStopAtLevel=1 -Djava.io.tmpdir={scratch}"))
+    proc = None
+    try:
+        spark = builder.getOrCreate()
+        proc = spark.sparkContext._gateway.proc
+        _exercise(spark, scratch)
+        spark.stop()
+        # the gateway exits when its stdin closes, and the JVM writes the
+        # archive as it exits: on 4 cores about 17 k classes, 180 MB, 13 s.
+        # No timeout: at idle priority a busy host may hold the dump back
+        # for long, and a killed dump would count as a failed one
+        proc.stdin.close()
+        proc.wait()
+    finally:
+        if proc is not None and proc.poll() is None:
+            proc.kill()
+            proc.wait()
+        publish(proc.returncode if proc else -1, part, cds_log, archive)
+        os.chdir(cds)
+        _remove(scratch)
 
 
 @contextlib.contextmanager
@@ -278,19 +412,31 @@ def _environ(env: dict[str, str]) -> Iterator[None]:
 
 def get_or_create(builder: SparkSession.Builder, caller_options: str | None) -> SparkSession:
     """``builder.getOrCreate()`` with the driver JVM started from the
-    class-data archive when one can be used (see the module docstring).
+    class-data archive when one can be used, or the archive's dump started
+    in the background on a miss (see the module docstring).
     ``caller_options`` are the ``extraJavaOptions`` already set on
     ``builder``; they are kept after the archive's own."""
     launch = plan(caller_options)
     if launch is None:
         return builder.getOrCreate()
+    if launch.java_options is None:
+        spark = builder.getOrCreate()
+        try:
+            _start_dump(launch.archive)
+        except OSError as e:
+            log.warning("class-data archive dump not started: %s", e)
+        return spark
     try:
         with _environ(launch.env):
             spark = builder.config(JAVA_OPTIONS, launch.java_options).getOrCreate()
     except PySparkRuntimeError as e:
         if e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
-        launch.failed()
+        # a damaged archive aborts the JVM: remove it, so that the next
+        # session dumps a new one
+        _remove(launch.archive)
+        log.warning("driver JVM exited at start from class-data archive %s (removed); "
+                    "starting it without the archive", launch.archive)
         return builder.config(JAVA_OPTIONS, caller_options or "").getOrCreate()
-    launch.started(spark)
+    _check_mapped(launch)
     return spark

@@ -23,18 +23,26 @@ config + manual SparkConf, we centralize one builder with scale-aware defaults:
   the first timed pass and none in the five after it, and CPU per query
   falls by about a sixth, mostly C2 JIT work on re-generated bytecode.
 - The driver JVM starts from a class-data-sharing archive
-  (``jvm_archive.py``) when ``get_session`` launches it: the 12-15 k
-  Spark/Scala classes a session loads are mapped pre-parsed instead of
-  loaded from the jars.  The first session dumps the archive when its JVM
-  exits (10-20 s more, once); every later one maps it.  Measured on 4
-  cores with ``perfbench/run.py`` (30 s runs, medians of alternating
-  pairs): ``setup_s`` 19.7 -> 14.3 s on ingest and 23.7 -> 16.9 s on
-  registry, with CPU per operation and peak RSS unchanged.  The archive
-  (150-170 MB) lives in ``${XDG_CACHE_HOME:-~/.cache}/killrweather_spark/cds/``,
-  one per Java build, Spark version and jars directory; delete that
-  directory to clear it, and the next session dumps a new one.  Without
-  the archive (a real file in ``$SPARK_CONF_DIR``, an unwritable cache, a
-  refused archive) the session starts as before and one warning says why.
+  (``jvm_archive.py``) when ``get_session`` launches it: the Spark/Scala
+  classes a session loads are mapped pre-parsed instead of loaded from the
+  jars.  A session that finds no archive starts as before and leaves a
+  background process at idle CPU priority that dumps one (about 55 s and
+  65 CPU-seconds on 4 cores, 1.4 GB peak RSS, once per host); every later
+  session maps it.  Measured on 4 cores with ``perfbench/run.py`` (30 s
+  runs, alternating pairs, medians): with the archive, ``setup_s`` 22.0 ->
+  16.1 s on ingest (10/10 pairs) and 25.3 -> 17.7 s on registry (4/4),
+  CPU per operation and peak RSS within 3 %; the first run on an empty
+  cache read 23.5 -> 22.0 s on ingest and 29.8 -> 26.8 s on registry
+  (3 and 2 pairs), with registry CPU per operation 13 % higher while the
+  dump ran beside it.  Not understood yet: in a fresh session some
+  queries read 13-18 % slower once warm with the archive mapped
+  (``bench._isolated_measure``, 3 alternating rounds).  The archive
+  (about 180 MB) lives in
+  ``${XDG_CACHE_HOME:-~/.cache}/killrweather_spark/cds/``, one per Java
+  build, Spark version and jars directory; delete that directory to clear
+  it, and the next session starts a new dump.  Without the archive (a real
+  file in ``$SPARK_CONF_DIR``, an unwritable cache, a refused archive, a
+  failed dump) the session starts as before and one warning says why.
 """
 
 from __future__ import annotations
@@ -127,8 +135,21 @@ def get_session(
     Defaults target local-mode testing but every setting is the one you'd
     want on a 1000-executor cluster too (AQE, UTC, Arrow, Kryo).
     """
+    extra_conf = extra_conf or {}
+    builder = session_builder(app_name, master, shuffle_partitions)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
+    spark = jvm_archive.get_or_create(builder, extra_conf.get(jvm_archive.JAVA_OPTIONS))
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def session_builder(
+    app_name: str, master: str | None = None, shuffle_partitions: int | None = None
+) -> SparkSession.Builder:
+    """The builder behind ``get_session``, with the engine's settings."""
     cpus = int(DEFAULT_CPUS) if DEFAULT_CPUS.isdigit() else 32
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config(
@@ -158,12 +179,6 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    extra_conf = extra_conf or {}
-    for k, v in extra_conf.items():
-        builder = builder.config(k, v)
-    spark = jvm_archive.get_or_create(builder, extra_conf.get(jvm_archive.JAVA_OPTIONS))
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
 
 
 def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
