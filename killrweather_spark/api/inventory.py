@@ -2257,34 +2257,42 @@ def q_domain_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # T1-T7: streaming semantics (drained deterministically with availableNow)
 # --------------------------------------------------------------------------
 
-_EVENT_STAGE_DIRS: dict[str, str] = {}
+_STAGE_DIRS: dict[tuple[str, str], str] = {}
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as a bounded *stream* (parquet file source): the
-    deterministic stand-in for the Kafka topic — the parse/agg/sink graph
-    downstream is identical either way (S1 ≙ S6-as-stream)."""
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """A testdata table as a bounded *stream* (parquet file source): the
+    deterministic stand-in for its ingest topic.  The file stream source
+    needs an explicit schema; take the *actual* physical schema from a
+    (metadata-only) batch read so the stream sees exactly what load_table
+    sees across testdata generations.  It also wants a directory: stage
+    the single parquet file behind a symlink (testdata itself is
+    read-only).  One stage dir per (process, sf_dir, table), cached — a
+    fresh mkdtemp per invocation leaked a directory on every streaming
+    registry query (bench/sweep runs call these repeatedly), against
+    run_stream_to_batch's leak-free contract."""
     import os
     import tempfile
 
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    schema = spark.read.parquet(path).schema
+    stage = _STAGE_DIRS.get((sf_dir, table))
+    if stage is None or not os.path.isdir(stage):
+        stage = tempfile.mkdtemp(prefix=f"stream_{table}_")
+        os.symlink(path, os.path.join(stage, f"{table}.parquet"))
+        _STAGE_DIRS[(sf_dir, table)] = stage
+    return spark.readStream.schema(schema).parquet(stage)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a bounded *stream*: the deterministic stand-in
+    for the Kafka topic — the parse/agg/sink graph downstream is
+    identical either way (S1 ≙ S6-as-stream)."""
+    # nanosAsLong must precede the schema read: it decides how the
+    # TIMESTAMP(NANOS) column reads
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    # The file stream source needs an explicit schema; take the *actual*
-    # physical schema from a (metadata-only) batch read so the stream sees
-    # exactly what load_table sees across testdata generations.
-    schema = spark.read.parquet(path).schema
-    # The file stream source wants a directory; stage the single parquet
-    # file behind a symlink (testdata itself is read-only).  One stage dir
-    # per (process, sf_dir), cached — a fresh mkdtemp per invocation leaked
-    # a directory on every streaming registry query (bench/sweep runs call
-    # these repeatedly), against run_stream_to_batch's leak-free contract.
-    stage = _EVENT_STAGE_DIRS.get(sf_dir)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="stream_events_")
-        os.symlink(path, os.path.join(stage, "events.parquet"))
-        _EVENT_STAGE_DIRS[sf_dir] = stage
-    stream = spark.readStream.schema(schema).parquet(stage)
+    stream = _table_stream(spark, sf_dir, "events")
     ts_type = dict(stream.dtypes)["ts"]
     if ts_type in ("bigint", "long"):
         stream = stream.withColumn(
@@ -11115,46 +11123,6 @@ def _wire_passage_dedup() -> None:
 _wire_passage_dedup()
 
 
-_DOC_STAGE_DIRS: dict[str, str] = {}
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents table as a bounded *stream* (parquet file source) —
-    the deterministic stand-in for a document-ingest topic, mirroring
-    ``_events_stream`` (same cached symlink staging, testdata read-only)."""
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    stage = _DOC_STAGE_DIRS.get(sf_dir)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="stream_documents_")
-        os.symlink(path, os.path.join(stage, "documents.parquet"))
-        _DOC_STAGE_DIRS[sf_dir] = stage
-    return spark.readStream.schema(schema).parquet(stage)
-
-
-_EMB_STAGE_DIRS: dict[str, str] = {}
-
-
-def _embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings table as a bounded *stream* (parquet file source) —
-    the deterministic stand-in for a vector-ingest topic, mirroring
-    ``_documents_stream``."""
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(path).schema
-    stage = _EMB_STAGE_DIRS.get(sf_dir)
-    if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="stream_embeddings_")
-        os.symlink(path, os.path.join(stage, "embeddings.parquet"))
-        _EMB_STAGE_DIRS[sf_dir] = stage
-    return spark.readStream.schema(schema).parquet(stage)
-
-
 def _wire_streaming_semantic_screen() -> None:
     from killrweather_spark.functions.pq import (
         streaming_semantic_screen_sql,
@@ -11190,7 +11158,7 @@ def _wire_streaming_semantic_screen() -> None:
             emb, _ivf_index_dir(sf_dir), n_centroids=8, iters=2
         )
         screened = streaming_semantic_screen(
-            spark, idx, _embeddings_stream(spark, sf_dir)
+            spark, idx, _table_stream(spark, sf_dir, "embeddings")
         )
         return run_stream_to_batch(
             screened, "stream_semantic_screen", "complete"
@@ -11233,7 +11201,7 @@ def _wire_streaming_semantic_screen_fixed() -> None:
         idx = ensure_ivf_index(
             emb, _ivf_index_dir(sf_dir), n_centroids=8, iters=2
         )
-        arrivals = _embeddings_stream(spark, sf_dir).filter(
+        arrivals = _table_stream(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") < 1000
         )
         screened = streaming_semantic_screen(spark, idx, arrivals)
@@ -11319,7 +11287,7 @@ def _wire_streaming_lm() -> None:
 
         model_docs = load_table(spark, sf_dir, "documents")
         scored = bigram_lm_scores_stream(
-            model_docs, _documents_stream(spark, sf_dir)
+            model_docs, _table_stream(spark, sf_dir, "documents")
         )
         return run_stream_to_batch(scored, "stream_lm_score", "complete")
 
@@ -11697,7 +11665,7 @@ def _wire_streaming_image_screen() -> None:
         # single Python worker (the streaming_semantic_screen fan-out
         # rule, pq.py).  Per-row synthesis/decode is placement-free.
         arrivals = synth_png_pixels(
-            _documents_stream(spark, sf_dir).repartition(
+            _table_stream(spark, sf_dir, "documents").repartition(
                 spark.sparkContext.defaultParallelism
             )
         )
@@ -11930,7 +11898,9 @@ def _wire_streaming_lang_screen() -> None:
         )
 
         docs = load_table(spark, sf_dir, "documents")
-        scored = lang_scores_stream(docs, _documents_stream(spark, sf_dir))
+        scored = lang_scores_stream(
+            docs, _table_stream(spark, sf_dir, "documents")
+        )
         drained = run_stream_to_batch(scored, "stream_lang_screen", "complete")
         return gate_drained_scores(docs, drained)
 
@@ -11967,7 +11937,7 @@ def _wire_streaming_passage_screen() -> None:
         docs = load_table(spark, sf_dir, "documents")
         ref = docs.filter(F.col("doc_id") % 2 == 0)
         screened = streaming_passage_screen(
-            ref, _documents_stream(spark, sf_dir)
+            ref, _table_stream(spark, sf_dir, "documents")
         )
         return run_stream_to_batch(
             screened, "stream_passage_screen", "complete"
@@ -12270,7 +12240,7 @@ def _wire_streaming_substring_screen() -> None:
         docs = load_table(spark, sf_dir, "documents")
         ref = docs.filter(F.col("doc_id") % 2 == 0)
         screened = streaming_substring_screen(
-            ref, _documents_stream(spark, sf_dir)
+            ref, _table_stream(spark, sf_dir, "documents")
         )
         return run_stream_to_batch(
             screened, "stream_substring_screen", "complete"

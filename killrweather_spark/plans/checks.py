@@ -180,7 +180,7 @@ def _windowspec_has_partition(exprs_group: str) -> bool | None:
     return has_part if found else None
 
 
-def unpartitioned_window_count(df: DataFrame) -> int:
+def unpartitioned_window_count(df: DataFrame | str) -> int:
     """Window physical nodes with an EMPTY partition spec — the shape that
     compiles to ``Exchange SinglePartition`` + one task holding the whole
     input, the canonical scale-killer.
@@ -197,8 +197,12 @@ def unpartitioned_window_count(df: DataFrame) -> int:
     Counts ``Window`` and ``WindowInPandas`` nodes (``WindowGroupLimit``
     always accompanies a counted ``Window``).  Both layouts are pinned
     by fixture tests (tests/test_plans.py) so a Spark-upgrade drift
-    fails loudly instead of silently miscounting."""
-    lines = formatted_plan(df).splitlines()
+    fails loudly instead of silently miscounting.  Takes the frame or its
+    formatted plan: format it before any action, since a plan formatted
+    after one prints the adaptive final plan beside the initial one and
+    counts each Window twice."""
+    plan = df if isinstance(df, str) else formatted_plan(df)
+    lines = plan.splitlines()
     cnt = 0
     for i, ln in enumerate(lines):
         if not re.match(r"\(\d+\) (Window|WindowInPandas)$", ln.strip()):

@@ -1,7 +1,12 @@
 from __future__ import annotations
 
-import pytest
+from dataclasses import dataclass
 
+import pytest
+from pyspark.sql import DataFrame
+
+from killrweather_spark.api.inventory import REGISTRY
+from killrweather_spark.plans import checks
 from killrweather_spark.session import get_session
 from killrweather_spark.streaming.protobuf_shim import enable_vendored_protobuf
 
@@ -26,3 +31,32 @@ def spark(tmp_path_factory):
         },
     )
     yield s
+
+
+@dataclass
+class BuiltQuery:
+    name: str
+    df: DataFrame
+    plan: str  # formatted before any action ran on ``df``
+
+
+@pytest.fixture(scope="session", params=list(REGISTRY))
+def built_query(request, spark):
+    """One registered query built once at sf0.01 for every gate that
+    sweeps the registry (oracle parity, row-Python, unpartitioned window).
+    Session scope makes pytest run all of one query's gates back to back,
+    then release its frame before the next query is built.
+
+    Building a streaming row drains its whole availableNow stream, so the
+    build must leave no streaming query running.  That is checked here,
+    not at teardown: pytest tears a session fixture down at the next
+    query's setup and would report the leak there."""
+    name = request.param
+    running = {q.id for q in spark.streams.active}
+    df = REGISTRY[name].fn(spark, SF01)
+    plan = checks.formatted_plan(df)
+    left = [q for q in spark.streams.active if q.id not in running]
+    for q in left:
+        q.stop()
+    assert not left, f"{name} left streams running: {[q.name for q in left]}"
+    yield BuiltQuery(name, df, plan)

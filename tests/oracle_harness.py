@@ -1,9 +1,11 @@
 """Local replica of the driver's DuckDB-oracle compare.
 
 Runs each registered Spark query and its oracle SQL on the same parquet
-tables, sorts both results by all columns, and diffs values.  Used by
-``tests/test_oracle_parity.py`` so dialect/precision bugs surface locally
-before the driver's CORRECTNESS_r{N}.json does.
+tables, sorts both results by all columns, and diffs values.  ``compare``
+serves ``tests/test_oracle_parity.py`` (one test per registered query) so
+dialect/precision bugs surface locally before CORRECTNESS_r{N}.json
+does; ``run_all`` sweeps the registry for ``scripts/parity.py`` and the
+scale sweep.
 """
 
 from __future__ import annotations
@@ -63,10 +65,11 @@ def compare(name: str, spark_df, con, sql: str, float_tol: float = 0.0) -> Diff:
     sdf = spark_df.select(*spark_cols)
     srows = [tuple(_norm(v) for v in r) for r in sdf.collect()]
 
-    ores = con.execute(sql).fetchall()
-    ocols = sorted(d[0] for d in con.execute(sql).description)
+    cur = con.execute(sql)
+    raw_cols = [d[0] for d in cur.description]
+    ores = cur.fetchall()
+    ocols = sorted(raw_cols)
     # reorder oracle rows to sorted-column order
-    raw_cols = [d[0] for d in con.execute(sql).description]
     idx = [raw_cols.index(c) for c in ocols]
     orows = [tuple(_norm(r[i]) for i in idx) for r in ores]
 

@@ -6,20 +6,32 @@ failure here would fail the real gate too.
 
 from __future__ import annotations
 
+import pytest
+
+from killrweather_spark.api.inventory import REGISTRY
 from tests.conftest import SF01
-from tests.oracle_harness import run_all
+from tests.oracle_harness import compare, duck_connection
 
 
-def test_all_queries_match_oracle(spark):
-    results = run_all(spark, SF01)
-    assert results, "no queries registered"
-    failed = [r for r in results if not r.ok]
-    msg = "\n".join(
-        f"{r.name}: rows(spark={r.spark_rows}, oracle={r.oracle_rows}) "
+@pytest.fixture(scope="session")
+def oracle_sf01():
+    # session scope: the registry sweep interleaves this module's tests
+    # with test_plans.py's, which would rebuild a module-scoped connection
+    # once per query
+    con = duck_connection(SF01)
+    yield con
+    con.close()
+
+
+def test_all_queries_match_oracle(built_query, oracle_sf01):
+    sql = REGISTRY[built_query.name].sql
+    if sql is None:
+        pytest.skip("no oracle SQL (QuerySpec.sql is None)")
+    r = compare(built_query.name, built_query.df, oracle_sf01, sql)
+    assert r.ok, (
+        f"rows(spark={r.spark_rows}, oracle={r.oracle_rows}) "
         f"max_abs_err={r.max_abs_err!r} :: " + " | ".join(r.messages)
-        for r in failed
     )
-    assert not failed, f"{len(failed)} queries diverged from oracle:\n{msg}"
 
 
 def test_edge_fixture_parity(spark, tmp_path):
@@ -32,9 +44,6 @@ def test_edge_fixture_parity(spark, tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from tests.oracle_harness import duck_connection, compare
-    from killrweather_spark.api.inventory import REGISTRY
 
     fx = tmp_path / "fixture"
     fx.mkdir()
@@ -138,3 +147,38 @@ def test_edge_fixture_parity(spark, tmp_path):
     assert 20 not in snap          # deleted key absent from the snapshot
     assert snap[30] == 7           # delete then re-insert survives
     assert snap[10] == 3           # tied ts broken by event_id DESC
+
+
+class _CountingConnection:
+    def __init__(self, con):
+        self._con, self.executes = con, 0
+
+    def execute(self, sql):
+        self.executes += 1
+        return self._con.execute(sql)
+
+
+def test_compare_runs_each_oracle_statement_once(spark):
+    """``compare`` reads the oracle's rows and column names from one
+    ``execute``; a mismatch still reports the count and the first rows,
+    in sorted-column order on both sides."""
+    import duckdb
+
+    con = _CountingConnection(duckdb.connect())
+    sdf = spark.createDataFrame([(1, 2.5), (2, 3.0)], "b long, a double")
+    sql = (
+        "SELECT * FROM (VALUES (1, 2.5::DOUBLE), (2, 3.5::DOUBLE)) t(b, a)"
+    )
+    d = compare("q", sdf, con, sql)
+    assert con.executes == 1
+    assert not d.ok and (d.spark_rows, d.oracle_rows) == (2, 2)
+    assert d.max_abs_err == 0.5
+    assert d.messages == [
+        "1 mismatching rows",
+        "row 1: spark=(3.0, 2) oracle=(3.5, 2)",
+    ]
+    same = (
+        "SELECT * FROM (VALUES (2, 3.0::DOUBLE), (1, 2.5::DOUBLE)) t(b, a)"
+    )
+    assert compare("q", sdf, con, same).ok
+    assert con.executes == 2

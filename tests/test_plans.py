@@ -326,9 +326,9 @@ def test_minhash_estimate_never_touches_text_after_signatures(spark):
     assert ests and all("text" not in ln for ln in ests), plan
 
 
-def test_entire_registry_stays_out_of_row_python(spark):
-    """No row-at-a-time Python UDF in ANY registered query — the sweep
-    covers the whole REGISTRY (``len(REGISTRY)`` entries), so new queries
+def test_entire_registry_stays_out_of_row_python(built_query):
+    """No row-at-a-time Python UDF in ANY registered query — one test per
+    REGISTRY entry (``built_query``), so new queries
     are gated automatically.  For batch queries only the plan is built
     (driver-side, cheap); the streaming-family ops' ``spec.fn`` drains a
     bounded availableNow stream to produce their result DataFrame, so those
@@ -337,16 +337,9 @@ def test_entire_registry_stays_out_of_row_python(spark):
     sanctioned Python paths (mapInPandas / applyInPandas / WithState) plan
     as Arrow nodes (MapInPandas, FlatMapGroupsInPandas*), never
     BatchEvalPython."""
-    bad = []
-    for name, spec in REGISTRY.items():
-        try:
-            plan = checks.formatted_plan(spec.fn(spark, SF01))
-        except Exception as e:  # noqa: BLE001 — surface as a failure below
-            bad.append((name, f"plan build failed: {e}"))
-            continue
-        if "BatchEvalPython" in plan:
-            bad.append((name, "BatchEvalPython in plan"))
-    assert not bad, bad
+    assert "BatchEvalPython" not in built_query.plan, (
+        f"{built_query.name}: BatchEvalPython in plan"
+    )
 
 
 def test_disjunctive_predicate_pushes_to_both_scans(spark):
@@ -692,26 +685,20 @@ def test_unpartitioned_window_count_layout_fixtures(spark):
     assert "windowspecdefinition(" in plan, plan
 
 
-def test_entire_registry_has_no_unpartitioned_window(spark):
-    """No Window over an unbounded input anywhere in the REGISTRY — the
-    class guard for the r11 rfm_segments finding (a bare
-    ``ntile OVER (ORDER BY …)`` compiles to Exchange SinglePartition + a
-    single task holding every row: correct at sf0.01, dead at 100 TB).
+def test_entire_registry_has_no_unpartitioned_window(built_query):
+    """No Window over an unbounded input anywhere in the REGISTRY (one
+    test per entry) — the class guard for the r11 rfm_segments finding (a
+    bare ``ntile OVER (ORDER BY …)`` compiles to Exchange SinglePartition +
+    a single task holding every row: correct at sf0.01, dead at 100 TB).
     Whitelisted queries may keep EXACTLY their declared count of bounded
     global windows — a new unpartitioned window in a whitelisted query
     still fails."""
-    bad = []
-    for name, spec in REGISTRY.items():
-        try:
-            cnt = checks.unpartitioned_window_count(spec.fn(spark, SF01))
-        except Exception as e:  # noqa: BLE001 — surface as a failure below
-            bad.append((name, f"plan build failed: {e}"))
-            continue
-        allowed = _BOUNDED_GLOBAL_WINDOW_WHITELIST.get(name, 0)
-        if cnt > allowed:
-            bad.append((name, f"{cnt} unpartitioned Window nodes "
-                              f"(whitelisted: {allowed})"))
-    assert not bad, bad
+    cnt = checks.unpartitioned_window_count(built_query.plan)
+    allowed = _BOUNDED_GLOBAL_WINDOW_WHITELIST.get(built_query.name, 0)
+    assert cnt <= allowed, (
+        f"{built_query.name}: {cnt} unpartitioned Window nodes "
+        f"(whitelisted: {allowed})"
+    )
 
 
 def test_rfm_segments_quintiles_are_distributed(spark):
