@@ -12001,10 +12001,11 @@ def _wire_pq() -> None:
         "shared with every recall row",
     )
     def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from killrweather_spark.functions.pq import ann_pq_recall
+        from killrweather_spark.functions.pq import ann_pq_adc, ann_recall
 
-        return ann_pq_recall(
-            load_table(spark, sf_dir, "embeddings"), lambda c: c < 5
+        emb = load_table(spark, sf_dir, "embeddings")
+        return ann_recall(
+            ann_pq_adc(emb, lambda c: c < 5), emb, lambda c: c < 5
         )
 
     from killrweather_spark.functions.pq import ann_ivfpq_sql
@@ -12044,13 +12045,15 @@ def _wire_pq() -> None:
     )
     def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         from killrweather_spark.functions.ann_index import ensure_ivf_index
-        from killrweather_spark.functions.pq import ann_ivfpq_recall
+        from killrweather_spark.functions.pq import ann_ivfpq, ann_recall
 
         emb = load_table(spark, sf_dir, "embeddings")
         idx = ensure_ivf_index(
             emb, _ivf_index_dir(sf_dir), n_centroids=8, iters=2
         )
-        return ann_ivfpq_recall(spark, idx, emb, lambda c: c < 5)
+        return ann_recall(
+            ann_ivfpq(spark, idx, emb, lambda c: c < 5), emb, lambda c: c < 5
+        )
 
 
 _wire_pq()
@@ -12101,13 +12104,20 @@ def _wire_ivfpq_residual() -> None:
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         from killrweather_spark.functions.ann_index import ensure_ivf_index
-        from killrweather_spark.functions.pq import ann_ivfpq_residual_recall
+        from killrweather_spark.functions.pq import (
+            ann_ivfpq_residual,
+            ann_recall,
+        )
 
         emb = load_table(spark, sf_dir, "embeddings")
         idx = ensure_ivf_index(
             emb, _ivf_index_dir(sf_dir), n_centroids=8, iters=2
         )
-        return ann_ivfpq_residual_recall(spark, idx, emb, lambda c: c < 5)
+        return ann_recall(
+            ann_ivfpq_residual(spark, idx, emb, lambda c: c < 5),
+            emb,
+            lambda c: c < 5,
+        )
 
 
 _wire_ivfpq_residual()

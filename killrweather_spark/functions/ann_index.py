@@ -49,8 +49,11 @@ are exact); this extends SURVEY §2's beyond-reference similarity family.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -119,104 +122,143 @@ def build_ivf_index(
     so a killed build never leaves a half-index a probe could read, and
     two processes racing to build the same (deterministic) index never
     write into each other's staging dir — the loser discards its copy
-    and uses the winner's byte-identical result."""
-    import uuid
+    and uses the winner's byte-identical result (:func:`_staged`)."""
+    with _staged(index_dir) as tmp:
+        comp = (
+            quantized_components(df, id_col, vec_col)
+            .withColumnRenamed(id_col, "vec_id")
+            .transform(persist_once)
+        )
+        labels = df.select(
+            F.col(id_col).alias("vec_id"),
+            (F.col(id_col) % n_centroids).cast("bigint").alias("cell"),
+        )
+        cents = None
+        for _ in range(iters):
+            # each round's labels feed one M-step and (transitively) the rest
+            # of the chain — 2·dims·n_centroids-row state, checkpoint-free
+            # because the chain is short (iters is small by design; raise it
+            # with the kmeans_iterate checkpoint policy if that changes)
+            cents = _centroids_from(comp, labels)
+            labels = _assign(comp, cents)
+        nrm = cosine_norms(comp, "vec_id")
+        _write_cells(comp, labels, ("pos", "q"), tmp, "inverted", "overwrite")
+        _write_cells(nrm, labels, ("norm2",), tmp, "norms", "overwrite")
+        cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+        _write_cells(
+            _int_vectors(df, id_col, vec_col),
+            labels,
+            ("qv", "norm2"),
+            tmp,
+            "vectors",
+            "overwrite",
+        )
+        # PQ side of the index (the IVFADC layout): per-subspace codebooks
+        # (dim·ks rows — the broadcast artifact) and every vector's M code
+        # ids PARTITIONED BY its trained IVF cell, so an ADC probe reads
+        # n_probe cells of the COMPRESSED representation — at production
+        # dims the codes are ~512× smaller than the vectors they stand for.
+        from killrweather_spark.functions.pq import _train as _pq_train
 
-    tmp = f"{index_dir}.tmp.{uuid.uuid4().hex[:12]}"
-    comp = (
-        quantized_components(df, id_col, vec_col)
-        .withColumnRenamed(id_col, "vec_id")
-        .transform(persist_once)
-    )
-    labels = df.select(
-        F.col(id_col).alias("vec_id"),
-        (F.col(id_col) % n_centroids).cast("bigint").alias("cell"),
-    )
-    cents = None
-    for _ in range(iters):
-        # each round's labels feed one M-step and (transitively) the rest
-        # of the chain — 2·dims·n_centroids-row state, checkpoint-free
-        # because the chain is short (iters is small by design; raise it
-        # with the kmeans_iterate checkpoint policy if that changes)
-        cents = _centroids_from(comp, labels)
-        labels = _assign(comp, cents)
-    nrm = cosine_norms(comp, "vec_id")
-    inverted = comp.join(labels, "vec_id").select("cell", "vec_id", "pos", "q")
-    norms = nrm.join(labels, "vec_id").select("cell", "vec_id", "norm2")
-    inverted.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(tmp, "inverted")
-    )
-    norms.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(tmp, "norms")
-    )
-    cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-    # array-form member table for pair scans (SemDeDup over trained
-    # cells): same ×10⁶ quantization as `inverted`, one row per vector,
-    # norm2 inline (0 rows kept — readers filter), int32 components
-    # (|q| ≤ ~10⁶) so the per-cell pair shuffle carries half the bytes
+        _, pqcents, pqcodes = _pq_train(df, id_col=id_col, vec_col=vec_col)
+        pqcents.write.mode("overwrite").parquet(os.path.join(tmp, "pqcents"))
+        _write_cells(
+            pqcodes, labels, ("sub", "code"), tmp, "pqcodes", "overwrite"
+        )
+        # residual-encoded PQ (classic IVFADC): codebooks trained on
+        # v − m_cell so the codes describe the within-cell spread; an ADC
+        # probe adds dot(q, m_cell) back as a per-(query, cell) scalar
+        from killrweather_spark.functions.pq import (
+            _train_residual as _pq_train_residual,
+        )
+
+        pqrcents, pqrcodes = _pq_train_residual(
+            df, labels, cents, id_col=id_col, vec_col=vec_col
+        )
+        pqrcents.write.mode("overwrite").parquet(os.path.join(tmp, "pqrcents"))
+        _write_cells(
+            pqrcodes, labels, ("sub", "code"), tmp, "pqrcodes", "overwrite"
+        )
+        with open(os.path.join(tmp, "_meta.json"), "w") as f:
+            json.dump(_index_params(n_centroids, iters), f)
+
+
+def _int_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, qv, norm2): the array-form member table for pair scans
+    (SemDeDup over trained cells) — same ×10⁶ quantization as
+    ``inverted``, one row per vector, norm2 inline (0 rows kept —
+    readers filter), int32 components (|q| ≤ ~10⁶) so the per-cell
+    pair shuffle carries half the bytes."""
     qv = F.transform(
         F.col(vec_col),
         lambda x: F.round(x.cast("double") * 1_000_000).cast("int"),
     )
-    vectors = (
-        df.select(F.col(id_col).alias("vec_id"), qv.alias("qv"))
-        .withColumn(
-            "norm2",
-            F.aggregate(
-                F.col("qv"),
-                F.lit(0).cast("bigint"),
-                lambda s, x: s + x.cast("bigint") * x,
-            ),
-        )
-        .join(labels, "vec_id")
-        .select("cell", "vec_id", "qv", "norm2")
-    )
-    vectors.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(tmp, "vectors")
-    )
-    # PQ side of the index (the IVFADC layout): per-subspace codebooks
-    # (dim·ks rows — the broadcast artifact) and every vector's M code
-    # ids PARTITIONED BY its trained IVF cell, so an ADC probe reads
-    # n_probe cells of the COMPRESSED representation — at production
-    # dims the codes are ~512× smaller than the vectors they stand for.
-    from killrweather_spark.functions.pq import _train as _pq_train
-
-    _, pqcents, pqcodes = _pq_train(df, id_col=id_col, vec_col=vec_col)
-    pqcents.write.mode("overwrite").parquet(os.path.join(tmp, "pqcents"))
-    pqcodes.join(labels, "vec_id").select(
-        "cell", "vec_id", "sub", "code"
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(tmp, "pqcodes")
-    )
-    # residual-encoded PQ (classic IVFADC): codebooks trained on
-    # v − m_cell so the codes describe the within-cell spread; an ADC
-    # probe adds dot(q, m_cell) back as a per-(query, cell) scalar
-    from killrweather_spark.functions.pq import (
-        _train_residual as _pq_train_residual,
+    return df.select(F.col(id_col).alias("vec_id"), qv.alias("qv")).withColumn(
+        "norm2",
+        F.aggregate(
+            F.col("qv"),
+            F.lit(0).cast("bigint"),
+            lambda s, x: s + x.cast("bigint") * x,
+        ),
     )
 
-    pqrcents, pqrcodes = _pq_train_residual(
-        df, labels, cents, id_col=id_col, vec_col=vec_col
-    )
-    pqrcents.write.mode("overwrite").parquet(os.path.join(tmp, "pqrcents"))
-    pqrcodes.join(labels, "vec_id").select(
-        "cell", "vec_id", "sub", "code"
-    ).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(tmp, "pqrcodes")
-    )
-    with open(os.path.join(tmp, "_meta.json"), "w") as f:
-        json.dump(_index_params(n_centroids, iters), f)
+
+def _write_cells(
+    rows: DataFrame, labels: DataFrame, cols, root: str, table: str, mode: str
+) -> None:
+    """Write ``rows`` (keyed by ``vec_id``) tagged with their trained
+    cell from ``labels`` as the cell-partitioned ``table`` under
+    ``root``: columns cell, vec_id, then ``cols``."""
+    rows.join(labels, "vec_id").select("cell", "vec_id", *cols).write.mode(
+        mode
+    ).partitionBy("cell").parquet(os.path.join(root, table))
+
+
+@contextlib.contextmanager
+def _staged(out_dir: str, copy_of: str | None = None):
+    """Atomic, concurrent-safe publish of an index directory: yields a
+    writer-unique staging dir ``<out_dir>.tmp.<nonce>`` (a copy of
+    ``copy_of`` when given) and renames it into place when the block
+    completes, so a reader never sees a half-written ``out_dir``.  A
+    block that raises removes its staging dir (retries must not stack
+    one full-index copy per attempt).  Every output is deterministic,
+    so a writer that loses the rename to a concurrent one drops its
+    copy and uses the winner's byte-identical result."""
+    tmp = f"{out_dir}.tmp.{uuid.uuid4().hex[:12]}"
+    if copy_of is not None:
+        shutil.copytree(copy_of, tmp)
     try:
-        os.rename(tmp, index_dir)
+        yield tmp
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, out_dir)
     except OSError:
-        # a concurrent builder won the rename; the build is
-        # deterministic, so theirs is byte-identical — drop ours
-        import shutil
-
-        if os.path.isdir(index_dir):
+        if os.path.isdir(out_dir):
             shutil.rmtree(tmp)
         else:
             raise
+
+
+def _ensure_fresh(out_dir: str, marker: str, fresh, build) -> str:
+    """Build-once gate of a derived index: ``out_dir`` is kept when its
+    completion ``marker`` and its ``_meta.json`` both read back and
+    ``fresh(marker_json, meta_json)`` holds; otherwise whatever is there
+    is removed and ``build()`` runs.  A half-written dir never carries
+    the marker, because every output is published by :func:`_staged`."""
+    try:
+        with open(os.path.join(out_dir, marker)) as f:
+            mark = json.load(f)
+        with open(os.path.join(out_dir, "_meta.json")) as f:
+            ok = fresh(mark, json.load(f))
+    except (OSError, ValueError):
+        ok = False  # absent, half-written, or pre-params layout
+    if not ok:
+        if os.path.isdir(out_dir):
+            shutil.rmtree(out_dir)
+        build()
+    return out_dir
 
 
 def _index_params(n_centroids: int, iters: int) -> dict:
@@ -274,8 +316,6 @@ def ensure_ivf_index(
             complete = False  # pre-meta layout — rebuild
     if not complete:
         if os.path.isdir(index_dir):
-            import shutil
-
             shutil.rmtree(index_dir)
         build_ivf_index(df, index_dir, n_centroids, iters, id_col, vec_col)
     return index_dir
@@ -314,27 +354,10 @@ def upsert_ivf_index(
     scheduling a retrain+re-encode when it degrades (the curve
     ``ivf_probe_depth_curve`` measures), not silently retraining here.
     """
-    import shutil
-    import uuid
-
-    spark = new_df.sparkSession
-    tmp = f"{out_index_dir}.tmp.{uuid.uuid4().hex[:12]}"
-    shutil.copytree(base_index_dir, tmp)
-    try:
-        _upsert_into(spark, base_index_dir, tmp, new_df, id_col, vec_col)
-    except BaseException:
-        # The staging dir holds a full copy of the base index; a Spark
-        # failure mid-append must not orphan it (retries would stack one
-        # full-index copy per attempt).
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    try:
-        os.rename(tmp, out_index_dir)
-    except OSError:
-        if os.path.isdir(out_index_dir):
-            shutil.rmtree(tmp)
-        else:
-            raise
+    with _staged(out_index_dir, copy_of=base_index_dir) as tmp:
+        _upsert_into(
+            new_df.sparkSession, base_index_dir, tmp, new_df, id_col, vec_col
+        )
     return out_index_dir
 
 
@@ -357,35 +380,15 @@ def _upsert_into(
     )
     labels = _assign(comp, cents).transform(persist_once)
     nrm = cosine_norms(comp, "vec_id")
-    comp.join(labels, "vec_id").select(
-        "cell", "vec_id", "pos", "q"
-    ).write.mode("append").partitionBy("cell").parquet(
-        os.path.join(tmp, "inverted")
-    )
-    nrm.join(labels, "vec_id").select(
-        "cell", "vec_id", "norm2"
-    ).write.mode("append").partitionBy("cell").parquet(
-        os.path.join(tmp, "norms")
-    )
-    qv = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * 1_000_000).cast("int"),
-    )
-    (
-        new_df.select(F.col(id_col).alias("vec_id"), qv.alias("qv"))
-        .withColumn(
-            "norm2",
-            F.aggregate(
-                F.col("qv"),
-                F.lit(0).cast("bigint"),
-                lambda s, x: s + x.cast("bigint") * x,
-            ),
-        )
-        .join(labels, "vec_id")
-        .select("cell", "vec_id", "qv", "norm2")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(os.path.join(tmp, "vectors"))
+    _write_cells(comp, labels, ("pos", "q"), tmp, "inverted", "append")
+    _write_cells(nrm, labels, ("norm2",), tmp, "norms", "append")
+    _write_cells(
+        _int_vectors(new_df, id_col, vec_col),
+        labels,
+        ("qv", "norm2"),
+        tmp,
+        "vectors",
+        "append",
     )
     # PQ codes for the new batch under the FROZEN codebooks: the plain
     # E-step (exact int64 argmin, ties smallest code) — no M-step runs
@@ -396,10 +399,9 @@ def _upsert_into(
 
     pqcents = spark.read.parquet(os.path.join(base_index_dir, "pqcents"))
     scomp = persist_once(_sub_components(new_df, id_col, vec_col))
-    _pq_estep(scomp, pqcents).join(labels, "vec_id").select(
-        "cell", "vec_id", "sub", "code"
-    ).write.mode("append").partitionBy("cell").parquet(
-        os.path.join(tmp, "pqcodes")
+    _write_cells(
+        _pq_estep(scomp, pqcents), labels, ("sub", "code"), tmp, "pqcodes",
+        "append",
     )
     # residual codes: r = v − m_cell against the frozen residual books
     pqrcents = spark.read.parquet(os.path.join(base_index_dir, "pqrcents"))
@@ -408,10 +410,9 @@ def _upsert_into(
         .join(F.broadcast(cents), ["cell", "pos"])
         .select("vec_id", "sub", "pos", (F.col("q") - F.col("c")).alias("q"))
     )
-    _pq_estep(rcomp, pqrcents).join(labels, "vec_id").select(
-        "cell", "vec_id", "sub", "code"
-    ).write.mode("append").partitionBy("cell").parquet(
-        os.path.join(tmp, "pqrcodes")
+    _write_cells(
+        _pq_estep(rcomp, pqrcents), labels, ("sub", "code"), tmp,
+        "pqrcodes", "append",
     )
     # Record WHICH geometry this upsert was encoded under (the copied
     # base _meta.json), so the gate can detect a PQ/centroid-geometry
@@ -460,25 +461,14 @@ def ensure_upserted_index(
     upserted index (codes under the old codebooks) at the same
     fingerprint-keyed path."""
     want = _index_params(n_centroids, iters)
-    fresh = False
-    try:
-        with open(os.path.join(out_index_dir, "_upsert_meta.json")) as f:
-            umeta = json.load(f)
-        with open(os.path.join(out_index_dir, "_meta.json")) as f:
-            fresh = json.load(f) == want and (
-                umeta.get("base_params") == want
-            )
-    except (OSError, ValueError):
-        fresh = False  # absent, half-written, or pre-params layout
-    if not fresh:
-        if os.path.isdir(out_index_dir):
-            import shutil
-
-            shutil.rmtree(out_index_dir)
-        upsert_ivf_index(
+    return _ensure_fresh(
+        out_index_dir,
+        "_upsert_meta.json",
+        lambda mark, meta: meta == want and mark.get("base_params") == want,
+        lambda: upsert_ivf_index(
             base_index_dir, new_df, out_index_dir, id_col, vec_col
-        )
-    return out_index_dir
+        ),
+    )
 
 
 #: The index tables partitioned by trained cell — the tables delete and
@@ -522,9 +512,6 @@ def delete_from_ivf_index(
     would batch tombstones per cell and compact on a threshold), but the
     dedup-driven case deletes clustered near-duplicates, which land in
     few cells by construction."""
-    import shutil
-    import uuid
-
     spark = delete_ids.sparkSession
     dels = persist_once(
         delete_ids.select(F.col(id_col).alias("vec_id")).distinct()
@@ -539,9 +526,7 @@ def delete_from_ivf_index(
         .distinct()
         .collect()
     )
-    tmp = f"{out_index_dir}.tmp.{uuid.uuid4().hex[:12]}"
-    shutil.copytree(base_index_dir, tmp)
-    try:
+    with _staged(out_index_dir, copy_of=base_index_dir) as tmp:
         for tbl in CELL_TABLES:
             src = spark.read.parquet(
                 os.path.join(base_index_dir, tbl)
@@ -570,16 +555,6 @@ def delete_from_ivf_index(
                 },
                 f,
             )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    try:
-        os.rename(tmp, out_index_dir)
-    except OSError:
-        if os.path.isdir(out_index_dir):
-            shutil.rmtree(tmp)
-        else:
-            raise
     return out_index_dir
 
 
@@ -599,25 +574,14 @@ def ensure_deleted_index(
     current geometry, so a PQ/centroid bump rebuilds instead of serving
     stale codes."""
     want = _index_params(n_centroids, iters)
-    fresh = False
-    try:
-        with open(os.path.join(out_index_dir, "_delete_meta.json")) as f:
-            dmeta = json.load(f)
-        with open(os.path.join(out_index_dir, "_meta.json")) as f:
-            fresh = json.load(f) == want and (
-                dmeta.get("base_params") == want
-            )
-    except (OSError, ValueError):
-        fresh = False
-    if not fresh:
-        if os.path.isdir(out_index_dir):
-            import shutil
-
-            shutil.rmtree(out_index_dir)
-        delete_from_ivf_index(
+    return _ensure_fresh(
+        out_index_dir,
+        "_delete_meta.json",
+        lambda mark, meta: meta == want and mark.get("base_params") == want,
+        lambda: delete_from_ivf_index(
             base_index_dir, delete_ids, out_index_dir, id_col
-        )
-    return out_index_dir
+        ),
+    )
 
 
 def bootstrap_stream_index(
@@ -639,9 +603,6 @@ def bootstrap_stream_index(
     codebooks), and — when the caller passes ``n_centroids``/``iters`` —
     also equal ``_index_params`` for that geometry (the explicit-geometry
     form the other lifecycle gates use)."""
-    import shutil
-    import uuid
-
     cur_base = None
     try:
         with open(os.path.join(base_index_dir, "_meta.json")) as f:
@@ -663,23 +624,15 @@ def bootstrap_stream_index(
         return out_index_dir
     if os.path.isdir(out_index_dir):
         shutil.rmtree(out_index_dir)
-    tmp = f"{out_index_dir}.tmp.{uuid.uuid4().hex[:12]}"
-    shutil.copytree(base_index_dir, tmp)
-    with open(os.path.join(tmp, "_stream_meta.json"), "w") as f:
-        json.dump(
-            {
-                "base": os.path.basename(base_index_dir),
-                "base_params": cur_base,
-            },
-            f,
-        )
-    try:
-        os.rename(tmp, out_index_dir)
-    except OSError:
-        if os.path.isdir(out_index_dir):
-            shutil.rmtree(tmp)
-        else:
-            raise
+    with _staged(out_index_dir, copy_of=base_index_dir) as tmp:
+        with open(os.path.join(tmp, "_stream_meta.json"), "w") as f:
+            json.dump(
+                {
+                    "base": os.path.basename(base_index_dir),
+                    "base_params": cur_base,
+                },
+                f,
+            )
     return out_index_dir
 
 
@@ -715,8 +668,6 @@ def apply_index_upsert_batch(
     batch-sized intermediates; bounded drains are fine, a long-lived
     production stream would unpersist per batch or cap the cache."""
     import glob
-    import shutil
-    import uuid
 
     spark = batch_df.sparkSession
     bootstrap_stream_index(base_index_dir, out_index_dir)
@@ -817,9 +768,6 @@ def compact_ivf_index(
     At 100 TB this is the index's OPTIMIZE/compaction job: cost
     proportional to the multi-file cells' data, schedulable per cell,
     and probe-invisible (same partition layout, same rows)."""
-    import shutil
-    import uuid
-
     # cells needing a rewrite, per table: >1 data file in the cell dir
     to_fold: dict[str, list[int]] = {}
     for tbl in CELL_TABLES:
@@ -837,9 +785,7 @@ def compact_ivf_index(
                 cells.append(int(d.split("=", 1)[1]))
         if cells:
             to_fold[tbl] = cells
-    tmp = f"{out_index_dir}.tmp.{uuid.uuid4().hex[:12]}"
-    shutil.copytree(base_index_dir, tmp)
-    try:
+    with _staged(out_index_dir, copy_of=base_index_dir) as tmp:
         for tbl, cells in to_fold.items():
             src = spark.read.parquet(
                 os.path.join(base_index_dir, tbl)
@@ -857,16 +803,6 @@ def compact_ivf_index(
                 },
                 f,
             )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    try:
-        os.rename(tmp, out_index_dir)
-    except OSError:
-        if os.path.isdir(out_index_dir):
-            shutil.rmtree(tmp)
-        else:
-            raise
     return out_index_dir
 
 
@@ -878,23 +814,15 @@ def ensure_compacted_index(
     iters: int = 2,
 ) -> str:
     """Build-once gate for :func:`compact_ivf_index` with the same
-    geometry-staleness discipline as the other lifecycle gates."""
+    geometry-staleness discipline as the other lifecycle gates (the
+    geometry only: a compaction records no base params)."""
     want = _index_params(n_centroids, iters)
-    fresh = False
-    try:
-        with open(os.path.join(out_index_dir, "_compact_meta.json")) as f:
-            json.load(f)
-        with open(os.path.join(out_index_dir, "_meta.json")) as f:
-            fresh = json.load(f) == want
-    except (OSError, ValueError):
-        fresh = False
-    if not fresh:
-        if os.path.isdir(out_index_dir):
-            import shutil
-
-            shutil.rmtree(out_index_dir)
-        compact_ivf_index(spark, base_index_dir, out_index_dir)
-    return out_index_dir
+    return _ensure_fresh(
+        out_index_dir,
+        "_compact_meta.json",
+        lambda mark, meta: meta == want,
+        lambda: compact_ivf_index(spark, base_index_dir, out_index_dir),
+    )
 
 
 def ivf_upsert_skew_report(

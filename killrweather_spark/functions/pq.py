@@ -154,21 +154,18 @@ def _pq_estep(
     return sums.select("vec_id", "sub", best["code"].alias("code"))
 
 
-def _train(
-    df: DataFrame,
-    iters: int = PQ_ITERS,
-    ks: int = PQ_KS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Returns (scomp, codebooks, codes) — the tagged components, the
-    final M-step codebooks, and the corpus codes under them."""
-    scomp = persist_once(_sub_components(df, id_col, vec_col))
+def _lloyd(
+    df: DataFrame, comp: DataFrame, iters: int, ks: int, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Deterministic PQ Lloyd over the tagged components ``comp``: code
+    ``vec_id % ks`` in every subspace of every ``df`` vector, then
+    ``iters`` floor-mean M-steps and argmin E-steps.  Returns the final
+    (codebooks, codes)."""
     labels = (
         df.select(F.col(id_col).alias("vec_id"))
         .crossJoin(
             F.broadcast(
-                scomp.sparkSession.range(PQ_M).select(
+                comp.sparkSession.range(PQ_M).select(
                     F.col("id").cast("bigint").alias("sub")
                 )
             )
@@ -179,20 +176,33 @@ def _train(
     )
     cents = None
     for _ in range(iters):
-        cents = _pq_mstep(scomp, labels)
-        labels = _pq_estep(scomp, cents, ks)
+        cents = _pq_mstep(comp, labels)
+        labels = _pq_estep(comp, cents, ks)
     # Persist the training ENDPOINTS, not the iterations: every caller
     # references cents (ks·dim rows) and labels (|corpus|·M narrow ints)
     # several times — broadcast LUT build, code scan, recall join — and
     # each reference otherwise replays the whole Lloyd chain above the
-    # scomp cache (the before-plans show 35–41 embedding scans / 78–101
+    # comp cache (the before-plans show 35–41 embedding scans / 78–101
     # Exchanges per ADC query).  Caching the two final frames runs
     # training once per process and turns every reference into an
     # InMemoryRelation read (guide §1.2 "don't compute things you throw
     # away", §2.4 "remove shuffles outright").  The per-ITERATION
     # localization A/B'd slower (it duplicates E-step work the
     # exchange-reuse otherwise shares) — endpoints only.
-    return scomp, persist_once(cents), persist_once(labels)
+    return persist_once(cents), persist_once(labels)
+
+
+def _train(
+    df: DataFrame,
+    iters: int = PQ_ITERS,
+    ks: int = PQ_KS,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Returns (scomp, codebooks, codes) — the tagged components, the
+    final M-step codebooks, and the corpus codes under them."""
+    scomp = persist_once(_sub_components(df, id_col, vec_col))
+    return (scomp, *_lloyd(df, scomp, iters, ks, id_col))
 
 
 def _train_residual(
@@ -209,9 +219,9 @@ def _train_residual(
     its trained cell centroid, ``r = v − m_cell``, so the codebooks
     spend their 16 codes on the WITHIN-cell spread instead of
     re-describing the coarse structure the IVF already captured.
-    Returns (codebooks, codes) over the residual components; init and
-    Lloyd arithmetic identical to :func:`_train` so the oracle replay
-    contract carries over unchanged."""
+    Returns (codebooks, codes) over the residual components; the Lloyd
+    rounds are :func:`_train`'s, so the oracle replay contract carries
+    over unchanged."""
     scomp = _sub_components(df, id_col, vec_col)
     rcomp = persist_once(
         scomp.join(cells, "vec_id")
@@ -220,25 +230,7 @@ def _train_residual(
             "vec_id", "sub", "pos", (F.col("q") - F.col("c")).alias("q")
         )
     )
-    labels = (
-        df.select(F.col(id_col).alias("vec_id"))
-        .crossJoin(
-            F.broadcast(
-                rcomp.sparkSession.range(PQ_M).select(
-                    F.col("id").cast("bigint").alias("sub")
-                )
-            )
-        )
-        .select(
-            "vec_id", "sub", (F.col("vec_id") % ks).cast("bigint").alias("code")
-        )
-    )
-    cb = None
-    for _ in range(iters):
-        cb = _pq_mstep(rcomp, labels)
-        labels = _pq_estep(rcomp, cb, ks)
-    # endpoint persistence — same rationale as _train
-    return persist_once(cb), persist_once(labels)
+    return _lloyd(df, rcomp, iters, ks, id_col)
 
 
 def pq_codebooks(
@@ -258,6 +250,69 @@ def pq_codebooks(
         F.col("pos").cast("bigint").alias("pos"),
         "c",
     )
+
+
+def _adc_lut(qscomp: DataFrame, books: DataFrame) -> DataFrame:
+    """(query_id, sub, code, pdot): the ADC LookUp Table — each query's
+    partial dot against every (subspace, code) centroid of the
+    broadcast codebooks ``books``."""
+    return (
+        qscomp.join(F.broadcast(books), ["sub", "pos"])
+        .groupBy("query_id", "sub", "code")
+        .agg(F.sum(F.col("q") * F.col("c")).cast("bigint").alias("pdot"))
+    )
+
+
+def _top_n(frame: DataFrame, score: str, n: int, *cols: str) -> DataFrame:
+    """The ``n`` best rows per query by ``score`` descending, ties to the
+    smaller ``neighbor_id``, projected to ``cols`` — the ADC shortlist
+    (by ``adot``) and the exact-rescore top-k (by ``cosine``)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        frame.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= n)
+        .select(*cols)
+    )
+
+
+def _quantized(vec_col: str) -> Column:
+    """The ×10⁶-quantized int64 components of a float-array column."""
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.round(x.cast("double") * 1_000_000).cast("bigint"),
+    )
+
+
+def _norm2(col: str) -> Column:
+    """The squared L2 norm of an int64-array column."""
+    return F.aggregate(
+        F.col(col), F.lit(0).cast("bigint"), lambda s, x: s + x * x
+    )
+
+
+def _rescore_top_k(pairs: DataFrame, norm2: str, k: int) -> DataFrame:
+    """Exact top-``k`` of shortlisted (query, candidate) ``pairs`` by
+    quantized cosine between the candidate's int array ``qv`` (squared
+    norm ``norm2``) and the query's ``qq`` (``qnorm2``); the dot is a
+    per-row int64 zip_with/aggregate fold, a component missing on
+    either side counting 0."""
+    dot = F.aggregate(
+        F.zip_with(
+            F.col("qv"),
+            F.col("qq"),
+            lambda a, b: F.coalesce(a.cast("bigint"), F.lit(0).cast("bigint"))
+            * F.coalesce(b, F.lit(0).cast("bigint")),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda s, x: s + x,
+    )
+    sims = pairs.withColumn("dot", dot).withColumn(
+        "cosine",
+        F.col("dot") / (F.sqrt(F.col("qnorm2")) * F.sqrt(F.col(norm2))),
+    )
+    return _top_n(sims, "cosine", k, "query_id", "neighbor_id", "cosine")
 
 
 def ann_pq_adc(
@@ -281,11 +336,7 @@ def ann_pq_adc(
     qcomp = scomp.filter(query_pred(F.col("vec_id"))).withColumnRenamed(
         "vec_id", "query_id"
     )
-    lut = (
-        qcomp.join(F.broadcast(cents), ["sub", "pos"])
-        .groupBy("query_id", "sub", "code")
-        .agg(F.sum(F.col("q") * F.col("c")).cast("bigint").alias("pdot"))
-    )
+    lut = _adc_lut(qcomp, cents)
     # ADC scan: broadcast the per-query LUT onto the compressed code
     # table and sum the M hits per (query, candidate) — the partial
     # (map-side) aggregation of the groupBy keeps the Exchange at
@@ -299,24 +350,12 @@ def ann_pq_adc(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("pdot").alias("adot"))
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adot").desc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        approx.withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
+    short = _top_n(approx, "adot", shortlist, "query_id", "neighbor_id")
     # exact rescore over the raw frame's int64 arrays — the same
     # zip_with/aggregate fold as _shortlist_rescore_arrays, built from
     # df directly (no persisted index here)
-    quant = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * 1_000_000).cast("bigint"),
-    )
-    norm2 = F.aggregate(
-        F.col("qv"), F.lit(0).cast("bigint"), lambda s, x: s + x * x
-    )
+    quant = _quantized(vec_col)
+    norm2 = _norm2("qv")
     carr = (
         df.select(F.col(id_col).alias("neighbor_id"), quant.alias("qv"))
         .withColumn("nnorm2", norm2)
@@ -329,56 +368,27 @@ def ann_pq_adc(
         .filter(F.col("qnorm2") > 0)
         .select("query_id", F.col("qv").alias("qq"), "qnorm2")
     )
-    sims = (
-        carr.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qarr), "query_id")
-        .withColumn(
-            "dot",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.col("qq"),
-                    lambda a, b: F.coalesce(a, F.lit(0).cast("bigint"))
-                    * F.coalesce(b, F.lit(0).cast("bigint")),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda s, x: s + x,
-            ),
-        )
-        .withColumn(
-            "cosine",
-            F.col("dot")
-            / (F.sqrt(F.col("qnorm2")) * F.sqrt(F.col("nnorm2"))),
-        )
+    pairs = carr.join(F.broadcast(short), "neighbor_id").join(
+        F.broadcast(qarr), "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return _rescore_top_k(pairs, "nnorm2", k)
 
 
-def ann_pq_recall(
-    df: DataFrame,
-    query_pred,
-    k: int = 3,
-    shortlist: int = PQ_SHORTLIST,
-    iters: int = PQ_ITERS,
-    ks: int = PQ_KS,
+def ann_recall(
+    got: DataFrame, df: DataFrame, query_pred, k: int = 3
 ) -> DataFrame:
-    """Recall of the PQ-ADC answer against exact brute-force top-k over
-    the same queries: ``(n_true, n_caught, recall_micro)`` — the
-    one-number answer to "how much does 512× compression cost here".
-    The exact side is corpus-quadratic by nature, so the caller bounds
-    the query set (the recall contract every screen-recall row uses)."""
+    """Recall of an ANN answer ``got`` (``query_id``, ``neighbor_id``
+    rows, e.g. from :func:`ann_pq_adc`, :func:`ann_ivfpq` or
+    :func:`ann_ivfpq_residual`) against the exact brute-force top-``k``
+    of the same ``query_pred`` queries over ``df``: one
+    ``(n_true, n_caught, recall_micro)`` row — the one-number cost of
+    the approximation; a query set that matches nothing reads
+    (0, 0, 0).  The exact side is corpus-quadratic by nature, so the
+    caller bounds the query set (the recall contract every
+    screen-recall row uses)."""
     from killrweather_spark.functions.similarity import cosine_topk
 
-    got = ann_pq_adc(df, query_pred, k, shortlist, iters, ks).select(
-        "query_id", "neighbor_id"
-    )
+    got = got.select("query_id", "neighbor_id")
     truth = cosine_topk(df, query_pred, k=k).select(
         "query_id", "neighbor_id"
     )
@@ -387,15 +397,12 @@ def ann_pq_recall(
     n_caught = caught.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_caught")
     )
-    return (
-        n_true.crossJoin(n_caught)
-        .select(
-            "n_true",
-            "n_caught",
-            F.expr("(1000000 * n_caught) div greatest(n_true, 1)")
-            .cast("bigint")
-            .alias("recall_micro"),
-        )
+    return n_true.crossJoin(n_caught).select(
+        "n_true",
+        "n_caught",
+        F.expr("(1000000 * n_caught) div greatest(n_true, 1)")
+        .cast("bigint")
+        .alias("recall_micro"),
     )
 
 
@@ -403,15 +410,17 @@ def _shortlist_rescore_arrays(
     spark,
     index_dir: str,
     cell_list,
-    short: DataFrame,
+    approx: DataFrame,
+    shortlist: int,
     queries: DataFrame,
     id_col: str,
     vec_col: str,
     k: int,
 ) -> DataFrame:
-    """Exact-rescore an ADC shortlist from the index's ARRAY-form
-    ``vectors`` table (one row per vector, norm2 inline, same ×10⁶
-    quantization as ``inverted``): the dot is a per-row
+    """Exact-rescore the ``shortlist`` best ``approx`` candidates per
+    query (by ``adot``) from the index's ARRAY-form ``vectors`` table
+    (one row per vector, norm2 inline, same ×10⁶ quantization as
+    ``inverted``): the dot is a per-row
     zip_with/aggregate fold instead of a per-component join + a
     (query, neighbor) groupBy Exchange — value-identical to the
     component path (coalesce-to-0 ≡ the inner join on pos; the
@@ -421,22 +430,9 @@ def _shortlist_rescore_arrays(
 
     qarr = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.transform(
-                F.col(vec_col),
-                lambda x: F.round(x.cast("double") * 1_000_000).cast(
-                    "bigint"
-                ),
-            ).alias("qq"),
+            F.col(id_col).alias("query_id"), _quantized(vec_col).alias("qq")
         )
-        .withColumn(
-            "qnorm2",
-            F.aggregate(
-                F.col("qq"),
-                F.lit(0).cast("bigint"),
-                lambda s, x: s + x * x,
-            ),
-        )
+        .withColumn("qnorm2", _norm2("qq"))
         .filter(F.col("qnorm2") > 0)
     )
     vecs = (
@@ -445,36 +441,93 @@ def _shortlist_rescore_arrays(
         .filter(F.col("norm2") > 0)
         .select("vec_id", "qv", "norm2")
     )
-    sims = (
-        vecs.join(F.broadcast(short), F.col("vec_id") == F.col("neighbor_id"))
-        .join(F.broadcast(qarr), "query_id")
-        .withColumn(
-            "dot",
-            F.aggregate(
-                F.zip_with(
-                    F.col("qv"),
-                    F.col("qq"),
-                    lambda a, b: F.coalesce(
-                        a.cast("bigint"), F.lit(0).cast("bigint")
-                    )
-                    * F.coalesce(b, F.lit(0).cast("bigint")),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda s, x: s + x,
-            ),
-        )
-        .withColumn(
-            "cosine",
-            F.col("dot") / (F.sqrt(F.col("qnorm2")) * F.sqrt(F.col("norm2"))),
+    short = _top_n(approx, "adot", shortlist, "query_id", "neighbor_id")
+    pairs = vecs.join(
+        F.broadcast(short), F.col("vec_id") == F.col("neighbor_id")
+    ).join(F.broadcast(qarr), "query_id")
+    return _rescore_top_k(pairs, "norm2", k)
+
+
+def _ivf_probe(
+    spark,
+    index_dir: str,
+    queries: DataFrame,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+):
+    """The probe stage of both IVFADC forms: rank the trained centroids
+    per query by squared L2 and keep ``n_probe`` cells, through a
+    BOUNDED driver collect (the serving move shared with
+    ``ivf_probe_topk``, same guard).  Returns (the queries' tagged
+    components, the centroid table, the sorted probed cell list for
+    literal partition filters, the broadcast (query_id, cell) probe
+    frame)."""
+    import os
+
+    from killrweather_spark.functions.ann_index import IVF_MAX_PROBE_CELLS
+
+    qscomp = persist_once(
+        _sub_components(queries, id_col, vec_col).withColumnRenamed(
+            "vec_id", "query_id"
         )
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
+    qd2 = (
+        qscomp.select("query_id", "pos", "q")
+        .join(F.broadcast(cents), "pos")
+        .groupBy("query_id", "cell")
+        .agg(
+            F.sum((F.col("q") - F.col("c")) * (F.col("q") - F.col("c")))
+            .alias("d2")
+        )
     )
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("d2").asc(), F.col("cell").asc()
+    )
+    probe_rows = (
+        qd2.withColumn("rk", F.row_number().over(wq))
+        .filter(F.col("rk") <= n_probe)
+        .select("query_id", "cell")
+        .collect()
+    )
+    if len(probe_rows) > IVF_MAX_PROBE_CELLS:
+        raise ValueError(
+            f"probe list has {len(probe_rows)} entries"
+            f" (> {IVF_MAX_PROBE_CELLS}): the query set is not"
+            " serving-sized — batch it"
+        )
+    probes_df = F.broadcast(
+        spark.createDataFrame(
+            sorted({(int(r.query_id), int(r.cell)) for r in probe_rows}),
+            "query_id bigint, cell bigint",
+        )
+    )
+    return qscomp, cents, sorted({r.cell for r in probe_rows}), probes_df
+
+
+def _adc_hits(
+    spark,
+    index_dir: str,
+    books: str,
+    codes: str,
+    qscomp: DataFrame,
+    cell_list: list,
+    probes: DataFrame,
+) -> DataFrame:
+    """(query_id, cell, vec_id, sub, code, pdot): every probed-cell
+    candidate's LUT hits — the per-query LUT over the index's codebooks
+    table ``books``, joined to the PERSISTED ``codes`` rows of the probed
+    cells (partition-pruned, compressed)."""
+    import os
+
+    lut = _adc_lut(qscomp, spark.read.parquet(os.path.join(index_dir, books)))
     return (
-        sims.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+        spark.read.parquet(os.path.join(index_dir, codes))
+        .filter(F.col("cell").isin(cell_list))
+        .join(probes, "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(lut), ["query_id", "sub", "code"])
     )
 
 
@@ -499,8 +552,9 @@ def ann_ivfpq(
     scores exact, candidates doubly approximate.  (Classic IVFADC
     encodes residuals x−centroid for tighter codes; raw-vector PQ keeps
     the oracle replay independent of the IVF training and is a
-    deployed variant — the residual refinement bolts onto ``_train``
-    by subtracting the broadcast cell centroid in ``scomp``.)
+    deployed variant — the residual form is
+    :func:`ann_ivfpq_residual`, the same probe over codes
+    :func:`_train_residual` trains on ``x − m_cell``.)
 
     At 100 TB: EVERY corpus-sized read is partition-pruned to the
     probed cells via literal cell filters from a bounded driver-side
@@ -510,124 +564,73 @@ def ann_ivfpq(
     reads only the probed cells' inverted lists and norms; the query
     side is serving-sized by premise.  Nothing corpus-sized shuffles
     at probe time."""
-    import os
-
-    from killrweather_spark.functions.ann_index import IVF_MAX_PROBE_CELLS
-
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    pqcents = spark.read.parquet(os.path.join(index_dir, "pqcents"))
     queries = df.filter(query_pred(F.col(id_col)))
-    qscomp = persist_once(
-        _sub_components(queries, id_col, vec_col).withColumnRenamed(
-            "vec_id", "query_id"
-        )
+    qscomp, _, cells, probes = _ivf_probe(
+        spark, index_dir, queries, n_probe, id_col, vec_col
     )
-    qcomp = qscomp.select("query_id", "pos", "q")
-    # IVF side: rank centroids per query, keep n_probe cells
-    qd2 = (
-        qcomp.join(F.broadcast(cents), "pos")
-        .groupBy("query_id", "cell")
-        .agg(
-            F.sum((F.col("q") - F.col("c")) * (F.col("q") - F.col("c")))
-            .alias("d2")
-        )
+    hits = _adc_hits(
+        spark, index_dir, "pqcents", "pqcodes", qscomp, cells, probes
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cell").asc()
-    )
-    probes = (
-        qd2.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= n_probe)
-        .select("query_id", "cell")
-    )
-    # BOUNDED driver collect → literal partition filters (the serving
-    # move shared with ivf_probe_topk, same guard)
-    probe_rows = probes.collect()
-    if len(probe_rows) > IVF_MAX_PROBE_CELLS:
-        raise ValueError(
-            f"probe list has {len(probe_rows)} entries"
-            f" (> {IVF_MAX_PROBE_CELLS}): the query set is not"
-            " serving-sized — batch it"
-        )
-    cell_list = sorted({r.cell for r in probe_rows})
-    probes_df = F.broadcast(
-        spark.createDataFrame(
-            sorted({(int(r.query_id), int(r.cell)) for r in probe_rows}),
-            "query_id bigint, cell bigint",
-        )
-    )
-    # PQ-ADC side: LUT per (query, subspace, code); candidates are the
-    # probed cells' PERSISTED code rows — partition-pruned, compressed
-    lut = (
-        qscomp.join(F.broadcast(pqcents), ["sub", "pos"])
-        .groupBy("query_id", "sub", "code")
-        .agg(F.sum(F.col("q") * F.col("c")).cast("bigint").alias("pdot"))
-    )
-    codes = spark.read.parquet(os.path.join(index_dir, "pqcodes")).filter(
-        F.col("cell").isin(cell_list)
-    )
-    approx = (
-        codes.join(probes_df, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdot").alias("adot"))
-    )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adot").desc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        approx.withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
+    approx = hits.groupBy(
+        "query_id", F.col("vec_id").alias("neighbor_id")
+    ).agg(F.sum("pdot").alias("adot"))
     # exact rescore: probed cells' array-form member table only
     return _shortlist_rescore_arrays(
-        spark, index_dir, cell_list, short, queries, id_col, vec_col, k
-    )
-
-
-def ann_ivfpq_recall(
-    spark,
-    index_dir: str,
-    df: DataFrame,
-    query_pred,
-    k: int = 3,
-    n_probe: int = 2,
-    shortlist: int = PQ_SHORTLIST,
-) -> DataFrame:
-    """Recall of the IVFADC answer against exact brute-force top-k — the
-    COMBINED cost of both approximations (cell pruning × code
-    quantization), the number a deployment tunes n_probe/shortlist
-    against.  Same bounded-query premise as every recall row."""
-    from killrweather_spark.functions.similarity import cosine_topk
-
-    got = ann_ivfpq(
-        spark, index_dir, df, query_pred, k, n_probe, shortlist
-    ).select("query_id", "neighbor_id")
-    truth = cosine_topk(df, query_pred, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    caught = truth.join(got, ["query_id", "neighbor_id"], "left_semi")
-    n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    n_caught = caught.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_caught")
-    )
-    return (
-        n_true.crossJoin(n_caught)
-        .select(
-            "n_true",
-            "n_caught",
-            F.expr("(1000000 * n_caught) div greatest(n_true, 1)")
-            .cast("bigint")
-            .alias("recall_micro"),
-        )
+        spark, index_dir, cells, approx, shortlist, queries, id_col, vec_col, k
     )
 
 
 # --------------------------------------------------------------------------
 # DuckDB oracles
 # --------------------------------------------------------------------------
+
+def _with_sql(comp_nrm_sql: str, parts: list[str]) -> str:
+    """``WITH`` over the registry's shared comp/nrm CTEs and ``parts``;
+    callers append the final SELECT."""
+    return f"WITH {comp_nrm_sql},\n    " + ",\n    ".join(parts)
+
+
+def _lloyd_parts_sql(
+    prefix: str, src: str, iters: int, ks: int, m: int
+) -> list[str]:
+    """The PQ Lloyd replay over the tagged component CTE ``src``: the
+    ``vec_id % ks`` init ``{prefix}pl0``, then per iteration the
+    floor-mean M-step ``{prefix}pcent{t}``, the squared-L2 distances
+    ``{prefix}pd{t}`` and the argmin E-step ``{prefix}pl{t}`` (ties
+    smallest code)."""
+    p = prefix
+    parts = [
+        f"{p}pl0 AS (SELECT DISTINCT vec_id, s.s AS sub,"
+        f" CAST(vec_id % {ks} AS BIGINT) AS code\n"
+        f"      FROM comp, unnest(generate_series(0, {m - 1})) AS s(s))",
+    ]
+    for t in range(1, iters + 1):
+        parts.append(
+            f"{p}pcent{t} AS MATERIALIZED (\n"
+            "      SELECT sub, code, pos, (s - ((s % n + n) % n)) // n AS c\n"
+            "      FROM (SELECT sc.sub, l.code, sc.pos,\n"
+            "                   CAST(SUM(sc.q) AS BIGINT) AS s,\n"
+            "                   CAST(COUNT(*) AS BIGINT) AS n\n"
+            f"            FROM {src} sc JOIN {p}pl{t - 1} l\n"
+            "              ON l.vec_id = sc.vec_id AND l.sub = sc.sub\n"
+            "            GROUP BY 1, 2, 3))"
+        )
+        parts.append(
+            f"{p}pd{t} AS (SELECT sc.vec_id, sc.sub, ct.code,\n"
+            "             CAST(SUM((sc.q - ct.c) * (sc.q - ct.c)) AS BIGINT)"
+            " AS d2\n"
+            f"      FROM {src} sc JOIN {p}pcent{t} ct\n"
+            "        ON ct.sub = sc.sub AND ct.pos = sc.pos\n"
+            "      GROUP BY 1, 2, 3)"
+        )
+        parts.append(
+            f"{p}pl{t} AS MATERIALIZED (SELECT vec_id, sub, code"
+            f" FROM {p}pd{t}\n"
+            "      QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub"
+            " ORDER BY d2, code) = 1)"
+        )
+    return parts
+
 
 def pq_parts_sql(
     iters: int = PQ_ITERS,
@@ -638,40 +641,12 @@ def pq_parts_sql(
     registry's shared ``comp`` CTE: subspace tagging, the ``vec_id % ks``
     init, and per-iteration floor-mean M-step + squared-L2 argmin E-step
     (ties smallest code).  Callers append the ADC / codebook tail."""
-    parts = [
+    return [
         "pdim AS (SELECT MAX(pos) AS d FROM comp)",
         f"scomp AS MATERIALIZED (SELECT c.vec_id, "
         f"((c.pos - 1) * {m}) // d AS sub, c.pos, c.q\n"
         "      FROM comp c CROSS JOIN pdim)",
-        f"pl0 AS (SELECT DISTINCT vec_id, s.s AS sub,"
-        f" CAST(vec_id % {ks} AS BIGINT) AS code\n"
-        f"      FROM comp, unnest(generate_series(0, {m - 1})) AS s(s))",
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f"pcent{t} AS MATERIALIZED (\n"
-            "      SELECT sub, code, pos, (s - ((s % n + n) % n)) // n AS c\n"
-            "      FROM (SELECT sc.sub, l.code, sc.pos,\n"
-            "                   CAST(SUM(sc.q) AS BIGINT) AS s,\n"
-            "                   CAST(COUNT(*) AS BIGINT) AS n\n"
-            f"            FROM scomp sc JOIN pl{t - 1} l\n"
-            "              ON l.vec_id = sc.vec_id AND l.sub = sc.sub\n"
-            "            GROUP BY 1, 2, 3))"
-        )
-        parts.append(
-            f"pd{t} AS (SELECT sc.vec_id, sc.sub, ct.code,\n"
-            "             CAST(SUM((sc.q - ct.c) * (sc.q - ct.c)) AS BIGINT)"
-            " AS d2\n"
-            f"      FROM scomp sc JOIN pcent{t} ct\n"
-            "        ON ct.sub = sc.sub AND ct.pos = sc.pos\n"
-            "      GROUP BY 1, 2, 3)"
-        )
-        parts.append(
-            f"pl{t} AS MATERIALIZED (SELECT vec_id, sub, code FROM pd{t}\n"
-            "      QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub"
-            " ORDER BY d2, code) = 1)"
-        )
-    return parts
+    ] + _lloyd_parts_sql("", "scomp", iters, ks, m)
 
 
 def pq_codebooks_sql(
@@ -680,14 +655,108 @@ def pq_codebooks_sql(
     ks: int = PQ_KS,
     m: int = PQ_M,
 ) -> str:
-    parts = pq_parts_sql(iters, ks, m)
-    return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + f"""
+    return _with_sql(comp_nrm_sql, pq_parts_sql(iters, ks, m)) + f"""
     SELECT sub AS subspace, code, pos, c FROM pcent{iters}
     """
+
+
+def _lut_part_sql(iters: int, where: str = "") -> str:
+    """``plut``: the ADC LookUp Table, each query's partial dots against
+    the final codebooks ``pcent{iters}``; ``where`` (over ``sc``)
+    restricts the queries."""
+    return (
+        "plut AS MATERIALIZED (\n"
+        "      SELECT sc.vec_id AS query_id, ct.sub, ct.code,\n"
+        "             CAST(SUM(sc.q * ct.c) AS BIGINT) AS pdot\n"
+        f"      FROM scomp sc JOIN pcent{iters} ct\n"
+        "        ON ct.sub = sc.sub AND ct.pos = sc.pos"
+        + (f"\n      WHERE {where} " if where else " ")
+        + "GROUP BY 1, 2, 3)"
     )
+
+
+def _rescore_parts_sql(p: str, shortlist: int) -> list[str]:
+    """``{p}short``: the ``shortlist`` best candidates per query of
+    ``{p}approx`` by approximate dot; ``{p}dots``: their exact dot
+    products."""
+    return [
+        f"{p}short AS MATERIALIZED (SELECT query_id, neighbor_id"
+        f" FROM {p}approx\n"
+        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
+        f" ORDER BY adot DESC, neighbor_id) <= {shortlist})",
+        f"{p}dots AS (SELECT s.query_id, s.neighbor_id,"
+        " SUM(a.q * b.q) AS dot\n"
+        f"      FROM {p}short s\n"
+        "      JOIN comp a ON a.vec_id = s.query_id\n"
+        "      JOIN comp b ON b.vec_id = s.neighbor_id AND b.pos = a.pos\n"
+        "      GROUP BY 1, 2)",
+    ]
+
+
+def _topk_sql(dots: str, k: int) -> str:
+    """The final SELECT of an ANN oracle: top-``k`` exact cosine per
+    query over the exact dot products ``dots``."""
+    return f"""
+    SELECT query_id, neighbor_id,
+           dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
+    FROM {dots}
+    JOIN nrm qn ON qn.vec_id = query_id
+    JOIN nrm cn ON cn.vec_id = neighbor_id
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
+                               ORDER BY cosine DESC, neighbor_id) <= {k}
+    """
+
+
+def _recall_sql(
+    comp_nrm_sql: str,
+    parts: list[str],
+    prefix: str,
+    dots: str,
+    query_pred: str,
+    k: int,
+) -> str:
+    """Exact brute-force top-k truth (``{prefix}truth``) LEFT-joined
+    against the ANN answer (``{prefix}got``, top-k over ``dots``), one
+    (n_true, n_caught, recall_micro) row — the ``ann_recall_ivf_trained``
+    shape, the oracle of :func:`ann_recall`."""
+    qp_a = qualify_pred(query_pred, "a")
+    parts = parts + [
+        f"""{prefix}got AS MATERIALIZED (
+      SELECT query_id, neighbor_id FROM (
+        SELECT query_id, neighbor_id,
+               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
+        FROM {dots}
+        JOIN nrm qn ON qn.vec_id = query_id
+        JOIN nrm cn ON cn.vec_id = neighbor_id)
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY cosine DESC, neighbor_id) <= {k})""",
+        f"""{prefix}truth AS MATERIALIZED (
+      SELECT query_id, neighbor_id FROM (
+        SELECT query_id, neighbor_id,
+               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
+        FROM (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+                     SUM(a.q * b.q) AS dot
+              FROM comp a
+              JOIN comp b ON a.pos = b.pos AND ({qp_a})
+                         AND a.vec_id != b.vec_id
+              GROUP BY 1, 2)
+        JOIN nrm qn ON qn.vec_id = query_id
+        JOIN nrm cn ON cn.vec_id = neighbor_id)
+      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY cosine DESC, neighbor_id) <= {k})""",
+    ]
+    pad = " " * len(prefix)
+    return _with_sql(comp_nrm_sql, parts) + f"""
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_true,
+           CAST(SUM(CASE WHEN g.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_caught,
+           CAST((1000000 * SUM(CASE WHEN g.neighbor_id IS NOT NULL
+                                    THEN 1 ELSE 0 END))
+                // GREATEST(COUNT(*), 1) AS BIGINT) AS recall_micro
+    FROM {prefix}truth t
+    LEFT JOIN {prefix}got g ON g.query_id = t.query_id
+                   {pad}AND g.neighbor_id = t.neighbor_id
+    """
 
 
 def _adc_parts_sql(
@@ -699,30 +768,14 @@ def _adc_parts_sql(
 ) -> list[str]:
     """PQ training parts + the ADC tail through ``pdots`` (exact dot
     products of the shortlisted candidates)."""
-    parts = pq_parts_sql(iters, ks, m)
-    qp = qualify_pred(query_pred, "sc")
-    parts += [
-        f"plut AS MATERIALIZED (\n"
-        "      SELECT sc.vec_id AS query_id, ct.sub, ct.code,\n"
-        "             CAST(SUM(sc.q * ct.c) AS BIGINT) AS pdot\n"
-        f"      FROM scomp sc JOIN pcent{iters} ct\n"
-        "        ON ct.sub = sc.sub AND ct.pos = sc.pos\n"
-        f"      WHERE {qp} GROUP BY 1, 2, 3)",
+    return pq_parts_sql(iters, ks, m) + [
+        _lut_part_sql(iters, qualify_pred(query_pred, "sc")),
         f"papprox AS (SELECT l.query_id, cd.vec_id AS neighbor_id,\n"
         "             SUM(l.pdot) AS adot\n"
         f"      FROM pl{iters} cd JOIN plut l\n"
         "        ON l.sub = cd.sub AND l.code = cd.code\n"
         "      WHERE cd.vec_id != l.query_id GROUP BY 1, 2)",
-        "pshort AS MATERIALIZED (SELECT query_id, neighbor_id FROM papprox\n"
-        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
-        f" ORDER BY adot DESC, neighbor_id) <= {shortlist})",
-        "pdots AS (SELECT s.query_id, s.neighbor_id, SUM(a.q * b.q) AS dot\n"
-        "      FROM pshort s\n"
-        "      JOIN comp a ON a.vec_id = s.query_id\n"
-        "      JOIN comp b ON b.vec_id = s.neighbor_id AND b.pos = a.pos\n"
-        "      GROUP BY 1, 2)",
-    ]
-    return parts
+    ] + _rescore_parts_sql("p", shortlist)
 
 
 def ann_pq_adc_sql(
@@ -735,18 +788,70 @@ def ann_pq_adc_sql(
     m: int = PQ_M,
 ) -> str:
     parts = _adc_parts_sql(query_pred, shortlist, iters, ks, m)
+    return _with_sql(comp_nrm_sql, parts) + _topk_sql("pdots", k)
+
+
+def ann_pq_recall_sql(
+    comp_nrm_sql: str,
+    query_pred: str = "vec_id < 5",
+    k: int = 3,
+    shortlist: int = PQ_SHORTLIST,
+    iters: int = PQ_ITERS,
+    ks: int = PQ_KS,
+    m: int = PQ_M,
+) -> str:
+    """Exact brute-force top-k truth LEFT-joined against the PQ-ADC
+    answer set, one summary row."""
+    parts = _adc_parts_sql(query_pred, shortlist, iters, ks, m)
+    return _recall_sql(comp_nrm_sql, parts, "", "pdots", query_pred, k)
+
+
+def _ivf_parts_sql(
+    query_pred: str, n_centroids: int, ivf_iters: int
+) -> list[str]:
+    """The IVF training replay and per-query cell distances ``qd``
+    (``ivf_trained_parts_sql`` without its probe tail)."""
+    from killrweather_spark.functions.ann_index import ivf_trained_parts_sql
+
+    return ivf_trained_parts_sql(
+        n_centroids, ivf_iters, n_probe=0, query_pred=query_pred,
+        probe_tail=False,
+    )
+
+
+def _ivfpq_parts_sql(
+    query_pred: str,
+    n_probe: int,
+    shortlist: int,
+    n_centroids: int,
+    ivf_iters: int,
+    iters: int,
+    ks: int,
+    m: int,
+) -> list[str]:
+    """The IVFADC oracle chain through ``idots``: the IVF training replay
+    (cells + query cell ranking) composed with the PQ training replay
+    (codes + LUT), candidates restricted to probed cells, ADC ranking,
+    exact dots of the shortlist."""
     return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT query_id, neighbor_id,
-           dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-    FROM pdots
-    JOIN nrm qn ON qn.vec_id = query_id
-    JOIN nrm cn ON cn.vec_id = neighbor_id
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) <= {k}
-    """
+        _ivf_parts_sql(query_pred, n_centroids, ivf_iters)
+        + pq_parts_sql(iters, ks, m)
+        + [
+            f"iprobes AS (SELECT query_id, cell FROM qd\n"
+            "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
+            f" ORDER BY d2, cell) <= {n_probe})",
+            f"icand AS (SELECT p.query_id, l.vec_id\n"
+            f"      FROM iprobes p JOIN l{ivf_iters} l ON l.cell = p.cell\n"
+            "      WHERE l.vec_id != p.query_id)",
+            _lut_part_sql(iters, qualify_pred(query_pred, "sc")),
+            f"iapprox AS (SELECT c.query_id, c.vec_id AS neighbor_id,\n"
+            "             SUM(l.pdot) AS adot\n"
+            f"      FROM icand c JOIN pl{iters} cd ON cd.vec_id = c.vec_id\n"
+            "      JOIN plut l ON l.query_id = c.query_id\n"
+            "        AND l.sub = cd.sub AND l.code = cd.code\n"
+            "      GROUP BY 1, 2)",
+        ]
+        + _rescore_parts_sql("i", shortlist)
     )
 
 
@@ -766,55 +871,10 @@ def ann_ivfpq_sql(
     (cells + query cell ranking) composed with the PQ training replay
     (codes + LUT), candidates restricted to probed cells, ADC ranking,
     exact rescore tail."""
-    from killrweather_spark.functions.ann_index import ivf_trained_parts_sql
-
-    parts = ivf_trained_parts_sql(
-        n_centroids, ivf_iters, n_probe=0, query_pred=query_pred,
-        probe_tail=False,
+    parts = _ivfpq_parts_sql(
+        query_pred, n_probe, shortlist, n_centroids, ivf_iters, iters, ks, m
     )
-    parts += pq_parts_sql(iters, ks, m)
-    qp = qualify_pred(query_pred, "sc")
-    parts += [
-        f"iprobes AS (SELECT query_id, cell FROM qd\n"
-        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
-        f" ORDER BY d2, cell) <= {n_probe})",
-        f"icand AS (SELECT p.query_id, l.vec_id\n"
-        f"      FROM iprobes p JOIN l{ivf_iters} l ON l.cell = p.cell\n"
-        "      WHERE l.vec_id != p.query_id)",
-        f"plut AS MATERIALIZED (\n"
-        "      SELECT sc.vec_id AS query_id, ct.sub, ct.code,\n"
-        "             CAST(SUM(sc.q * ct.c) AS BIGINT) AS pdot\n"
-        f"      FROM scomp sc JOIN pcent{iters} ct\n"
-        "        ON ct.sub = sc.sub AND ct.pos = sc.pos\n"
-        f"      WHERE {qp} GROUP BY 1, 2, 3)",
-        f"iapprox AS (SELECT c.query_id, c.vec_id AS neighbor_id,\n"
-        "             SUM(l.pdot) AS adot\n"
-        f"      FROM icand c JOIN pl{iters} cd ON cd.vec_id = c.vec_id\n"
-        "      JOIN plut l ON l.query_id = c.query_id\n"
-        "        AND l.sub = cd.sub AND l.code = cd.code\n"
-        "      GROUP BY 1, 2)",
-        "ishort AS MATERIALIZED (SELECT query_id, neighbor_id FROM iapprox\n"
-        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
-        f" ORDER BY adot DESC, neighbor_id) <= {shortlist})",
-        "idots AS (SELECT s.query_id, s.neighbor_id, SUM(a.q * b.q) AS dot\n"
-        "      FROM ishort s\n"
-        "      JOIN comp a ON a.vec_id = s.query_id\n"
-        "      JOIN comp b ON b.vec_id = s.neighbor_id AND b.pos = a.pos\n"
-        "      GROUP BY 1, 2)",
-    ]
-    return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT query_id, neighbor_id,
-           dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-    FROM idots
-    JOIN nrm qn ON qn.vec_id = query_id
-    JOIN nrm cn ON cn.vec_id = neighbor_id
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) <= {k}
-    """
-    )
+    return _with_sql(comp_nrm_sql, parts) + _topk_sql("idots", k)
 
 
 def ann_ivfpq_recall_sql(
@@ -830,139 +890,10 @@ def ann_ivfpq_recall_sql(
     m: int = PQ_M,
 ) -> str:
     """Exact truth LEFT-joined against the IVFADC answer, one row."""
-    from killrweather_spark.functions.ann_index import ivf_trained_parts_sql
-
-    parts = ivf_trained_parts_sql(
-        n_centroids, ivf_iters, n_probe=0, query_pred=query_pred,
-        probe_tail=False,
+    parts = _ivfpq_parts_sql(
+        query_pred, n_probe, shortlist, n_centroids, ivf_iters, iters, ks, m
     )
-    parts += pq_parts_sql(iters, ks, m)
-    qp = qualify_pred(query_pred, "sc")
-    qp_a = qualify_pred(query_pred, "a")
-    parts += [
-        f"iprobes AS (SELECT query_id, cell FROM qd\n"
-        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
-        f" ORDER BY d2, cell) <= {n_probe})",
-        f"icand AS (SELECT p.query_id, l.vec_id\n"
-        f"      FROM iprobes p JOIN l{ivf_iters} l ON l.cell = p.cell\n"
-        "      WHERE l.vec_id != p.query_id)",
-        f"plut AS MATERIALIZED (\n"
-        "      SELECT sc.vec_id AS query_id, ct.sub, ct.code,\n"
-        "             CAST(SUM(sc.q * ct.c) AS BIGINT) AS pdot\n"
-        f"      FROM scomp sc JOIN pcent{iters} ct\n"
-        "        ON ct.sub = sc.sub AND ct.pos = sc.pos\n"
-        f"      WHERE {qp} GROUP BY 1, 2, 3)",
-        f"iapprox AS (SELECT c.query_id, c.vec_id AS neighbor_id,\n"
-        "             SUM(l.pdot) AS adot\n"
-        f"      FROM icand c JOIN pl{iters} cd ON cd.vec_id = c.vec_id\n"
-        "      JOIN plut l ON l.query_id = c.query_id\n"
-        "        AND l.sub = cd.sub AND l.code = cd.code\n"
-        "      GROUP BY 1, 2)",
-        "ishort AS MATERIALIZED (SELECT query_id, neighbor_id FROM iapprox\n"
-        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
-        f" ORDER BY adot DESC, neighbor_id) <= {shortlist})",
-        "idots AS (SELECT s.query_id, s.neighbor_id, SUM(a.q * b.q) AS dot\n"
-        "      FROM ishort s\n"
-        "      JOIN comp a ON a.vec_id = s.query_id\n"
-        "      JOIN comp b ON b.vec_id = s.neighbor_id AND b.pos = a.pos\n"
-        "      GROUP BY 1, 2)",
-        f"""got AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-        FROM idots
-        JOIN nrm qn ON qn.vec_id = query_id
-        JOIN nrm cn ON cn.vec_id = neighbor_id)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= {k})""",
-        f"""truth AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-        FROM (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                     SUM(a.q * b.q) AS dot
-              FROM comp a
-              JOIN comp b ON a.pos = b.pos AND ({qp_a})
-                         AND a.vec_id != b.vec_id
-              GROUP BY 1, 2)
-        JOIN nrm qn ON qn.vec_id = query_id
-        JOIN nrm cn ON cn.vec_id = neighbor_id)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= {k})""",
-    ]
-    return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_true,
-           CAST(SUM(CASE WHEN g.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_caught,
-           CAST((1000000 * SUM(CASE WHEN g.neighbor_id IS NOT NULL
-                                    THEN 1 ELSE 0 END))
-                // GREATEST(COUNT(*), 1) AS BIGINT) AS recall_micro
-    FROM truth t
-    LEFT JOIN got g ON g.query_id = t.query_id
-                   AND g.neighbor_id = t.neighbor_id
-    """
-    )
-
-
-def ann_pq_recall_sql(
-    comp_nrm_sql: str,
-    query_pred: str = "vec_id < 5",
-    k: int = 3,
-    shortlist: int = PQ_SHORTLIST,
-    iters: int = PQ_ITERS,
-    ks: int = PQ_KS,
-    m: int = PQ_M,
-) -> str:
-    """Exact brute-force top-k truth LEFT-joined against the PQ-ADC
-    answer set, one summary row — the ``ann_recall_ivf_trained``
-    shape."""
-    parts = _adc_parts_sql(query_pred, shortlist, iters, ks, m)
-    qp_a = qualify_pred(query_pred, "a")
-    parts.append(
-        f"""got AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-        FROM pdots
-        JOIN nrm qn ON qn.vec_id = query_id
-        JOIN nrm cn ON cn.vec_id = neighbor_id)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= {k})"""
-    )
-    parts.append(
-        f"""truth AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-        FROM (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                     SUM(a.q * b.q) AS dot
-              FROM comp a
-              JOIN comp b ON a.pos = b.pos AND ({qp_a})
-                         AND a.vec_id != b.vec_id
-              GROUP BY 1, 2)
-        JOIN nrm qn ON qn.vec_id = query_id
-        JOIN nrm cn ON cn.vec_id = neighbor_id)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= {k})"""
-    )
-    return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_true,
-           CAST(SUM(CASE WHEN g.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_caught,
-           CAST((1000000 * SUM(CASE WHEN g.neighbor_id IS NOT NULL
-                                    THEN 1 ELSE 0 END))
-                // GREATEST(COUNT(*), 1) AS BIGINT) AS recall_micro
-    FROM truth t
-    LEFT JOIN got g ON g.query_id = t.query_id
-                   AND g.neighbor_id = t.neighbor_id
-    """
-    )
+    return _recall_sql(comp_nrm_sql, parts, "", "idots", query_pred, k)
 
 
 # --------------------------------------------------------------------------
@@ -1306,22 +1237,13 @@ def streaming_semantic_screen_sql(
     corpus), every arrival assigned its single nearest trained cell,
     same-cell candidates ADC-scored through the replayed codebooks,
     per-arrival rollup."""
-    from killrweather_spark.functions.ann_index import ivf_trained_parts_sql
-
-    parts = ivf_trained_parts_sql(
-        n_centroids, ivf_iters, n_probe=0, query_pred=arrival_pred,
-        probe_tail=False,
-    )
+    parts = _ivf_parts_sql(arrival_pred, n_centroids, ivf_iters)
     parts += pq_parts_sql(iters, ks, m)
     parts += [
         "acell AS MATERIALIZED (SELECT query_id, cell FROM qd\n"
         "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
         " ORDER BY d2, cell) = 1)",
-        f"plut AS MATERIALIZED (\n"
-        "      SELECT sc.vec_id AS query_id, ct.sub, ct.code,\n"
-        "             CAST(SUM(sc.q * ct.c) AS BIGINT) AS pdot\n"
-        f"      FROM scomp sc JOIN pcent{iters} ct\n"
-        "        ON ct.sub = sc.sub AND ct.pos = sc.pos GROUP BY 1, 2, 3)",
+        _lut_part_sql(iters),
         f"scand AS (SELECT a.query_id, a.cell, l.vec_id AS cand_id\n"
         f"      FROM acell a JOIN l{ivf_iters} l ON l.cell = a.cell\n"
         "        AND l.vec_id != a.query_id\n"
@@ -1337,12 +1259,7 @@ def streaming_semantic_screen_sql(
         "      FROM adots a JOIN nrm qn ON qn.vec_id = a.query_id\n"
         "      JOIN nrm cn ON cn.vec_id = a.cand_id)",
     ]
-    return (
-        "WITH "
-        + comp_nrm_sql
-        + ",\n    "
-        + ",\n    ".join(parts)
-        + """
+    return _with_sql(comp_nrm_sql, parts) + """
     SELECT a.query_id AS vec_id, CAST(a.cell AS BIGINT) AS cell,
            CAST(COUNT(s.cand_id) AS BIGINT) AS n_candidates,
            CAST(COALESCE(SUM(s.k), 0) AS BIGINT) AS n_known,
@@ -1352,7 +1269,6 @@ def streaming_semantic_screen_sql(
     LEFT JOIN sscored s ON s.query_id = a.query_id
     GROUP BY 1, 2
     """
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1387,7 +1303,8 @@ def ann_ivfpq_residual(
     approximate — only the candidate RANKING differs from the
     raw-vector variant.  Residuals are smaller than vectors, so the
     codebooks' 16 codes cover a tighter range — the production
-    rationale; measured honestly by :func:`ann_ivfpq_residual_recall`.
+    rationale; measured honestly by the ``ann_ivfpq_residual_recall``
+    registry row (:func:`ann_recall` of this answer).
     At the registry's small-sf geometry the two variants land within
     one caught pair of each other (11 vs 12 of 15) because recall loss
     there is dominated by CELL pruning, which both share.  The round-11
@@ -1399,73 +1316,25 @@ def ann_ivfpq_residual(
     i.e. residual encoding measurably improves the ADC candidate
     RANKING at equal bytes, and stays the recommended production
     default (raw codes remain the oracle baseline)."""
-    import os
-
-    from killrweather_spark.functions.ann_index import IVF_MAX_PROBE_CELLS
-
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    pqrcents = spark.read.parquet(os.path.join(index_dir, "pqrcents"))
     queries = df.filter(query_pred(F.col(id_col)))
-    qscomp = persist_once(
-        _sub_components(queries, id_col, vec_col).withColumnRenamed(
-            "vec_id", "query_id"
-        )
-    )
-    qcomp = qscomp.select("query_id", "pos", "q")
-    qd2 = (
-        qcomp.join(F.broadcast(cents), "pos")
-        .groupBy("query_id", "cell")
-        .agg(
-            F.sum((F.col("q") - F.col("c")) * (F.col("q") - F.col("c")))
-            .alias("d2")
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("cell").asc()
-    )
-    probes = (
-        qd2.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= n_probe)
-        .select("query_id", "cell")
-    )
-    probe_rows = probes.collect()
-    if len(probe_rows) > IVF_MAX_PROBE_CELLS:
-        raise ValueError(
-            f"probe list has {len(probe_rows)} entries"
-            f" (> {IVF_MAX_PROBE_CELLS}): the query set is not"
-            " serving-sized — batch it"
-        )
-    cell_list = sorted({r.cell for r in probe_rows})
-    probes_df = F.broadcast(
-        spark.createDataFrame(
-            sorted({(int(r.query_id), int(r.cell)) for r in probe_rows}),
-            "query_id bigint, cell bigint",
-        )
+    qscomp, cents, cells, probes = _ivf_probe(
+        spark, index_dir, queries, n_probe, id_col, vec_col
     )
     # the coarse term: dot(q, m_cell) per PROBED (query, cell) — one
     # scalar each, from the broadcast centroid table
     mdot = (
-        qcomp.join(
-            F.broadcast(cents.filter(F.col("cell").isin(cell_list))), "pos"
-        )
+        qscomp.select("query_id", "pos", "q")
+        .join(F.broadcast(cents.filter(F.col("cell").isin(cells))), "pos")
         .groupBy("query_id", "cell")
         .agg(F.sum(F.col("q") * F.col("c")).cast("bigint").alias("mdot"))
-        .join(probes_df, ["query_id", "cell"])
+        .join(probes, ["query_id", "cell"])
     )
     # the residual term: LUT over the RESIDUAL codebooks (query stays raw)
-    lut = (
-        qscomp.join(F.broadcast(pqrcents), ["sub", "pos"])
-        .groupBy("query_id", "sub", "code")
-        .agg(F.sum(F.col("q") * F.col("c")).cast("bigint").alias("pdot"))
-    )
-    codes = spark.read.parquet(os.path.join(index_dir, "pqrcodes")).filter(
-        F.col("cell").isin(cell_list)
+    hits = _adc_hits(
+        spark, index_dir, "pqrcents", "pqrcodes", qscomp, cells, probes
     )
     approx = (
-        codes.join(probes_df, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .groupBy("query_id", "cell", F.col("vec_id").alias("neighbor_id"))
+        hits.groupBy("query_id", "cell", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("pdot").alias("rdot"))
         .join(F.broadcast(mdot), ["query_id", "cell"])
         .select(
@@ -1474,50 +1343,8 @@ def ann_ivfpq_residual(
             (F.col("mdot") + F.col("rdot")).alias("adot"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("adot").desc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        approx.withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
     return _shortlist_rescore_arrays(
-        spark, index_dir, cell_list, short, queries, id_col, vec_col, k
-    )
-
-
-def ann_ivfpq_residual_recall(
-    spark,
-    index_dir: str,
-    df: DataFrame,
-    query_pred,
-    k: int = 3,
-    n_probe: int = 2,
-    shortlist: int = PQ_SHORTLIST,
-) -> DataFrame:
-    """Recall of the residual-encoded IVFADC answer vs exact top-k —
-    the measurement that justifies residual encoding over raw-vector
-    PQ (same probe budget, tighter codes)."""
-    from killrweather_spark.functions.similarity import cosine_topk
-
-    got = ann_ivfpq_residual(
-        spark, index_dir, df, query_pred, k, n_probe, shortlist
-    ).select("query_id", "neighbor_id")
-    truth = cosine_topk(df, query_pred, k=k).select(
-        "query_id", "neighbor_id"
-    )
-    caught = truth.join(got, ["query_id", "neighbor_id"], "left_semi")
-    n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    n_caught = caught.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_caught")
-    )
-    return n_true.crossJoin(n_caught).select(
-        "n_true",
-        "n_caught",
-        F.expr("(1000000 * n_caught) div greatest(n_true, 1)")
-        .cast("bigint")
-        .alias("recall_micro"),
+        spark, index_dir, cells, approx, shortlist, queries, id_col, vec_col, k
     )
 
 
@@ -1533,7 +1360,7 @@ def residual_pq_parts_sql(
     components, the vec_id % ks init, floor-mean M-step + squared-L2
     argmin E-step per iteration.  CTE names prefixed ``r`` so they
     compose with the raw-vector parts in one statement."""
-    parts = [
+    return [
         "rpdim AS (SELECT MAX(pos) AS d FROM comp)",
         f"rres AS MATERIALIZED (\n"
         f"      SELECT c.vec_id, ((c.pos - 1) * {m}) // d AS sub,"
@@ -1542,35 +1369,7 @@ def residual_pq_parts_sql(
         f"      JOIN cent{ivf_iters} ct ON ct.cell = l.cell"
         " AND ct.pos = c.pos\n"
         "      CROSS JOIN rpdim)",
-        f"rpl0 AS (SELECT DISTINCT vec_id, s.s AS sub,"
-        f" CAST(vec_id % {ks} AS BIGINT) AS code\n"
-        f"      FROM comp, unnest(generate_series(0, {m - 1})) AS s(s))",
-    ]
-    for t in range(1, iters + 1):
-        parts.append(
-            f"rpcent{t} AS MATERIALIZED (\n"
-            "      SELECT sub, code, pos, (s - ((s % n + n) % n)) // n AS c\n"
-            "      FROM (SELECT sc.sub, l.code, sc.pos,\n"
-            "                   CAST(SUM(sc.q) AS BIGINT) AS s,\n"
-            "                   CAST(COUNT(*) AS BIGINT) AS n\n"
-            f"            FROM rres sc JOIN rpl{t - 1} l\n"
-            "              ON l.vec_id = sc.vec_id AND l.sub = sc.sub\n"
-            "            GROUP BY 1, 2, 3))"
-        )
-        parts.append(
-            f"rpd{t} AS (SELECT sc.vec_id, sc.sub, ct.code,\n"
-            "             CAST(SUM((sc.q - ct.c) * (sc.q - ct.c)) AS BIGINT)"
-            " AS d2\n"
-            f"      FROM rres sc JOIN rpcent{t} ct\n"
-            "        ON ct.sub = sc.sub AND ct.pos = sc.pos\n"
-            "      GROUP BY 1, 2, 3)"
-        )
-        parts.append(
-            f"rpl{t} AS MATERIALIZED (SELECT vec_id, sub, code FROM rpd{t}\n"
-            "      QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, sub"
-            " ORDER BY d2, code) = 1)"
-        )
-    return parts
+    ] + _lloyd_parts_sql("r", "rres", iters, ks, m)
 
 
 def _ivfpq_residual_core_parts(
@@ -1586,12 +1385,7 @@ def _ivfpq_residual_core_parts(
     """Shared CTE chain for the residual-IVFADC oracle: IVF + residual-PQ
     training replays, probes, coarse term, residual LUT, approximate
     ranking, exact-rescore dots."""
-    from killrweather_spark.functions.ann_index import ivf_trained_parts_sql
-
-    parts = ivf_trained_parts_sql(
-        n_centroids, ivf_iters, n_probe=0, query_pred=query_pred,
-        probe_tail=False,
-    )
+    parts = _ivf_parts_sql(query_pred, n_centroids, ivf_iters)
     parts += residual_pq_parts_sql(ivf_iters, iters, ks, m)
     qp_c = qualify_pred(query_pred, "c")
     parts += [
@@ -1621,18 +1415,8 @@ def _ivfpq_residual_core_parts(
         "      JOIN rmdot md ON md.query_id = c.query_id"
         " AND md.cell = c.cell\n"
         "      GROUP BY c.query_id, c.vec_id, md.mdot)",
-        "rishort AS MATERIALIZED (SELECT query_id, neighbor_id"
-        " FROM riapprox\n"
-        "      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id"
-        f" ORDER BY adot DESC, neighbor_id) <= {shortlist})",
-        "ridots AS (SELECT s.query_id, s.neighbor_id,"
-        " SUM(a.q * b.q) AS dot\n"
-        "      FROM rishort s\n"
-        "      JOIN comp a ON a.vec_id = s.query_id\n"
-        "      JOIN comp b ON b.vec_id = s.neighbor_id AND b.pos = a.pos\n"
-        "      GROUP BY 1, 2)",
     ]
-    return parts
+    return parts + _rescore_parts_sql("ri", shortlist)
 
 
 def ann_ivfpq_residual_sql(
@@ -1652,19 +1436,7 @@ def ann_ivfpq_residual_sql(
         query_pred, n_probe, shortlist, n_centroids, ivf_iters, iters,
         ks, m,
     )
-    return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + f"""
-    SELECT query_id, neighbor_id,
-           dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-    FROM ridots
-    JOIN nrm qn ON qn.vec_id = query_id
-    JOIN nrm cn ON cn.vec_id = neighbor_id
-    QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) <= {k}
-    """
-    )
+    return _with_sql(comp_nrm_sql, parts) + _topk_sql("ridots", k)
 
 
 def ann_ivfpq_residual_recall_sql(
@@ -1684,44 +1456,4 @@ def ann_ivfpq_residual_recall_sql(
         query_pred, n_probe, shortlist, n_centroids, ivf_iters, iters,
         ks, m,
     )
-    qp_a = qualify_pred(query_pred, "a")
-    parts += [
-        f"""rgot AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-        FROM ridots
-        JOIN nrm qn ON qn.vec_id = query_id
-        JOIN nrm cn ON cn.vec_id = neighbor_id)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= {k})""",
-        f"""rtruth AS MATERIALIZED (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               dot / (SQRT(qn.norm2) * SQRT(cn.norm2)) AS cosine
-        FROM (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                     SUM(a.q * b.q) AS dot
-              FROM comp a
-              JOIN comp b ON a.pos = b.pos AND ({qp_a})
-                         AND a.vec_id != b.vec_id
-              GROUP BY 1, 2)
-        JOIN nrm qn ON qn.vec_id = query_id
-        JOIN nrm cn ON cn.vec_id = neighbor_id)
-      QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) <= {k})""",
-    ]
-    return (
-        f"WITH {comp_nrm_sql},\n    "
-        + ",\n    ".join(parts)
-        + """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_true,
-           CAST(SUM(CASE WHEN g.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_caught,
-           CAST((1000000 * SUM(CASE WHEN g.neighbor_id IS NOT NULL
-                                    THEN 1 ELSE 0 END))
-                // GREATEST(COUNT(*), 1) AS BIGINT) AS recall_micro
-    FROM rtruth t
-    LEFT JOIN rgot g ON g.query_id = t.query_id
-                    AND g.neighbor_id = t.neighbor_id
-    """
-    )
+    return _recall_sql(comp_nrm_sql, parts, "r", "ridots", query_pred, k)

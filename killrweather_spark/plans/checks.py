@@ -43,10 +43,36 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
+def _final_only_ids(plan: str) -> set[str]:
+    """Ids of the nodes only an adaptive ``== Final Plan ==`` tree holds.
+
+    Once its frame has run an action, an adaptive plan prints the final
+    tree beside the ``== Initial Plan ==`` one, and the details section
+    describes the nodes of both; skipping these ids makes every counter
+    read the initial plan, i.e. what it reads before any action (where
+    this set is empty).  Nodes the two trees share keep their id."""
+    final: set[str] = set()
+    initial: set[str] = set()
+    stack: list[tuple[str, int]] = []  # enclosing (section, marker indent)
+    for ln in plan.splitlines():
+        indent = len(ln) - len(ln.lstrip())
+        while stack and (not ln.strip() or indent <= stack[-1][1]):
+            stack.pop()
+        m = re.match(r"\s*\+- == (Final|Initial) Plan ==$", ln)
+        if m:
+            stack.append((m.group(1), indent))
+        elif stack:
+            ids = final if any(s == "Final" for s, _ in stack) else initial
+            ids.update(re.findall(r"\((\d+)\)", ln))
+    return final - initial
+
+
 def node_count(df: DataFrame, node: str) -> int:
     """Unique occurrences of a physical operator (formatted plans print each
     node twice: once in the tree, once in the details section)."""
-    return len(set(re.findall(rf"\((\d+)\) {node}", formatted_plan(df))))
+    plan = formatted_plan(df)
+    found = set(re.findall(rf"\((\d+)\) {node}", plan))
+    return len(found - _final_only_ids(plan))
 
 
 def shuffle_count(df: DataFrame) -> int:
@@ -198,14 +224,14 @@ def unpartitioned_window_count(df: DataFrame | str) -> int:
     always accompanies a counted ``Window``).  Both layouts are pinned
     by fixture tests (tests/test_plans.py) so a Spark-upgrade drift
     fails loudly instead of silently miscounting.  Takes the frame or its
-    formatted plan: format it before any action, since a plan formatted
-    after one prints the adaptive final plan beside the initial one and
-    counts each Window twice."""
+    formatted plan."""
     plan = df if isinstance(df, str) else formatted_plan(df)
+    skip = _final_only_ids(plan)
     lines = plan.splitlines()
     cnt = 0
     for i, ln in enumerate(lines):
-        if not re.match(r"\(\d+\) (Window|WindowInPandas)$", ln.strip()):
+        m = re.match(r"\((\d+)\) (Window|WindowInPandas)$", ln.strip())
+        if not m or m.group(1) in skip:
             continue
         for j in range(i + 1, min(i + 6, len(lines))):
             stripped = lines[j].strip()

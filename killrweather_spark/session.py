@@ -67,11 +67,11 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # (exact_substring_pairs 2.2 s -> 1.1 s; ten-query probe 18.0 -> 12.1 s) and
 # a 32-wide sf1 shuffle loses to 16 (30.4 -> 24.4 s).  AQE read-side
 # coalescing did NOT recover this (parallelismFirst=false A/B'd a wash), so
-# the INITIAL number must track input size.  Production posture: raise
-# SPARK_GRAFT_SHUFFLE_TARGET_MB toward the guide's 100 MB-1 GB per-partition
-# band (the 16 MiB default reflects local-mode per-partition fixed costs)
-# and the 4x-slots cap scales with the cluster.
-SHUFFLE_TARGET_MB = int(os.environ.get("SPARK_GRAFT_SHUFFLE_TARGET_MB", "16"))
+# the INITIAL number must track input size.  16 MiB per partition reflects
+# local-mode per-partition fixed costs; a cluster deployment would move it
+# toward the guide's 100 MB-1 GB per-partition band, and the 4x-slots cap
+# scales with the cluster.
+SHUFFLE_TARGET_MB = 16
 
 # Compiled-class cache size (static: read once, when the JVM first compiles).
 # The registry bench's three queries alone generate 105 distinct classes over

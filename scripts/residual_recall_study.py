@@ -4,8 +4,8 @@ At the registry geometry (8 cells, n_probe=2, 5 queries, k=3) the two
 IVFADC variants tie within one caught pair because recall loss is
 dominated by CELL pruning, which both share.  This study removes that
 confound: sweeping n_probe up to n_centroids makes cell loss exactly
-zero at the top of the sweep, so any remaining gap between
-``ann_ivfpq_recall`` and ``ann_ivfpq_residual_recall`` is attributable
+zero at the top of the sweep, so any remaining gap between the
+``ann_recall`` of ``ann_ivfpq`` and of ``ann_ivfpq_residual`` is attributable
 to the codes (ADC candidate ranking × shortlist) alone.  A tight
 shortlist stresses the code ranking further — with a corpus-sized
 shortlist ADC order stops mattering, so the interesting cells are the
@@ -30,8 +30,9 @@ def main() -> None:
     from killrweather_spark.api.inventory import _ivf_index_dir, load_table
     from killrweather_spark.functions.ann_index import ensure_ivf_index
     from killrweather_spark.functions.pq import (
-        ann_ivfpq_recall,
-        ann_ivfpq_residual_recall,
+        ann_ivfpq,
+        ann_ivfpq_residual,
+        ann_recall,
     )
     from killrweather_spark.session import get_session
 
@@ -52,14 +53,18 @@ def main() -> None:
         pred = lambda c: c < n_queries  # noqa: E731
         for n_probe in (2, 4, 8):
             for shortlist in (16, 32):
-                raw = ann_ivfpq_recall(
-                    spark, idx, emb, pred, k=k, n_probe=n_probe,
-                    shortlist=shortlist,
-                ).collect()[0]
-                res = ann_ivfpq_residual_recall(
-                    spark, idx, emb, pred, k=k, n_probe=n_probe,
-                    shortlist=shortlist,
-                ).collect()[0]
+                raw, res = (
+                    ann_recall(
+                        ann(
+                            spark, idx, emb, pred, k=k, n_probe=n_probe,
+                            shortlist=shortlist,
+                        ),
+                        emb,
+                        pred,
+                        k=k,
+                    ).collect()[0]
+                    for ann in (ann_ivfpq, ann_ivfpq_residual)
+                )
                 assert raw.n_true == res.n_true
                 rows.append(
                     {

@@ -138,7 +138,6 @@ def test_shuffle_width_size_sum_stops_at_the_cap(tmp_path, monkeypatch):
         with open(table / f"part-{i:05d}.parquet", "wb") as f:
             f.truncate(8 << 20)  # sparse: 8 MiB apparent size, no data blocks
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(d))
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_TARGET_MB", raising=False)
     importlib.reload(S)
     real_stat = os.stat
     calls = []

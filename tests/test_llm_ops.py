@@ -2148,7 +2148,8 @@ def test_pq_codebooks_shape_and_adc_recall(spark, monkeypatch):
     default."""
     import killrweather_spark.functions.pq as P
     from killrweather_spark.functions.pq import (
-        ann_pq_recall,
+        ann_pq_adc,
+        ann_recall,
         pq_codebooks,
     )
 
@@ -2173,11 +2174,29 @@ def test_pq_codebooks_shape_and_adc_recall(spark, monkeypatch):
         assert len(poss) == 2  # 8 dims / 4 subspaces
     # shortlist >= same-cluster candidate count, so ADC code ties within
     # the cluster cannot chop a true neighbor before the exact rescore
-    rec = ann_pq_recall(
-        emb, lambda c: c < 5, k=3, shortlist=9, iters=2, ks=4
+    rec = ann_recall(
+        ann_pq_adc(emb, lambda c: c < 5, k=3, shortlist=9, iters=2, ks=4),
+        emb,
+        lambda c: c < 5,
+        k=3,
     ).collect()[0]
     assert rec.n_true == 15
     assert rec.recall_micro == 1_000_000, rec
+
+
+def test_ann_recall_of_an_empty_query_set_is_zero(spark):
+    """A query predicate that matches nothing yields one
+    (n_true, n_caught, recall_micro) = (0, 0, 0) row — the
+    ``greatest(n_true, 1)`` guard keeps the division defined."""
+    from killrweather_spark.functions.pq import ann_pq_adc, ann_recall
+
+    emb = spark.createDataFrame(
+        [(i, [1.0 + i, 0.5, 0.25 * i]) for i in range(6)],
+        "vec_id bigint, embedding array<float>",
+    )
+    none = lambda c: c < 0  # noqa: E731
+    rows = ann_recall(ann_pq_adc(emb, none, ks=4), emb, none).collect()
+    assert [tuple(r) for r in rows] == [(0, 0, 0)]
 
 
 def test_pq_estep_pivoted_matches_two_level_reference(spark):

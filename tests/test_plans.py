@@ -683,6 +683,20 @@ def test_unpartitioned_window_count_layout_fixtures(spark):
     # heuristic — this assert makes that drift visible)
     plan = checks.formatted_plan(cases[0][1])
     assert "windowspecdefinition(" in plan, plan
+    # after an action the adaptive plan prints its final plan beside the
+    # initial one; every counter still reads what it read before
+    def counts(d):
+        return (
+            checks.unpartitioned_window_count(d),
+            checks.node_count(d, "Window"),
+            checks.shuffle_count(d),
+        )
+
+    for _, d in cases:
+        before = counts(d)
+        d.collect()
+        assert "== Final Plan ==" in checks.formatted_plan(d)
+        assert counts(d) == before, (before, counts(d))
 
 
 def test_entire_registry_has_no_unpartitioned_window(built_query):
