@@ -1836,10 +1836,7 @@ def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_png_pixels,
     )
 
-    # CPU-bound Arrow decode: fan out the single-file bench-SF scan
-    # so every task slot decodes (no-op on wide production scans)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return png_pixel_stats(synth_png_pixels(docs))
+    return png_pixel_stats(synth_png_pixels(_media_docs(spark, sf_dir)))
 
 
 @register(
@@ -1883,10 +1880,7 @@ def q_wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         wav_audio_stats,
     )
 
-    # CPU-bound Arrow decode: fan out the single-file bench-SF scan
-    # so every task slot decodes (no-op on wide production scans)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return wav_audio_stats(synth_wav(docs))
+    return wav_audio_stats(synth_wav(_media_docs(spark, sf_dir)))
 
 
 @register(
@@ -1940,10 +1934,7 @@ def q_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_gif_pixels,
     )
 
-    # CPU-bound Arrow decode: fan out the single-file bench-SF scan
-    # so every task slot decodes (no-op on wide production scans)
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    return gif_pixel_stats(synth_gif_pixels(docs))
+    return gif_pixel_stats(synth_gif_pixels(_media_docs(spark, sf_dir)))
 
 
 def _url_reg_cte(table: str = "documents",
@@ -11384,11 +11375,7 @@ def _wire_vad() -> None:
             wav_energy_segments,
         )
 
-        return wav_energy_segments(
-            # CPU-bound Arrow decode: fan out the single-file bench-SF
-            # scan (no-op on wide production scans)
-            synth_wav(fan_out(load_table(spark, sf_dir, "documents")))
-        )
+        return wav_energy_segments(synth_wav(_media_docs(spark, sf_dir)))
 
 
 _wire_vad()

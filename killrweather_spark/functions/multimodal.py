@@ -21,11 +21,13 @@ do it INSIDE the pandas iterator so the fan-out happens batch-wise.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from killrweather_spark.plans.caching import persist_once
 
 FRAME_BYTES = 256  # fake "frame" granularity for the stub decoder
 
@@ -121,6 +123,74 @@ def _make_media_decoder():
 decode_media = _make_media_decoder()
 
 
+def _map_rows(df: DataFrame, cols: tuple[str, ...], schema: str,
+              row_fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """The one Arrow batch loop behind the media operators: select
+    ``cols``, call ``row_fn(*values)`` on each row of every batch and
+    yield the output tuples it returns (0..n per input row, so fan-out
+    stays inside the batch) as one positional DataFrame, matched to
+    ``schema`` by position; a batch with no output rows yields nothing.
+    Structured Streaming runs the same map on every trigger.
+
+    ``row_fn`` must be defined inside the calling operator and call only
+    locals or factory-built helpers (:func:`_make_pixel_helpers`, the
+    codecs): cloudpickle then ships it BY VALUE, as
+    :func:`_make_media_decoder` explains — a module-level helper would
+    be pickled by reference and fail on a worker that cannot import this
+    package."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = [
+                t for vals in zip(*(pdf[c] for c in cols))
+                for t in row_fn(*vals)
+            ]
+            if out:
+                yield pd.DataFrame(out)
+
+    return df.select(*cols).mapInPandas(batches, schema)
+
+
+def _make_pixel_helpers():
+    """Build the helpers the media row functions share as locally-defined
+    functions, so they pickle BY VALUE with them (the worker-import
+    rationale of :func:`_make_media_decoder`)."""
+    import hashlib
+
+    def md5_dims(text, mod: int) -> tuple[str, int, int, int]:
+        """md5(text) as hex, plus the ``(w, h, seed)`` the synthesizers
+        derive from it: ``1 + hex[0:4] % mod``, ``1 + hex[4:8] % mod``,
+        ``hex[8:10]``."""
+        hx = hashlib.md5(str(text).encode("utf-8")).hexdigest()
+        return (
+            hx, 1 + int(hx[0:4], 16) % mod, 1 + int(hx[4:8], 16) % mod,
+            int(hx[8:10], 16),
+        )
+
+    def rgb_means_micro(px: bytes, n: int) -> tuple[int, int, int]:
+        """Per-channel ``(10⁶ · Σ channel c) div n`` over raw RGB bytes;
+        stride slices sum at C speed — the Python-level per-pixel loop
+        dominated the decode cost."""
+        return tuple(1_000_000 * sum(px[c::3]) // n for c in range(3))
+
+    def gray_grid(w: int, h: int, px: bytes) -> list[int]:
+        """The 8×8 nearest-point gray downsample of raw RGB bytes: sample
+        ``(X, Y) = ((i·w)//8, (j·h)//8)``, gray = channel sum div 3,
+        row-major."""
+        out = []
+        for j in range(8):
+            y = (j * h) // 8
+            for i in range(8):
+                off = 3 * (y * w + (i * w) // 8)
+                out.append((px[off] + px[off + 1] + px[off + 2]) // 3)
+        return out
+
+    return md5_dims, rgb_means_micro, gray_grid
+
+
+_md5_dims, _rgb_means_micro, _gray_grid = _make_pixel_helpers()
+
+
 def synth_png(df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
     """Deterministic real-PNG payload synthesis for the decode path: each
@@ -129,25 +199,18 @@ def synth_png(df: DataFrame, id_col: str = "doc_id",
     ``1 + hex[4:8] % 512`` tall — so the DuckDB oracle can predict the
     decoded dimensions arithmetically while :func:`decode_media` genuinely
     parses them out of the bytes."""
-    import hashlib
 
-    schema = f"{id_col} bigint, content binary"
+    def row(i, text):
+        _, w, ht, _ = _md5_dims(text, 512)
+        ihdr = w.to_bytes(4, "big") + ht.to_bytes(4, "big") + b"\x08\x02\x00\x00\x00"
+        yield i, (
+            b"\x89PNG\r\n\x1a\n"
+            + len(ihdr).to_bytes(4, "big") + b"IHDR" + ihdr
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                h = hashlib.md5(str(text).encode("utf-8")).hexdigest()
-                w = 1 + int(h[0:4], 16) % 512
-                ht = 1 + int(h[4:8], 16) % 512
-                ihdr = w.to_bytes(4, "big") + ht.to_bytes(4, "big") + b"\x08\x02\x00\x00\x00"
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n"
-                    + len(ihdr).to_bytes(4, "big") + b"IHDR" + ihdr
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "content": payloads})
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
+    return _map_rows(
+        df, (id_col, text_col), f"{id_col} bigint, content binary", row
+    )
 
 
 def _make_png_codec():
@@ -308,27 +371,17 @@ def synth_png_pixels(df: DataFrame, id_col: str = "doc_id",
     cycle through all five types (``y % 5``), so the decoder's Sub / Up /
     Average / Paeth reconstruction runs against real data and the DuckDB
     oracle can still predict every decoded pixel arithmetically."""
-    import hashlib
 
-    schema = f"{id_col} bigint, content binary"
-    enc = encode_png
+    def row(i, text):
+        _, w, ht, seed = _md5_dims(text, PX_DIM_MOD)
+        yield i, encode_png(w, ht, bytes(
+            (7 * x + 11 * y + 13 * c + seed) % 256
+            for y in range(ht) for x in range(w) for c in range(3)
+        ))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                h = hashlib.md5(str(text).encode("utf-8")).hexdigest()
-                w = 1 + int(h[0:4], 16) % PX_DIM_MOD
-                ht = 1 + int(h[4:8], 16) % PX_DIM_MOD
-                seed = int(h[8:10], 16)
-                px = bytes(
-                    (7 * x + 11 * y + 13 * c + seed) % 256
-                    for y in range(ht) for x in range(w) for c in range(3)
-                )
-                payloads.append(enc(w, ht, px))
-            yield pd.DataFrame({id_col: pdf[id_col], "content": payloads})
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
+    return _map_rows(
+        df, (id_col, text_col), f"{id_col} bigint, content binary", row
+    )
 
 
 def png_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -345,34 +398,12 @@ def png_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         f"{id_col} bigint, width int, height int, "
         "mean_r_micro bigint, mean_g_micro bigint, mean_b_micro bigint"
     )
-    dec = decode_png_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("id", "w", "h", "r", "g", "b")}
-            for i, content in zip(pdf[id_col], pdf["content"]):
-                w, h, px = dec(bytes(content))
-                n = w * h
-                # stride slices sum at C speed (shared with gif stats)
-                sums = [sum(px[0::3]), sum(px[1::3]), sum(px[2::3])]
-                rows["id"].append(i)
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["r"].append(1_000_000 * sums[0] // n)
-                rows["g"].append(1_000_000 * sums[1] // n)
-                rows["b"].append(1_000_000 * sums[2] // n)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows["id"], dtype="int64"),
-                    "width": pd.Series(rows["w"], dtype="int32"),
-                    "height": pd.Series(rows["h"], dtype="int32"),
-                    "mean_r_micro": pd.Series(rows["r"], dtype="int64"),
-                    "mean_g_micro": pd.Series(rows["g"], dtype="int64"),
-                    "mean_b_micro": pd.Series(rows["b"], dtype="int64"),
-                }
-            )
+    def row(i, content):
+        w, h, px = decode_png_pixels(bytes(content))
+        yield (i, w, h, *_rgb_means_micro(px, w * h))
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def _make_wav_codec():
@@ -478,28 +509,19 @@ def synth_wav(df: DataFrame, id_col: str = "doc_id",
     decoder genuinely de-multiplexes interleaved PCM frames while the
     DuckDB oracle predicts every decoded statistic arithmetically (the
     synth_png_pixels pattern, audio edition)."""
-    import hashlib
 
-    schema = f"{id_col} bigint, content binary"
-    enc = encode_wav
+    def row(i, text):
+        hx, n, _, seed = _md5_dims(text, WAV_LEN_MOD)
+        n_ch = 1 + int(hx[4:5], 16) % 2
+        chans = [
+            [((37 * s + 17 * c + seed) % 256 - 128) * 256 for s in range(n)]
+            for c in range(n_ch)
+        ]
+        yield i, encode_wav(n_ch, WAV_RATE, chans)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                h = hashlib.md5(str(text).encode("utf-8")).hexdigest()
-                n = 1 + int(h[0:4], 16) % WAV_LEN_MOD
-                n_ch = 1 + int(h[4:5], 16) % 2
-                seed = int(h[8:10], 16)
-                chans = [
-                    [((37 * s + 17 * c + seed) % 256 - 128) * 256
-                     for s in range(n)]
-                    for c in range(n_ch)
-                ]
-                payloads.append(enc(n_ch, WAV_RATE, chans))
-            yield pd.DataFrame({id_col: pdf[id_col], "content": payloads})
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
+    return _map_rows(
+        df, (id_col, text_col), f"{id_col} bigint, content binary", row
+    )
 
 
 def wav_audio_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -518,34 +540,18 @@ def wav_audio_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         f"{id_col} bigint, channel int, n_samples bigint, "
         "duration_micro bigint, peak bigint, mean_abs_micro bigint"
     )
-    dec = decode_wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("id", "ch", "n", "dur", "peak", "mean")}
-            for i, content in zip(pdf[id_col], pdf["content"]):
-                n_ch, rate, chans = dec(bytes(content))
-                for c, ch in enumerate(chans):
-                    n = len(ch)
-                    sabs = sum(abs(v) for v in ch)
-                    rows["id"].append(i)
-                    rows["ch"].append(c)
-                    rows["n"].append(n)
-                    rows["dur"].append(1_000_000 * n // rate)
-                    rows["peak"].append(max(abs(v) for v in ch) if n else 0)
-                    rows["mean"].append(1_000_000 * sabs // n if n else 0)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows["id"], dtype="int64"),
-                    "channel": pd.Series(rows["ch"], dtype="int32"),
-                    "n_samples": pd.Series(rows["n"], dtype="int64"),
-                    "duration_micro": pd.Series(rows["dur"], dtype="int64"),
-                    "peak": pd.Series(rows["peak"], dtype="int64"),
-                    "mean_abs_micro": pd.Series(rows["mean"], dtype="int64"),
-                }
+    def row(i, content):
+        _, rate, chans = decode_wav(bytes(content))
+        for c, ch in enumerate(chans):
+            n = len(ch)
+            yield (
+                i, c, n, 1_000_000 * n // rate,
+                max(abs(v) for v in ch) if n else 0,
+                1_000_000 * sum(abs(v) for v in ch) // n if n else 0,
             )
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def _make_gif_codec():
@@ -713,13 +719,17 @@ def _make_gif_codec():
         height = int.from_bytes(content[8:10], "little")
         packed = content[10]
         pos = 13
+
+        def color_table(flags: int, pos: int, what: str) -> tuple[bytes, int]:
+            n = 3 * (2 << (flags & 0x07))
+            table = content[pos:pos + n]
+            if len(table) < n:
+                raise ValueError(f"corrupt GIF: truncated {what} table")
+            return table, pos + n
+
         palette = b""
         if packed & 0x80:
-            n = 3 * (2 << (packed & 0x07))
-            palette = content[pos:pos + n]
-            if len(palette) < n:
-                raise ValueError("corrupt GIF: truncated color table")
-            pos += n
+            palette, pos = color_table(packed, pos, "color")
         frames: list[bytes] = []
         while True:
             if pos >= len(content):
@@ -748,11 +758,7 @@ def _make_gif_codec():
             pos += 9
             pal = palette
             if fpacked & 0x80:  # local color table overrides
-                n = 3 * (2 << (fpacked & 0x07))
-                pal = content[pos:pos + n]
-                if len(pal) < n:
-                    raise ValueError("corrupt GIF: truncated local table")
-                pos += n
+                pal, pos = color_table(fpacked, pos, "local")
             if fpacked & 0x40:
                 raise ValueError("unsupported GIF profile (interlaced)")
             if (fw, fh) != (width, height):
@@ -811,34 +817,24 @@ def synth_gif_pixels(df: DataFrame, id_col: str = "doc_id",
     pixel from real variable-width LZW codes while the DuckDB oracle
     predicts every decoded statistic arithmetically (the
     synth_png_pixels pattern, GIF edition)."""
-    import hashlib
-
-    schema = f"{id_col} bigint, content binary"
-    enc = encode_gif
     palette = bytes(
         v for i in range(256) for v in (i, (2 * i) % 256, 255 - i)
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                h = hashlib.md5(str(text).encode("utf-8")).hexdigest()
-                w = 1 + int(h[0:4], 16) % PX_DIM_MOD
-                ht = 1 + int(h[4:8], 16) % PX_DIM_MOD
-                seed = int(h[8:10], 16)
-                n_frames = 1 + int(h[10:11], 16) % 2
-                frames = [
-                    bytes(
-                        (7 * x + 11 * y + 5 * f + seed) % 256
-                        for y in range(ht) for x in range(w)
-                    )
-                    for f in range(n_frames)
-                ]
-                payloads.append(enc(w, ht, frames, palette))
-            yield pd.DataFrame({id_col: pdf[id_col], "content": payloads})
+    def row(i, text):
+        hx, w, ht, seed = _md5_dims(text, PX_DIM_MOD)
+        frames = [
+            bytes(
+                (7 * x + 11 * y + 5 * f + seed) % 256
+                for y in range(ht) for x in range(w)
+            )
+            for f in range(1 + int(hx[10:11], 16) % 2)
+        ]
+        yield i, encode_gif(w, ht, frames, palette)
 
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
+    return _map_rows(
+        df, (id_col, text_col), f"{id_col} bigint, content binary", row
+    )
 
 
 def gif_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -856,38 +852,13 @@ def gif_pixel_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         f"{id_col} bigint, frame int, width int, height int, "
         "mean_r_micro bigint, mean_g_micro bigint, mean_b_micro bigint"
     )
-    dec = decode_gif_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("id", "f", "w", "h", "r", "g", "b")}
-            for i, content in zip(pdf[id_col], pdf["content"]):
-                w, h, frames = dec(bytes(content))
-                n = w * h
-                for f, px in enumerate(frames):
-                    # stride slices sum at C speed — the Python-level
-                    # per-pixel loop dominated the decode cost
-                    sums = [sum(px[0::3]), sum(px[1::3]), sum(px[2::3])]
-                    rows["id"].append(i)
-                    rows["f"].append(f)
-                    rows["w"].append(w)
-                    rows["h"].append(h)
-                    rows["r"].append(1_000_000 * sums[0] // n)
-                    rows["g"].append(1_000_000 * sums[1] // n)
-                    rows["b"].append(1_000_000 * sums[2] // n)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows["id"], dtype="int64"),
-                    "frame": pd.Series(rows["f"], dtype="int32"),
-                    "width": pd.Series(rows["w"], dtype="int32"),
-                    "height": pd.Series(rows["h"], dtype="int32"),
-                    "mean_r_micro": pd.Series(rows["r"], dtype="int64"),
-                    "mean_g_micro": pd.Series(rows["g"], dtype="int64"),
-                    "mean_b_micro": pd.Series(rows["b"], dtype="int64"),
-                }
-            )
+    def row(i, content):
+        w, h, frames = decode_gif_pixels(bytes(content))
+        for f, px in enumerate(frames):
+            yield (i, f, w, h, *_rgb_means_micro(px, w * h))
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def media_dimensions(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -897,19 +868,11 @@ def media_dimensions(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     JVM row-by-row."""
     schema = f"{id_col} bigint, format string, width int, height int"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode_media(bytes(c)) for c in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "format": [m["format"] for m in metas],
-                    "width": pd.Series([m["width"] for m in metas], dtype="int32"),
-                    "height": pd.Series([m["height"] for m in metas], dtype="int32"),
-                }
-            )
+    def row(i, content):
+        m = decode_media(bytes(content))
+        yield i, m["format"], m["width"], m["height"]
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def frame_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -921,18 +884,11 @@ def frame_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     schema = f"{id_col} bigint, byte_len int, n_frames int"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            lens = pdf["content"].map(len)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "byte_len": lens.astype("int32"),
-                    "n_frames": ((lens + FRAME_BYTES - 1) // FRAME_BYTES).astype("int32"),
-                }
-            )
+    def row(i, content):
+        n = len(content)
+        yield i, n, (n + FRAME_BYTES - 1) // FRAME_BYTES
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 EMBED_DIM = 8
@@ -954,17 +910,11 @@ def fake_embedding(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     schema = f"{id_col} bigint, embedding array<double>"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            embs = []
-            for content in pdf["content"]:
-                h = hashlib.md5(bytes(content)).hexdigest()
-                embs.append(
-                    [int(h[4 * j: 4 * j + 4], 16) / 65536.0 for j in range(EMBED_DIM)]
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "embedding": embs})
+    def row(i, content):
+        h = hashlib.md5(bytes(content)).hexdigest()
+        yield i, [int(h[4 * j: 4 * j + 4], 16) / 65536.0 for j in range(EMBED_DIM)]
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def fake_embedding_sql(text_expr: str = "text", id_expr: str = "doc_id") -> str:
@@ -996,21 +946,13 @@ def resize_media(df: DataFrame, target_bytes: int = 128,
         "media_meta struct<mime: string, n_bytes: int, modality: string>"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = [
-                bytes(c[:target_bytes]).ljust(target_bytes, b"\0")
-                for c in pdf["content"]
-            ]
-            metas = [
-                {"mime": m["mime"], "n_bytes": target_bytes, "modality": m["modality"]}
-                for m in pdf["media_meta"]
-            ]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "content": resized, "media_meta": metas}
-            )
+    def row(i, content, m):
+        yield (
+            i, bytes(content[:target_bytes]).ljust(target_bytes, b"\0"),
+            {"mime": m["mime"], "n_bytes": target_bytes, "modality": m["modality"]},
+        )
 
-    return df.select(id_col, "content", "media_meta").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content", "media_meta"), schema, row)
 
 
 def sample_frames(df: DataFrame, id_col: str = "doc_id",
@@ -1019,22 +961,12 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id",
     carrying the frame's byte slice — row fan-out inside the Arrow batch."""
     schema = f"{id_col} bigint, frame_no int, frame_bytes binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, frame_nos, blobs = [], [], []
-            for i, content in zip(pdf[id_col], pdf["content"]):
-                n = (len(content) + FRAME_BYTES - 1) // FRAME_BYTES
-                for f in range(0, n, every):
-                    ids.append(i)
-                    frame_nos.append(f)
-                    blobs.append(bytes(content[f * FRAME_BYTES:(f + 1) * FRAME_BYTES]))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "frame_no": pd.Series(frame_nos, dtype="int32"),
-                 "frame_bytes": blobs}
-            )
+    def row(i, content):
+        n = (len(content) + FRAME_BYTES - 1) // FRAME_BYTES
+        for f in range(0, n, every):
+            yield i, f, bytes(content[f * FRAME_BYTES:(f + 1) * FRAME_BYTES])
 
-    return df.select(id_col, "content").mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def image_ahash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1054,36 +986,57 @@ def image_ahash(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     batch size; the downstream dedup is one hash-keyed groupBy.
     """
     schema = f"{id_col} bigint, width int, height int, ahash string"
-    dec = decode_png_pixels
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("id", "w", "h", "a")}
-            for i, content in zip(pdf[id_col], pdf["content"]):
-                w, h, px = dec(bytes(content))
-                grays = []
-                for j in range(8):
-                    y = (j * h) // 8
-                    for ii in range(8):
-                        x = (ii * w) // 8
-                        off = 3 * (y * w + x)
-                        grays.append(
-                            (px[off] + px[off + 1] + px[off + 2]) // 3
-                        )
-                mean = sum(grays) // 64
-                v = 0
-                for g in grays:
-                    v = (v << 1) | (1 if g > mean else 0)
-                rows["id"].append(i)
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["a"].append(format(v, "016x"))
-            yield pd.DataFrame(
-                {id_col: rows["id"], "width": rows["w"],
-                 "height": rows["h"], "ahash": rows["a"]}
-            )
+    def row(i, content):
+        w, h, px = decode_png_pixels(bytes(content))
+        grays = _gray_grid(w, h, px)
+        mean = sum(grays) // 64
+        v = 0
+        for g in grays:
+            v = (v << 1) | (1 if g > mean else 0)
+        yield i, w, h, format(v, "016x")
 
-    return df.mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
+
+
+# (w, h, seed) of every synth_png_pixels payload, replayed from md5(text)
+_PX_DIMS_CTE = f"""dims AS (
+      SELECT doc_id,
+             1 + CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % {PX_DIM_MOD} AS w,
+             1 + CAST(concat('0x', substr(md5(text), 5, 4)) AS INTEGER) % {PX_DIM_MOD} AS h,
+             CAST(concat('0x', substr(md5(text), 9, 2)) AS INTEGER) AS seed
+      FROM documents
+    )"""
+
+
+def _gray_sql(w: str, h: str, seed: str, pad: str) -> str:
+    """The oracle's :func:`_gray_grid`: the channel sum of the synthesis
+    pixel formula at grid sample ``(i.i, j.j)`` of a ``w``×``h`` image,
+    one channel term per line (``pad`` indents the continuation), still
+    to be divided by 3."""
+    return f"\n{pad} + ".join(
+        f"((7 * ((i.i * {w}) // 8) + 11 * ((j.j * {h}) // 8) + {c}{seed}) % 256)"
+        for c in ("", "13 + ", "26 + ")
+    )
+
+
+def _grid_sad_cte(src: str) -> str:
+    """The ``g`` CTE of the grid-verify oracles: Σ₆₄ |gray_a − gray_b|
+    per ``(doc_a, doc_b)`` row of ``src``, whose columns carry each
+    side's ``(w, h, seed)`` as ``wa, hpa, sa`` / ``wb, hpb, sb``."""
+    pad = " " * 15
+    return f"""g AS (
+      SELECT doc_a, doc_b,
+             SUM(ABS(
+               ({_gray_sql("wa", "hpa", "sa", pad)}) // 3
+               -
+               ({_gray_sql("wb", "hpb", "sb", pad)}) // 3
+             )) AS sad
+      FROM {src},
+           unnest(generate_series(0, 7)) AS i(i),
+           unnest(generate_series(0, 7)) AS j(j)
+      GROUP BY 1, 2
+    )"""
 
 
 def image_ahash_sql() -> str:
@@ -1092,19 +1045,11 @@ def image_ahash_sql() -> str:
     256`` replayed arithmetically at the 64 sampled grid points, nibbles
     assembled MSB-first into the same hex string (bit ``k = 8·j + i``,
     hex char ``k // 4`` with weight ``2^(3 - k % 4)``)."""
-    return """
-    WITH dims AS (
-      SELECT doc_id,
-             1 + CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 16 AS w,
-             1 + CAST(concat('0x', substr(md5(text), 5, 4)) AS INTEGER) % 16 AS h,
-             CAST(concat('0x', substr(md5(text), 9, 2)) AS INTEGER) AS seed
-      FROM documents
-    ),
+    return f"""
+    WITH {_PX_DIMS_CTE},
     g AS (
       SELECT doc_id, w, h, 8 * j.j + i.i AS k,
-             (((7 * ((i.i * w) // 8) + 11 * ((j.j * h) // 8) + seed) % 256)
-              + ((7 * ((i.i * w) // 8) + 11 * ((j.j * h) // 8) + 13 + seed) % 256)
-              + ((7 * ((i.i * w) // 8) + 11 * ((j.j * h) // 8) + 26 + seed) % 256)
+             ({_gray_sql("w", "h", "seed", " " * 13)}
              ) // 3 AS gray
       FROM dims,
            unnest(generate_series(0, 7)) AS i(i),
@@ -1160,40 +1105,25 @@ def wav_energy_segments(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         f"{id_col} bigint, seg_idx bigint, start_win bigint, "
         "end_win bigint, n_windows bigint, peak_amp bigint"
     )
-    dec = decode_wav
-    win, thr = VAD_WIN, VAD_THRESHOLD
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("id", "si", "sw", "ew", "nw", "pk")}
-            for i, content in zip(pdf[id_col], pdf["content"]):
-                _, _, chans = dec(bytes(content))
-                ch0 = [abs(v) for v in chans[0]]
-                n_win = (len(ch0) + win - 1) // win
-                seg_start, seg_peak, seg_idx = None, 0, 0
-                for w in range(n_win + 1):  # +1: sentinel flushes a tail run
-                    chunk = ch0[w * win:(w + 1) * win]
-                    active = bool(chunk) and sum(chunk) > thr * len(chunk)
-                    if active:
-                        if seg_start is None:
-                            seg_start, seg_peak = w, 0
-                        seg_peak = max(seg_peak, max(chunk))
-                    elif seg_start is not None:
-                        seg_idx += 1
-                        rows["id"].append(i)
-                        rows["si"].append(seg_idx)
-                        rows["sw"].append(seg_start)
-                        rows["ew"].append(w - 1)
-                        rows["nw"].append(w - seg_start)
-                        rows["pk"].append(seg_peak)
-                        seg_start = None
-            yield pd.DataFrame(
-                {id_col: rows["id"], "seg_idx": rows["si"],
-                 "start_win": rows["sw"], "end_win": rows["ew"],
-                 "n_windows": rows["nw"], "peak_amp": rows["pk"]}
-            )
+    def row(i, content):
+        _, _, chans = decode_wav(bytes(content))
+        ch0 = [abs(v) for v in chans[0]]
+        n_win = (len(ch0) + VAD_WIN - 1) // VAD_WIN
+        seg_start, seg_peak, seg_idx = None, 0, 0
+        for w in range(n_win + 1):  # +1: sentinel flushes a tail run
+            chunk = ch0[w * VAD_WIN:(w + 1) * VAD_WIN]
+            active = bool(chunk) and sum(chunk) > VAD_THRESHOLD * len(chunk)
+            if active:
+                if seg_start is None:
+                    seg_start, seg_peak = w, 0
+                seg_peak = max(seg_peak, max(chunk))
+            elif seg_start is not None:
+                seg_idx += 1
+                yield i, seg_idx, seg_start, w - 1, w - seg_start, seg_peak
+                seg_start = None
 
-    return df.mapInPandas(batches, schema)
+    return _map_rows(df, (id_col, "content"), schema, row)
 
 
 def wav_energy_segments_sql() -> str:
@@ -1240,6 +1170,17 @@ def wav_energy_segments_sql() -> str:
     """
 
 
+def _join_payloads(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """Join each side's payload onto ``(doc_a, doc_b)`` candidate pairs by
+    id, as ``content_a`` / ``content_b``; the caller selects what its
+    rescore reads."""
+    for x in "ab":
+        pairs = pairs.join(df.select(
+            F.col(id_col).alias(f"doc_{x}"), F.col("content").alias(f"content_{x}")
+        ), f"doc_{x}")
+    return pairs
+
+
 def image_dup_verified(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """The exact-verify stage behind :func:`image_ahash` collisions —
     the bolt-on `image_dup_groups`' docstring promises: every non-
@@ -1264,8 +1205,6 @@ def image_dup_verified(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     collisions are incomparable pixel-wise and a production rescorer
     would resize first (the resize stub's contract).
     """
-    from killrweather_spark.plans.caching import persist_once
-
     # the hash table feeds the canonical-election AND member branches;
     # persist so the Python decode lineage runs once
     ah = image_ahash(df, id_col).transform(persist_once)
@@ -1282,68 +1221,40 @@ def image_dup_verified(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pairs = b.join(canon, ["ahash", "width", "height"]).filter(
         F.col("doc_a") < F.col("doc_b")
     )
-    ca = df.select(
-        F.col(id_col).alias("doc_a"), F.col("content").alias("content_a")
-    )
-    cb = df.select(
-        F.col(id_col).alias("doc_b"), F.col("content").alias("content_b")
-    )
-    joined = (
-        pairs.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select("doc_a", "doc_b", "width", "height",
-                "content_a", "content_b")
-    )
+    cols = ("doc_a", "doc_b", "width", "height", "content_a", "content_b")
+    joined = _join_payloads(df, pairs, id_col).select(*cols)
     schema = (
         "doc_a bigint, doc_b bigint, width int, height int, "
         "mad_micro bigint"
     )
-    dec = decode_png_pixels
 
+    # Not _map_rows: a group's CANONICAL decodes once per batch, not once
+    # per member pair (star pairing repeats doc_a across its whole group),
+    # and that cache must die with the batch — state held by a row
+    # function would live as long as the task.
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in it:
-            # a group's CANONICAL decodes once per batch, not once per
-            # member pair (star pairing repeats doc_a across its whole
-            # group), and the per-pixel SAD is one vectorized numpy
-            # pass over the raw RGB bytes instead of a Python loop —
-            # |x−y| over uint8-as-int16 then an int64 sum, exact
-            # (r13 session 5, guide §4.2).
-            cache: dict[int, bytes] = {}
+            cache: dict[int, np.ndarray] = {}
 
-            def px_of(did: int, blob) -> bytes:
+            def px_of(did: int, blob) -> np.ndarray:
+                # raw RGB bytes as int16, so |x−y| cannot wrap
                 px = cache.get(did)
                 if px is None:
-                    _, _, px = dec(bytes(blob))
+                    _, _, raw = decode_png_pixels(bytes(blob))
+                    px = np.frombuffer(raw, dtype=np.uint8).astype(np.int16)
                     cache[did] = px
                 return px
 
-            rows = {k: [] for k in ("a", "b", "w", "h", "m")}
-            for da, db, w, h, ca_, cb_ in zip(
-                pdf["doc_a"], pdf["doc_b"], pdf["width"], pdf["height"],
-                pdf["content_a"], pdf["content_b"],
-            ):
-                pa = px_of(int(da), ca_)
-                pb = px_of(int(db), cb_)
-                sad = int(
-                    np.abs(
-                        np.frombuffer(pa, dtype=np.uint8).astype(np.int16)
-                        - np.frombuffer(pb, dtype=np.uint8).astype(
-                            np.int16
-                        )
-                    ).sum(dtype=np.int64)
-                )
-                rows["a"].append(da)
-                rows["b"].append(db)
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["m"].append((1_000_000 * sad) // (int(w) * int(h) * 3))
-            yield pd.DataFrame(
-                {"doc_a": rows["a"], "doc_b": rows["b"],
-                 "width": rows["w"], "height": rows["h"],
-                 "mad_micro": rows["m"]}
-            )
+            out = []
+            for da, db, w, h, ca, cb in zip(*(pdf[c] for c in cols)):
+                # the per-pixel SAD is one vectorized numpy pass with an
+                # int64 sum, exact
+                sad = int(np.abs(px_of(da, ca) - px_of(db, cb)).sum(dtype=np.int64))
+                out.append((da, db, w, h, (1_000_000 * sad) // (w * h * 3)))
+            if out:
+                yield pd.DataFrame(out)
 
     return joined.mapInPandas(batches, schema)
 
@@ -1435,11 +1346,9 @@ def image_hamming_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     Scale: the banded join is keyed on (band, 16-bit value) — the
     standard LSH-band shape, no cartesian, per-bucket work bounded at
     cap²/2; the distance fold is pure codegen arithmetic on 16-char
-    strings, no payload decode.  A pixel-level rescore would bolt on
-    exactly like :func:`image_dup_verified` does for exact collisions.
+    strings, no payload decode.  Their pixel-level rescore is
+    :func:`image_ring_verified`, the ring's :func:`image_dup_verified`.
     """
-    from killrweather_spark.plans.caching import persist_once
-
     # the hash table feeds bucket-count AND candidate branches; without a
     # persist the Python decode lineage re-runs per branch
     ah = (
@@ -1456,12 +1365,10 @@ def image_hamming_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # values: popcount over the same 64 bits, split or not.
     bands_all = ah.select(
         "doc_id",
-        F.conv(F.substring("ahash", 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("hhi"),
-        F.conv(F.substring("ahash", 9, 8), 16, 10)
-        .cast("bigint")
-        .alias("hlo"),
+        *(
+            F.conv(F.substring("ahash", pos, 8), 16, 10).cast("bigint").alias(half)
+            for pos, half in ((1, "hhi"), (9, "hlo"))
+        ),
         F.explode(
             F.expr(
                 f"transform(sequence(0, {IMG_HAM_BANDS - 1}),"
@@ -1477,13 +1384,12 @@ def image_hamming_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         .select("band", "bv")
     )
     bands = bands_all.join(cold, ["band", "bv"])
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), F.col("hhi").alias("ahi"),
-        F.col("hlo").alias("alo"), "band", "bv",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("hhi").alias("bhi"),
-        F.col("hlo").alias("blo"), "band", "bv",
+    a, b = (
+        bands.select(
+            F.col("doc_id").alias(f"doc_{x}"), F.col("hhi").alias(f"{x}hi"),
+            F.col("hlo").alias(f"{x}lo"), "band", "bv",
+        )
+        for x in "ab"
     )
     cand = (
         a.join(b, ["band", "bv"])
@@ -1561,8 +1467,6 @@ def image_grid_verify(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (linear in group size), id-keyed payload joins, row-local double
     decode in the Arrow batch.
     """
-    from killrweather_spark.plans.caching import persist_once
-
     # payload frame referenced by the aHash pass AND both rescore sides
     # — persist so the opaque synthesis/decode lineage runs once
     df = df.transform(persist_once)
@@ -1596,52 +1500,20 @@ def _grid_mad_rescore(
     doc_b)`` candidate pairs by id, decode both sides row-locally in the
     Arrow batch, resample each onto the hash's own 8×8 nearest-point
     gray grid, and score ``grid_mad_micro = (10⁶ · Σ₆₄|ga − gb|) div
-    64``.  Closures are factory-local so they pickle BY VALUE (the
-    worker-import gotcha documented in FIXTURES.md)."""
-    ca = df.select(
-        F.col(id_col).alias("doc_a"), F.col("content").alias("content_a")
-    )
-    cb = df.select(
-        F.col(id_col).alias("doc_b"), F.col("content").alias("content_b")
-    )
-    joined = (
-        pairs.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .select("doc_a", "doc_b", "content_a", "content_b")
-    )
-    schema = "doc_a bigint, doc_b bigint, grid_mad_micro bigint"
-    dec = decode_png_pixels
+    64``.  The row function is operator-local and calls only factory-built
+    helpers, so it pickles BY VALUE (see :func:`_make_media_decoder`)."""
 
-    def grid_grays(content: bytes) -> list[int]:
-        w, h, px = dec(content)
-        out = []
-        for j in range(8):
-            y = (j * h) // 8
-            for i in range(8):
-                x = (i * w) // 8
-                off = 3 * (y * w + x)
-                out.append((px[off] + px[off + 1] + px[off + 2]) // 3)
-        return out
+    def row(da, db, ca, cb):
+        ga = _gray_grid(*decode_png_pixels(bytes(ca)))
+        gb = _gray_grid(*decode_png_pixels(bytes(cb)))
+        yield da, db, (1_000_000 * sum(abs(x - y) for x, y in zip(ga, gb))) // 64
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"a": [], "b": [], "m": []}
-            for da, db, ca_, cb_ in zip(
-                pdf["doc_a"], pdf["doc_b"],
-                pdf["content_a"], pdf["content_b"],
-            ):
-                ga = grid_grays(bytes(ca_))
-                gb = grid_grays(bytes(cb_))
-                sad = sum(abs(x - y) for x, y in zip(ga, gb))
-                rows["a"].append(da)
-                rows["b"].append(db)
-                rows["m"].append((1_000_000 * sad) // 64)
-            yield pd.DataFrame(
-                {"doc_a": rows["a"], "doc_b": rows["b"],
-                 "grid_mad_micro": rows["m"]}
-            )
-
-    return joined.mapInPandas(batches, schema)
+    return _map_rows(
+        _join_payloads(df, pairs, id_col),
+        ("doc_a", "doc_b", "content_a", "content_b"),
+        "doc_a bigint, doc_b bigint, grid_mad_micro bigint",
+        row,
+    )
 
 
 def image_ring_verified(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1673,7 +1545,6 @@ def image_ring_verified(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the double decode is row-local Arrow work.
     """
     from killrweather_spark.functions.curation import connected_components
-    from killrweather_spark.plans.caching import persist_once
 
     # The payload frame is referenced three times (the ring's aHash pass
     # plus BOTH sides of the grid rescore) and its lineage is an opaque
@@ -1718,13 +1589,7 @@ def image_ring_verified_sql() -> str:
       SELECT component AS doc_a, node AS doc_b
       FROM comp WHERE node != component
     ),
-    dims AS (
-      SELECT doc_id,
-             1 + CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 16 AS w,
-             1 + CAST(concat('0x', substr(md5(text), 5, 4)) AS INTEGER) % 16 AS h,
-             CAST(concat('0x', substr(md5(text), 9, 2)) AS INTEGER) AS seed
-      FROM documents
-    ),
+    {_PX_DIMS_CTE},
     sp AS (
       SELECT s.doc_a, s.doc_b,
              da.w AS wa, da.h AS hpa, da.seed AS sa,
@@ -1733,22 +1598,7 @@ def image_ring_verified_sql() -> str:
       JOIN dims da ON da.doc_id = s.doc_a
       JOIN dims db ON db.doc_id = s.doc_b
     ),
-    g AS (
-      SELECT doc_a, doc_b,
-             SUM(ABS(
-               (((7 * ((i.i * wa) // 8) + 11 * ((j.j * hpa) // 8) + sa) % 256)
-                + ((7 * ((i.i * wa) // 8) + 11 * ((j.j * hpa) // 8) + 13 + sa) % 256)
-                + ((7 * ((i.i * wa) // 8) + 11 * ((j.j * hpa) // 8) + 26 + sa) % 256)) // 3
-               -
-               (((7 * ((i.i * wb) // 8) + 11 * ((j.j * hpb) // 8) + sb) % 256)
-                + ((7 * ((i.i * wb) // 8) + 11 * ((j.j * hpb) // 8) + 13 + sb) % 256)
-                + ((7 * ((i.i * wb) // 8) + 11 * ((j.j * hpb) // 8) + 26 + sb) % 256)) // 3
-             )) AS sad
-      FROM sp,
-           unnest(generate_series(0, 7)) AS i(i),
-           unnest(generate_series(0, 7)) AS j(j)
-      GROUP BY 1, 2
-    )
+    {_grid_sad_cte("sp")}
     SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b,
            CAST((1000000 * sad) // 64 AS BIGINT) AS grid_mad_micro
     FROM g
@@ -1777,8 +1627,6 @@ def streaming_image_screen(
     per-arrival, the probe is a hash-keyed join, state is
     |distinct dims| rows (≤ 256 here).
     """
-    from killrweather_spark.plans.caching import persist_once
-
     ref = (
         image_ahash(ref_imgs, id_col)
         .select(F.col("ahash").alias("ref_hash"))
@@ -1828,13 +1676,7 @@ def image_grid_verify_sql() -> str:
     8×8 grid grays replayed from its own (w, h, seed) triple."""
     return f"""
     WITH ah AS ({image_ahash_sql()}),
-    dims AS (
-      SELECT doc_id,
-             1 + CAST(concat('0x', substr(md5(text), 1, 4)) AS INTEGER) % 16 AS w,
-             1 + CAST(concat('0x', substr(md5(text), 5, 4)) AS INTEGER) % 16 AS h,
-             CAST(concat('0x', substr(md5(text), 9, 2)) AS INTEGER) AS seed
-      FROM documents
-    ),
+    {_PX_DIMS_CTE},
     canon AS (SELECT ahash, MIN(doc_id) AS doc_a FROM ah GROUP BY 1),
     pairs AS (
       SELECT c.doc_a, b.doc_id AS doc_b,
@@ -1846,22 +1688,7 @@ def image_grid_verify_sql() -> str:
       JOIN dims db ON db.doc_id = b.doc_id
       WHERE (da.w, da.h) <> (db.w, db.h)
     ),
-    g AS (
-      SELECT doc_a, doc_b,
-             SUM(ABS(
-               (((7 * ((i.i * wa) // 8) + 11 * ((j.j * hpa) // 8) + sa) % 256)
-                + ((7 * ((i.i * wa) // 8) + 11 * ((j.j * hpa) // 8) + 13 + sa) % 256)
-                + ((7 * ((i.i * wa) // 8) + 11 * ((j.j * hpa) // 8) + 26 + sa) % 256)) // 3
-               -
-               (((7 * ((i.i * wb) // 8) + 11 * ((j.j * hpb) // 8) + sb) % 256)
-                + ((7 * ((i.i * wb) // 8) + 11 * ((j.j * hpb) // 8) + 13 + sb) % 256)
-                + ((7 * ((i.i * wb) // 8) + 11 * ((j.j * hpb) // 8) + 26 + sb) % 256)) // 3
-             )) AS sad
-      FROM pairs,
-           unnest(generate_series(0, 7)) AS i(i),
-           unnest(generate_series(0, 7)) AS j(j)
-      GROUP BY 1, 2
-    )
+    {_grid_sad_cte("pairs")}
     SELECT doc_a, doc_b,
            CAST((1000000 * sad) // 64 AS BIGINT) AS grid_mad_micro
     FROM g

@@ -4,6 +4,7 @@ and dedup invariants."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from killrweather_spark.functions.dedup import dedup_exact, minhash_lsh_pairs
@@ -861,6 +862,75 @@ def test_media_dimensions_roundtrips_synth_png(spark):
         h = hashlib.md5(row.text.encode()).hexdigest()
         exp = ("png", 1 + int(h[0:4], 16) % 512, 1 + int(h[4:8], 16) % 512)
         assert got[row.doc_id] == exp
+
+
+class _MapperCapture:
+    """Stands in for a DataFrame so an operator hands back the function
+    it would pass to ``mapInPandas``."""
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, fn, schema):  # noqa: N802
+        return fn
+
+
+# Runs a pickled (mapper, batch) from stdin and pickles what it yields.
+_RUN_PICKLED_MAPPER = (
+    "import pickle, sys; fn, batch = pickle.loads(sys.stdin.buffer.read()); "
+    "sys.stdout.buffer.write(pickle.dumps(list(fn(iter([batch])))))"
+)
+
+
+def _media_payloads(op: str) -> list[bytes]:
+    from killrweather_spark.functions import multimodal as mm
+
+    if op == "gif_pixel_stats":
+        palette = bytes(range(256)) * 3
+        return [mm.encode_gif(3, 2, [bytes(range(6))] * f, palette)
+                for f in (1, 2)]
+    if op.startswith("wav_"):
+        loud = [30000] * 40 + [5] * 40 + [-30000] * 8
+        return [mm.encode_wav(1, 8000, [loud]),
+                mm.encode_wav(2, 8000, [loud, loud[::-1]])]
+    return [mm.encode_png(w, h, bytes((7 * k) % 256 for k in range(3 * w * h)))
+            for w, h in ((8, 8), (5, 3))]
+
+
+@pytest.mark.parametrize("op", [
+    "png_pixel_stats", "gif_pixel_stats", "wav_audio_stats",
+    "wav_energy_segments", "image_ahash", "media_dimensions",
+    "frame_stats", "fake_embedding",
+])
+def test_media_mappers_pickle_by_value(op, tmp_path):
+    """Each leaf media operator's Arrow mapper must ship BY VALUE: a worker
+    whose interpreter cannot import this package (``python -I``, cwd
+    outside the repo) still unpickles and runs it, with the same output
+    as in-process.  A row function that calls a module-level helper
+    would be pickled by reference and fail here with
+    ModuleNotFoundError."""
+    import pickle
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from killrweather_spark.functions import multimodal as mm
+
+    mapper = getattr(mm, op)(_MapperCapture())
+    batch = pd.DataFrame({"doc_id": [7, 9], "content": _media_payloads(op)})
+    want = list(mapper(iter([batch])))
+    proc = subprocess.run(
+        [sys.executable, "-I", "-c", _RUN_PICKLED_MAPPER],
+        input=cloudpickle.dumps((mapper, batch)),
+        capture_output=True, cwd=tmp_path, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    got = pickle.loads(proc.stdout)
+    assert len(got) == len(want) == 1
+    assert len(want[0]) >= 2
+    pd.testing.assert_frame_equal(got[0], want[0])
 
 
 def test_ansi_edge_hardening(spark):
