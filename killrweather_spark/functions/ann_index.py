@@ -161,7 +161,9 @@ def build_ivf_index(
         from killrweather_spark.functions.pq import _train as _pq_train
 
         _, pqcents, pqcodes = _pq_train(df, id_col=id_col, vec_col=vec_col)
-        pqcents.write.mode("overwrite").parquet(os.path.join(tmp, "pqcents"))
+        # a codebook is a few hundred rows: one file, as ``centroids`` lands,
+        # not one per shuffle partition for every probe to open
+        pqcents.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "pqcents"))
         _write_cells(
             pqcodes, labels, ("sub", "code"), tmp, "pqcodes", "overwrite"
         )
@@ -175,7 +177,7 @@ def build_ivf_index(
         pqrcents, pqrcodes = _pq_train_residual(
             df, labels, cents, id_col=id_col, vec_col=vec_col
         )
-        pqrcents.write.mode("overwrite").parquet(os.path.join(tmp, "pqrcents"))
+        pqrcents.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "pqrcents"))
         _write_cells(
             pqrcodes, labels, ("sub", "code"), tmp, "pqrcodes", "overwrite"
         )

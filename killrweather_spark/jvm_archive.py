@@ -107,6 +107,11 @@ def _jars(spark_home: str) -> list[str]:
     return out
 
 
+def spark_conf_dir() -> str:
+    """The directory spark-submit reads ``spark-defaults.conf`` from."""
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+
+
 def _non_template(conf_dir: str) -> str | None:
     """The first entry of ``conf_dir`` that is not a ``*.template`` file,
     None when there is none (or no directory)."""
@@ -188,7 +193,7 @@ def plan(caller_options: str | None) -> Launch | None:
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None
     spark_home = _find_spark_home()
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    conf_dir = spark_conf_dir()
     blocker = _non_template(conf_dir)
     if blocker is not None:
         log.warning("driver JVM starts without class-data archive: %s holds %s, and a "

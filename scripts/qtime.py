@@ -13,10 +13,12 @@ that fail to beat the best by 10% end a query's loop early.  ``--noop``
 instead drives every column of every row through ``format("noop")``
 (guide §1.4) — use it when adjudicating whether a win is real compute
 or column-pruned away by count().  ``compiles`` reports, per query,
-what its runs after the first spent compiling: whole-stage codegen
-classes and milliseconds (``codegen``, ``codegen_ms``; 0 classes once
-the session's cache holds the query) and the JVM JIT's milliseconds
-(``jit_ms``).  ``progress`` lists, per query, the progress records
+what its runs after the first spent compiling and collecting garbage:
+whole-stage codegen classes and milliseconds (``codegen``,
+``codegen_ms``; 0 classes once the session's cache holds the query),
+the JVM JIT's milliseconds (``jit_ms``) and the garbage collectors'
+milliseconds (``gc_ms``, the sum of ``getCollectionTime()`` over the
+JVM's collector MXBeans).  ``progress`` lists, per query, the progress records
 (``batchId``, ``durationMs`` breakdown, ``numInputRows``) of the
 streaming drains its last run started; ``[]`` for a batch query.
 ``--plan-dir`` writes ``<name>.txt`` with the formatted physical plan
@@ -115,7 +117,13 @@ def main() -> None:
     warm_up(spark)
 
     jvm = spark.sparkContext._jvm
-    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    mf = jvm.java.lang.management.ManagementFactory
+    jit = mf.getCompilationMXBean()
+    gcs = list(mf.getGarbageCollectorMXBeans())
+
+    def gc_ms() -> int:
+        return sum(gc.getCollectionTime() for gc in gcs)
+
     timings: dict[str, float] = {}
     compiles: dict[str, dict] = {}
     progress: dict[str, list] = {}
@@ -132,17 +140,18 @@ def main() -> None:
                 run_action(df)
             if not after_first:
                 after_first.extend((codegen_compiles(spark),
-                                    jit.getTotalCompilationTime()))
+                                    jit.getTotalCompilationTime(), gc_ms()))
 
         spark.sparkContext.setJobDescription(f"qtime:{name}")
         timings[name] = round(best_of(run, runs), 3)
         spark.sparkContext.setJobDescription(None)
         progress[name] = listener.take()
         if runs > 1:
-            (n0, ms0), jit0 = after_first
+            (n0, ms0), jit0, gc0 = after_first
             n1, ms1 = codegen_compiles(spark)
             compiles[name] = {"codegen": n1 - n0, "codegen_ms": round(ms1 - ms0, 1),
-                              "jit_ms": jit.getTotalCompilationTime() - jit0}
+                              "jit_ms": jit.getTotalCompilationTime() - jit0,
+                              "gc_ms": gc_ms() - gc0}
         if plan_dir:
             Path(plan_dir).mkdir(parents=True, exist_ok=True)
             with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):

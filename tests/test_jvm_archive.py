@@ -1,10 +1,13 @@
 """The driver JVM's class-data-sharing archive (``killrweather_spark/jvm_archive.py``).
 
 The decision tests run without a JVM: they read ``plan``'s launch for a
-cache in ``tmp_path``.  The last test starts fresh interpreters with their
-own cache: the first session starts plain and its JVM is killed, the
-background dump publishes the archive anyway, the next session maps it and
-gives the same answer, and a damaged archive still lets a session start.
+cache in ``tmp_path``, and ``session.default_java_options`` for the
+collector.  The last test starts fresh interpreters with their own cache:
+the first session starts plain and its JVM is killed, the background dump
+publishes the archive anyway, the next session maps it and gives the same
+answer, a caller's collector is kept, and a damaged archive still lets a
+session start.  Every session runs the parallel collector unless its caller
+picks another.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from types import SimpleNamespace
 import pytest
 from pyspark import SparkContext
 
-from killrweather_spark import jvm_archive
+from killrweather_spark import jvm_archive, session
 
 ROOT = Path(__file__).resolve().parents[1]
 CALLER = "-Djava.io.tmpdir=/tmp/x -Xms1g"
@@ -129,6 +132,35 @@ def test_leftovers_of_dead_processes_are_swept(cds):
     assert live.exists()
 
 
+@pytest.mark.parametrize(
+    "place", ["extraJavaOptions", "spark-defaults.conf", *session.JAVA_OPTIONS_VARIABLES])
+def test_a_collector_selected_elsewhere_is_kept(cds, tmp_path, monkeypatch, place):
+    for var in session.JAVA_OPTIONS_VARIABLES:
+        monkeypatch.delenv(var, raising=False)
+    # perfbench's JAVA_TOOL_OPTIONS, a collector tuning flag and the
+    # executor's options select no driver collector
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:-UsePerfData")
+    defaults = tmp_path / "conf" / "spark-defaults.conf"
+    defaults.write_text("spark.executor.memory 2g\n")
+    assert session.default_java_options(f"{CALLER} -XX:+UseGCOverheadLimit") == \
+        session.GC_OPTION == "-XX:+UseParallelGC"
+    caller = CALLER
+    if place == "extraJavaOptions":
+        caller = f"{CALLER} -XX:+UseG1GC"
+    elif place == "spark-defaults.conf":
+        defaults.write_text("spark.driver.extraJavaOptions -XX:+UseG1GC\n")
+    else:
+        monkeypatch.setenv(place, f"{os.environ.get(place, '')} -XX:+UseG1GC".strip())
+    # a second selection stops the JVM: "Multiple garbage collectors selected"
+    assert session.default_java_options(caller) is None
+
+
+def test_an_administrators_default_java_options_stay_whole(cds, tmp_path):
+    (tmp_path / "conf" / "spark-defaults.conf").write_text(
+        "spark.driver.defaultJavaOptions -Dsite=1\n")
+    assert session.default_java_options(CALLER) is None
+
+
 _MAPPED = ("[0.018s][info][cds] Mapped dynamic region #0 at base 0x7f184ebca000 top "
            "0x7f18520d0000 (ReadWrite)\n")
 _LOGS = {
@@ -201,11 +233,13 @@ import json, os, signal, sys
 from killrweather_spark.session import get_session
 
 spark = get_session(master="local[2]", extra_conf={
-    "spark.driver.extraJavaOptions": "-Dkw.caller=1", "spark.ui.showConsoleProgress": "false"})
-jvm = spark.sparkContext._jvm
-args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    "spark.driver.extraJavaOptions": sys.argv[2], "spark.ui.showConsoleProgress": "false"})
+mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+args = list(mf.getRuntimeMXBean().getInputArguments())
+gcs = sorted(gc.getName() for gc in mf.getGarbageCollectorMXBeans())
 answer = spark.range(20000).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
-print(json.dumps({"args": args, "answer": [list(r) for r in answer]}), file=sys.__stderr__)
+print(json.dumps({"args": args, "gcs": gcs, "answer": [list(r) for r in answer]}),
+      file=sys.__stderr__)
 if sys.argv[1] == "kill":  # the session's JVM and interpreter die without a clean exit
     sys.__stderr__.flush()
     os.kill(spark.sparkContext._gateway.proc.pid, signal.SIGKILL)
@@ -213,11 +247,15 @@ if sys.argv[1] == "kill":  # the session's JVM and interpreter die without a cle
 """
 
 
-def _child(tmp_path: Path, mode: str) -> tuple[dict, str]:
-    env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path / "cache"),
+PARALLEL = ["PS MarkSweep", "PS Scavenge"]  # the MXBeans of -XX:+UseParallelGC
+
+
+def _child(tmp_path: Path, mode: str, caller: str = "-Dkw.caller=1") -> tuple[dict, str]:
+    env = {k: v for k, v in os.environ.items() if k not in session.JAVA_OPTIONS_VARIABLES}
+    env.update(XDG_CACHE_HOME=str(tmp_path / "cache"),
                SPARK_CONF_DIR=str(tmp_path / "conf"), SPARK_GRAFT_DRIVER_MEM="1g",
                PYTHONPATH=os.pathsep.join([str(ROOT), os.environ.get("PYTHONPATH", "")]))
-    r = subprocess.run([sys.executable, "-c", _CHILD, mode], cwd=tmp_path, env=env,
+    r = subprocess.run([sys.executable, "-c", _CHILD, mode, caller], cwd=tmp_path, env=env,
                        capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-3000:]
     result = next(json.loads(line) for line in r.stderr.splitlines() if line.startswith("{"))
@@ -244,6 +282,7 @@ def test_fresh_sessions_dump_then_map_the_archive(tmp_path):
     first, err = _child(tmp_path, "kill")
     assert not any(a.startswith("-XX:") and "Archive" in a for a in first["args"])
     assert "class-data archive" not in err
+    assert first["gcs"] == PARALLEL
     names = _await_dump(cds)
     (archive,) = cds.glob("*.jsa")
     assert names == sorted(["conf", archive.name, f"{archive.stem}.lock"])
@@ -254,6 +293,15 @@ def test_fresh_sessions_dump_then_map_the_archive(tmp_path):
     assert f"-XX:SharedArchiveFile={archive}" in args
     assert args.index("-Dkw.caller=1") > args.index(f"-XX:SharedArchiveFile={archive}")
     assert mapped["answer"] == first["answer"]
+    assert mapped["gcs"] == PARALLEL
+
+    # a caller's collector replaces the default, and the archive still maps
+    g1, err = _child(tmp_path, "plain", "-Dkw.caller=1 -XX:+UseG1GC")
+    assert "class-data archive" not in err
+    assert f"-XX:SharedArchiveFile={archive}" in g1["args"]
+    assert session.GC_OPTION not in g1["args"]
+    assert g1["gcs"] == ["G1 Old Generation", "G1 Young Generation"]
+    assert g1["answer"] == first["answer"]
 
     # a damaged archive aborts the JVM: the session starts without it
     os.chmod(archive, 0o644)
@@ -262,5 +310,6 @@ def test_fresh_sessions_dump_then_map_the_archive(tmp_path):
     damaged, err = _child(tmp_path, "plain")
     assert "exited at start from class-data archive" in err
     assert not any("SharedArchiveFile" in a for a in damaged["args"])
+    assert damaged["gcs"] == PARALLEL
     assert damaged["answer"] == first["answer"]
     assert not archive.exists()
