@@ -263,15 +263,25 @@ def _ensure_fresh(out_dir: str, marker: str, fresh, build) -> str:
     return out_dir
 
 
+# Version of the index's on-disk layout: bump it with any change to what
+# build_ivf_index writes (tables, columns, file layout), so an index
+# written by older code is rebuilt instead of read.
+# 2: the PQ codebooks are one parquet file each.
+INDEX_LAYOUT = 2
+
+
 def _index_params(n_centroids: int, iters: int) -> dict:
     """The build parameters baked into an index's tables.  Stored as
     ``_meta.json`` and compared by :func:`ensure_ivf_index`: the corpus
     fingerprint in the path catches DATA drift, this catches PARAMETER
     drift — e.g. a PQ geometry bump would otherwise leave every existing
-    index silently serving stale codebooks."""
+    index silently serving stale codebooks — and LAYOUT drift
+    (``INDEX_LAYOUT``): an index directory outlives the code that wrote
+    it."""
     from killrweather_spark.functions.pq import PQ_ITERS, PQ_KS, PQ_M
 
     return {
+        "layout": INDEX_LAYOUT,
         "n_centroids": n_centroids,
         "iters": iters,
         "pq_m": PQ_M,

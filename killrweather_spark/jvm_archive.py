@@ -437,11 +437,14 @@ def get_or_create(builder: SparkSession.Builder, caller_options: str | None) -> 
     except PySparkRuntimeError as e:
         if e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
-        # a damaged archive aborts the JVM: remove it, so that the next
-        # session dumps a new one
-        _remove(launch.archive)
-        log.warning("driver JVM exited at start from class-data archive %s (removed); "
+        log.warning("driver JVM exited at start from class-data archive %s; "
                     "starting it without the archive", launch.archive)
-        return builder.config(JAVA_OPTIONS, caller_options or "").getOrCreate()
+        # a plain start that fails as well was not stopped by the archive
+        # (an unrelated launcher option, say): the archive stays
+        spark = builder.config(JAVA_OPTIONS, caller_options or "").getOrCreate()
+        # the archive alone aborted the JVM, so it is damaged: remove it,
+        # so that the next session dumps a new one
+        _remove(launch.archive)
+        return spark
     _check_mapped(launch)
     return spark

@@ -62,8 +62,14 @@ MAX_TOUCHED_PARTITIONS = 10_000
 def _collect_touched(df: DataFrame, cols: Sequence[str]):
     """Distinct partition tuples of a microbatch, capped at
     MAX_TOUCHED_PARTITIONS with a loud failure naming the columns."""
+    # one partition under the limit, so the collect is one job instead of
+    # a limit's partition-by-partition scale-up
     rows = (
-        df.select(*cols).distinct().limit(MAX_TOUCHED_PARTITIONS + 1).collect()
+        df.select(*cols)
+        .distinct()
+        .coalesce(1)
+        .limit(MAX_TOUCHED_PARTITIONS + 1)
+        .collect()
     )
     if len(rows) > MAX_TOUCHED_PARTITIONS:
         raise ValueError(
@@ -89,6 +95,8 @@ FS_CHECKPOINT_MANAGER = (
 )
 # serializes the set/start/restore of the session conf across threads
 _CHECKPOINT_MANAGER_LOCK = threading.Lock()
+# bound on how long a start holds that conf for a query's sources to build
+_SOURCE_INIT_WAIT_MS = 60_000
 
 
 def checkpoint_manager_for(spark: SparkSession, checkpoint_dir: str) -> str | None:
@@ -115,19 +123,32 @@ def checkpoint_manager_for(spark: SparkSession, checkpoint_dir: str) -> str | No
 def _checkpoint_manager(spark: SparkSession, checkpoint_dir: str) -> Iterator[None]:
     """Set :func:`checkpoint_manager_for`'s choice around query starts and
     restore the session's setting afterwards.  A query clones the session
-    when it is constructed, inside ``start()``, so it keeps the setting.
+    when it is constructed, inside ``start()``, so its own logs keep the
+    setting; its file sources, though, are built later on the query's own
+    thread, from the session conf of that moment.  So the setting is held
+    until every query started in the block has initialized its sources
+    (or died, which its ``awaitTermination`` reports).
 
-    The SESSION conf holds the FileSystem-based manager for the length of
-    ``start()``: code starting queries on the same session from another
-    thread must not overlap that window, or its query inherits the local
-    manager whatever its checkpoint scheme.  Both branches hold
-    ``_CHECKPOINT_MANAGER_LOCK``, so the starts made here never overlap
-    it; other callers that start queries concurrently on this session
-    should take the same lock."""
+    The SESSION conf holds the FileSystem-based manager for that window:
+    code starting queries on the same session from another thread must not
+    overlap it, or its query inherits the local manager whatever its
+    checkpoint scheme.  Both branches hold ``_CHECKPOINT_MANAGER_LOCK``,
+    so the starts made here never overlap it; other callers that start
+    queries concurrently on this session should take the same lock."""
+    from py4j.protocol import Py4JJavaError
+
     cls = checkpoint_manager_for(spark, checkpoint_dir)
     conf = {} if cls is None else {CHECKPOINT_MANAGER_CONF: cls}
     with _CHECKPOINT_MANAGER_LOCK, scoped_conf(spark, conf):
+        before = {q.id for q in spark.streams.active}
         yield
+        for q in spark.streams.active:
+            if q.id in before:
+                continue
+            try:
+                q._jsq.streamingQuery().awaitInitialization(_SOURCE_INIT_WAIT_MS)
+            except Py4JJavaError:
+                pass  # the query died starting; awaitTermination raises it
 
 
 # --------------------------------------------------------------------------
@@ -259,6 +280,18 @@ def parsed_observations(lines: DataFrame) -> DataFrame:
     return parse_raw_lines(lines)
 
 
+def _write_partitions(
+    frame: DataFrame, path: str, partition_cols: Sequence[str]
+) -> None:
+    """Dynamic-overwrite the partitions ``frame`` holds rows for."""
+    (
+        frame.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
 def upsert_into_partitions(
     batch_df: DataFrame,
     path: str,
@@ -266,8 +299,8 @@ def upsert_into_partitions(
     key_cols: Sequence[str],
 ) -> None:
     """Keyed upsert of a changed-keys-only batch into a partitioned parquet
-    table: read ONLY the partitions the batch touches, keep their rows whose
-    key is NOT in the batch, union the batch, dynamic-overwrite those
+    table: read ONLY the partitions the batch touches, merge the batch over
+    their rows (the batch's row wins per key), dynamic-overwrite those
     partitions.
 
     This is the correct sink body for an update-mode stateful aggregate —
@@ -275,86 +308,95 @@ def upsert_into_partitions(
     batch alone with dynamic overwrite would DELETE every unchanged key
     that shares a partition (data loss the single-drain tests can't see).
     Idempotent on replay: a replayed batch carries the same totals, and the
-    anti-join + union converges to the same partition contents.  Cost is
-    O(touched partitions), never a full-table rewrite — the same pruned
-    read-modify-write shape as :func:`cdc_apply_pruned_batch`.
+    merge converges to the same partition contents.  Cost is O(touched
+    partitions), never a full-table rewrite — the same pruned
+    read-modify-write shape and the same merge kernel
+    (``operators/cdc.py:merge_changes``, deletes off) as
+    :func:`cdc_apply_pruned_batch`.  ``partition_cols`` must be a subset of
+    ``key_cols``.
 
     Per-batch fixed cost: the upstream stateful stage runs ONCE.  The first
     batch (no tier yet) is read only by the write; a merge batch is
-    persisted, so the touched-partition collect, the anti-join keys and the
-    union all read the cached rows (each read of an uncached batch re-runs
-    the aggregate and rewrites its state-store files); the
-    tier is read with the batch's schema, so no footer-inference job runs;
-    and the merged rows are hash-partitioned on ``partition_cols`` before
-    the write, so each touched partition gets ONE writer task and one file.
+    persisted, so the touched-partition collect and the merge both read
+    the cached rows (each read of an uncached batch re-runs the aggregate
+    and rewrites its state-store files); the tier is read with the batch's
+    schema, so no footer-inference job runs.  The merged rows cross ONE
+    exchange, a hash partitioning on ``partition_cols``: it clusters every
+    key for the merge's ranking window and gives each touched partition
+    ONE writer task and one file.  No join, so no broadcast: a broadcast's
+    hash relation pins a Tungsten page in the block manager until a full
+    GC lets Spark's ContextCleaner release it, and a steady stream of
+    microbatches rarely has one.  The touched partitions' old rows are
+    checkpointed, and their blocks are released as soon as the write has
+    committed.
     """
     from functools import reduce
     from operator import and_, or_
 
     from pyspark.errors import AnalysisException
 
+    from killrweather_spark.operators.cdc import merge_changes
+
     spark = batch_df.sparkSession
-
-    def write(frame: DataFrame) -> None:
-        (
-            frame.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-
     try:
         # the batch's schema is the tier's: skip footer inference.  A
         # missing path still raises, which is the first-batch signal.
         # Reading the schema does not execute the batch.
         existing = spark.read.schema(batch_df.schema).parquet(path)
     except AnalysisException:
-        write(batch_df)  # first batch: nothing to merge, one read
+        # first batch: nothing to merge, one read
+        _write_partitions(
+            batch_df.repartition(*partition_cols), path, partition_cols
+        )
         return
     batch_df = batch_df.persist()
+    old = None
     try:
         # touched-partition values are a small driver-side list by
         # construction (a microbatch spans few calendar partitions —
         # the cap makes that assumption loud instead of trusted);
         # equality literals on partition columns prune directories
         touched = _collect_touched(batch_df, partition_cols)
-        merged = batch_df
-        if touched:
-            pred = reduce(
-                or_,
-                [
-                    reduce(and_, [F.col(c) == r[c] for c in partition_cols])
-                    for r in touched
-                ],
-            )
-            keep = (
-                existing.filter(pred)
-                .select(*batch_df.columns)
-                .join(batch_df.select(*key_cols), list(key_cols), "left_anti")
-            )
-            # Detach the merge input from the sink path BEFORE the
-            # overwrite action: the lazy self-read is safe under the
-            # local-FS committer (staged files commit after the read
-            # completes) but fragile on object-store committers with
-            # different staging order — the eager checkpoint
-            # materializes the kept rows first, bounded by the touched
-            # partitions' size (round-4 advice).  Cluster caveat
-            # (round-5 advice): localCheckpoint blocks live UNREPLICATED
-            # on executors — losing one between the checkpoint and the
-            # commit fails that microbatch ATTEMPT (lineage is
-            # truncated, not recomputable) and the stream retries from
-            # its offset checkpoint; blocks are freed by ContextCleaner
-            # GC.  The stronger form for object stores is staging the
-            # merged output to a temp path and renaming — at the cost
-            # of a second full write; the idempotent-retry property
-            # holds either way.  Only the kept rows are checkpointed so
-            # the write's plan references the batch ONCE: the analyzer
-            # re-aliases a second reference, which then misses the
-            # cache and re-runs the stateful stage.
-            merged = keep.localCheckpoint(eager=True).unionByName(batch_df)
-        write(merged)
+        if not touched:
+            return  # an empty batch changes no partition
+        pred = reduce(
+            or_,
+            [
+                reduce(and_, [F.col(c) == r[c] for c in partition_cols])
+                for r in touched
+            ],
+        )
+        # Detach the merge input from the sink path BEFORE the overwrite
+        # action: the lazy self-read is safe under the local-FS committer
+        # (staged files commit after the read completes) but fragile on
+        # object-store committers with different staging order — the
+        # eager checkpoint materializes the touched partitions' old rows
+        # first, bounded by their size.  Cluster caveat: localCheckpoint
+        # blocks live UNREPLICATED on executors — losing one between the
+        # checkpoint and the commit fails that microbatch ATTEMPT (lineage
+        # is truncated, not recomputable) and the stream retries from its
+        # offset checkpoint.  The stronger form for object stores is
+        # staging the merged output to a temp path and renaming — at the
+        # cost of a second full write; the idempotent-retry property holds
+        # either way.  Only the old rows are checkpointed, so the write's
+        # plan references the batch ONCE: the analyzer re-aliases a second
+        # reference, which then misses the cache and re-runs the stateful
+        # stage.
+        old = (
+            existing.filter(pred)
+            .select(*batch_df.columns)
+            .localCheckpoint(eager=True)
+        )
+        merged = merge_changes(
+            old, batch_df, keys=key_cols, order_by=(), delete_col=None,
+            cluster_by=partition_cols,
+        )
+        _write_partitions(merged, path, partition_cols)
     finally:
+        if old is not None:
+            # the checkpoint's blocks would otherwise wait for a full GC
+            # (ContextCleaner) to go, one set per microbatch
+            old._jdf.queryExecution().logical().rdd().unpersist(True)
         batch_df.unpersist()
 
 
@@ -387,12 +429,16 @@ def start_ingest(
 
     Per-microbatch cost of the precip sink (see
     :func:`upsert_into_partitions`): one pass of the stateful aggregate,
-    one writer task per touched (year, month) partition, no schema
-    inference job.  When ``checkpoint_dir`` resolves to the local file
-    system both queries checkpoint through Spark's FileSystem-based
-    checkpoint manager (no ``readlink``/``chmod`` process per rename or
-    create); any other scheme keeps Spark's default manager
-    (:func:`checkpoint_manager_for`).  Checkpoint checksums stay on.
+    one collect of the touched partitions, one checkpoint of their old
+    rows, and one write whose single exchange both clusters the merge and
+    gives each touched (year, month) partition one writer task; no join,
+    no broadcast, no schema inference job, and nothing left cached or
+    checkpointed after the batch.  When ``checkpoint_dir`` resolves to the
+    local file system both queries checkpoint, and log their file source,
+    through Spark's FileSystem-based checkpoint manager (no
+    ``readlink``/``chmod`` process per rename or create); any other scheme
+    keeps Spark's default manager (:func:`checkpoint_manager_for`).
+    Checkpoint checksums stay on.
     """
     trig = trigger or {"processingTime": "1 second"}  # T1: 1000 ms microbatch
 

@@ -24,6 +24,7 @@ from types import SimpleNamespace
 
 import pytest
 from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
 
 from killrweather_spark import jvm_archive, session
 
@@ -226,6 +227,51 @@ def test_only_a_finished_dump_of_a_clean_exit_is_published(cds, caplog, returnco
     else:
         (line,) = _records(caplog)
         assert failed in line
+
+
+class _Builder:
+    """A session builder whose JVM exits at start while its options hold one
+    of ``failing``; ``getOrCreate`` returns the options it started with."""
+
+    def __init__(self, *failing: str):
+        self.failing = failing
+        self.options = ""
+
+    def config(self, key: str, value: str) -> _Builder:
+        assert key == jvm_archive.JAVA_OPTIONS
+        self.options = value
+        return self
+
+    def getOrCreate(self) -> str:
+        if any(f in self.options for f in self.failing):
+            raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED",
+                                      messageParameters={})
+        return self.options
+
+
+@pytest.fixture
+def mapped_launch(cds, monkeypatch) -> jvm_archive.Launch:
+    """A hit: ``plan`` offers an existing archive."""
+    cds.mkdir(parents=True)
+    archive = cds / "0123456789abcdef0123.jsa"
+    archive.write_bytes(b"")
+    launch = jvm_archive.Launch(str(archive), f"-XX:SharedArchiveFile={archive} {CALLER}")
+    monkeypatch.setattr(jvm_archive, "plan", lambda caller: launch)
+    return launch
+
+
+def test_an_archive_that_stops_the_jvm_is_removed(mapped_launch, caplog):
+    got = jvm_archive.get_or_create(_Builder("SharedArchiveFile"), CALLER)
+    assert got == CALLER  # started plain, with the caller's options
+    assert not os.path.exists(mapped_launch.archive)
+    (line,) = _records(caplog)
+    assert "exited at start from class-data archive" in line
+
+
+def test_an_archive_is_kept_when_the_plain_start_fails_too(mapped_launch):
+    with pytest.raises(PySparkRuntimeError):
+        jvm_archive.get_or_create(_Builder("-Xms1g"), CALLER)
+    assert os.path.exists(mapped_launch.archive)
 
 
 _CHILD = r"""

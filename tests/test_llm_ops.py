@@ -1447,6 +1447,30 @@ def test_wav_codec_roundtrips_and_rejects_corruption():
         decode_wav(b"\x89PNG\r\n\x1a\n" + bytes(16))
 
 
+def test_ivf_index_of_another_layout_is_rebuilt(tmp_path, monkeypatch):
+    """An index directory outlives the checkout that wrote it: one whose
+    ``_meta.json`` records another on-disk layout version is rebuilt, one
+    with the current version is read as it is."""
+    import json
+    import os
+
+    from killrweather_spark.functions import ann_index
+
+    idx = tmp_path / "idx"
+    for t in ("inverted", "norms", "centroids", "vectors",
+              "pqcents", "pqcodes", "pqrcents", "pqrcodes"):
+        (idx / t).mkdir(parents=True)
+    (idx / "_meta.json").write_text(json.dumps(ann_index._index_params(8, 2)))
+    builds = []
+    monkeypatch.setattr(ann_index, "build_ivf_index",
+                        lambda df, out, *a: builds.append(out) or os.makedirs(out))
+    ann_index.ensure_ivf_index(None, str(idx), n_centroids=8, iters=2)
+    assert builds == []
+    monkeypatch.setattr(ann_index, "INDEX_LAYOUT", ann_index.INDEX_LAYOUT + 1)
+    ann_index.ensure_ivf_index(None, str(idx), n_centroids=8, iters=2)
+    assert builds == [str(idx)]
+
+
 def test_trained_ivf_recall_beats_placeholder_centroids(spark):
     """The point of training: on queries DISJOINT from the placeholder's
     smallest-id centroid set (ids < 8 flatter it — a query there IS its

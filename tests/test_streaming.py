@@ -1234,6 +1234,117 @@ def test_upsert_runs_the_stateful_stage_once_per_batch(spark, tmp_path):
     assert all(len(f) == 1 for f in files.values()), files
 
 
+_TIER = "wsid string, year int, month int, day int, precipitation double"
+
+
+def test_upsert_merges_in_one_exchange_without_a_join(spark, tmp_path, monkeypatch):
+    """A merge batch over an existing tier reaches the writer as ONE hash
+    exchange and no join (a broadcast's hash relation pins a Tungsten page
+    until a full GC): the batch's rows win per key, each key appears once,
+    and the touched partitions' unchanged keys and the untouched partition
+    survive."""
+    from killrweather_spark.plans import checks
+    from killrweather_spark.streaming import pipeline
+
+    tbl = str(tmp_path / "tier")
+    spark.createDataFrame(
+        [("a", 2008, 1, 1, 1.0), ("b", 2008, 1, 2, 2.0), ("c", 2008, 2, 1, 3.0),
+         ("e", 2008, 3, 1, 5.0)], _TIER,
+    ).write.partitionBy("year", "month").parquet(tbl)
+    seen = []
+    write = pipeline._write_partitions
+
+    def capture(frame, path, cols):
+        seen.append((frame, checks.formatted_plan(frame), frame.collect()))
+        write(frame, path, cols)
+
+    monkeypatch.setattr(pipeline, "_write_partitions", capture)
+    batch = spark.createDataFrame(
+        [("a", 2008, 1, 1, 10.0), ("d", 2008, 1, 3, 4.0), ("c", 2008, 2, 1, 30.0)],
+        _TIER,
+    )
+    pipeline.upsert_into_partitions(
+        batch, tbl, ("year", "month"), ("wsid", "year", "month", "day"))
+    ((frame, plan, rows),) = seen
+    assert not checks.uses_broadcast_join(frame)
+    assert "Join" not in plan
+    assert checks.shuffle_count(frame) == 1
+    assert "hashpartitioning(year" in plan
+    keys = [(r.wsid, r.year, r.month, r.day) for r in rows]
+    assert len(keys) == len(set(keys)) == 4
+    got = {(r.wsid, r.month, r.day): r.precipitation
+           for r in spark.read.parquet(tbl).collect()}
+    assert got == {("a", 1, 1): 10.0, ("b", 1, 2): 2.0, ("d", 1, 3): 4.0,
+                   ("c", 2, 1): 30.0, ("e", 3, 1): 5.0}
+
+
+def test_upsert_releases_its_blocks_after_each_batch(spark, tmp_path):
+    """Each merge batch unpersists the cached batch and the checkpoint of
+    the touched partitions' old rows once its write has committed, instead
+    of leaving them to a full GC: the driver's persistent-RDD count is back
+    where it started after every batch (at most there: a GC may release an
+    earlier test's blocks meanwhile)."""
+    from killrweather_spark.streaming import pipeline
+
+    tbl = str(tmp_path / "tier")
+    keys = ("wsid", "year", "month", "day")
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    for i in range(4):
+        batch = spark.createDataFrame(
+            [("a", 2008, 1, 1, float(i)), (f"s{i}", 2008, 1 + i % 2, 2, 1.0)], _TIER)
+        pipeline.upsert_into_partitions(batch, tbl, ("year", "month"), keys)
+        assert jsc.getPersistentRDDs().size() <= start, i
+    got = {(r.wsid, r.month): r.precipitation for r in spark.read.parquet(tbl).collect()}
+    assert got == {("a", 1): 3.0, ("s0", 1): 1.0, ("s1", 2): 1.0, ("s2", 1): 1.0,
+                   ("s3", 2): 1.0}
+
+
+def _jvm_field(obj, name: str):
+    """A JVM object's field, private or inherited, read through reflection."""
+    cls = obj.getClass()
+    while cls is not None:
+        for f in cls.getDeclaredFields():
+            if f.getName() == name:
+                f.setAccessible(True)
+                return f.get(obj)
+        cls = cls.getSuperclass()
+    raise AttributeError(name)
+
+
+def test_every_ingest_query_logs_its_source_through_the_local_manager(spark, tmp_path):
+    """A query builds its file source lazily on its own thread, after
+    ``start()`` returned: every query of ``start_ingest`` and
+    ``start_daily_temp_rollup`` must still log that source through the
+    FileSystem-based checkpoint manager (no ``readlink`` fork per rename),
+    not only the query whose thread won the race against the conf
+    restore."""
+    from killrweather_spark.streaming.pipeline import (
+        FS_CHECKPOINT_MANAGER,
+        start_daily_temp_rollup,
+    )
+
+    src = tmp_path / "lines"
+    src.mkdir()
+    (src / "b1.csv").write_text(_synthetic_lines([("711110:11111", 1, 1, 0, 10.0, 1.5)]))
+    obs = parsed_observations(spark.readStream.text(str(src)))
+    ckpt = str(tmp_path / "ckpt")
+    trig = {"availableNow": True}
+    queries = [
+        *start_ingest(obs, str(tmp_path / "raw"), str(tmp_path / "precip"), ckpt,
+                      trigger=trig),
+        start_daily_temp_rollup(obs, str(tmp_path / "temp"), ckpt, trigger=trig),
+    ]
+    managers = []
+    for q in queries:
+        assert q.awaitTermination(120)
+        sources = _jvm_field(q._jsq.streamingQuery(), "sources")
+        assert sources.size() == 1
+        log = _jvm_field(sources.head(), "metadataLog")
+        managers.append(_jvm_field(log, "fileManager").getClass().getName())
+    assert managers == [FS_CHECKPOINT_MANAGER] * 3
+
+
 def test_checkpoint_manager_choice(spark, tmp_path):
     """Local checkpoint directories get Spark's FileSystem-based manager;
     a remote scheme, or a bare path on a non-local default file system,
